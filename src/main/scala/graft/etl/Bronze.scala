@@ -21,7 +21,9 @@ import org.apache.spark.sql.functions._
   * Scale: each output is scan → Generate(explode) → Project, whole-stage
   * codegen, no shuffle. At 100 TB of playlist JSON this parallelizes per
   * input split; the only cross-row operation in the whole bronze stage is
-  * the file write.
+  * the file write. The four tables are four plans over the same raw scan:
+  * written one by one, they parse the JSON four times unless the caller
+  * caches the raw frame, as [[Pipeline.run]] does.
   */
 object Bronze {
 
@@ -61,9 +63,10 @@ object Bronze {
         col("public")),
       Schemas.bronzePlaylistCols)
 
-  /** The exploded (playlist, track item) spine shared by tracks/albums/
-    * artists — Catalyst CSE handles the re-use; each caller re-derives it
-    * so the three outputs stay independent plans. */
+  /** The exploded (playlist, track item) spine of tracks/albums/artists.
+    * Each caller re-derives it so the three outputs stay independent
+    * plans. Nothing shares that work: each table written from an uncached
+    * raw frame parses the JSON again. */
   private def items(raw: DataFrame): DataFrame =
     raw.select(col("id").as("playlist_id"),
       explode(col("tracks.items")).as("item"))

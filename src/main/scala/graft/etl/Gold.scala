@@ -93,19 +93,27 @@ object Gold {
         col("track_explicit"), col("album_release_date"),
         col("album_name"), col("album_id"), col("artist_name"), col("artist_id"))
 
-  /** The full gold graph from silver tables. */
-  def build(silver: Map[String, DataFrame]): Map[String, DataFrame] = {
-    val sp = stgPlaylists(silver("playlists"))
-    val st = stgTracks(silver("tracks"))
-    val sal = stgAlbums(silver("albums"))
-    val sar = stgArtists(silver("artists"))
-    val da = dimAlbums(sal)
-    val dar = dimArtists(sar)
+  /** The full gold graph from silver tables.
+    *
+    * `handOff(name, df)` is applied to every node before its consumers use
+    * it, in dependency order (staging, then dims, then the fact), and its
+    * result is what the map returns. The identity keeps the graph one lazy
+    * plan; [[Pipeline.run]] passes a zone write + read-back, so the dims
+    * are built from the written staging tables and the fact from the
+    * written `stg_tracks` and dims. */
+  def build(silver: Map[String, DataFrame],
+      handOff: (String, DataFrame) => DataFrame = (_, df) => df): Map[String, DataFrame] = {
+    val sp = handOff("stg_playlists", stgPlaylists(silver("playlists")))
+    val st = handOff("stg_tracks", stgTracks(silver("tracks")))
+    val sal = handOff("stg_albums", stgAlbums(silver("albums")))
+    val sar = handOff("stg_artists", stgArtists(silver("artists")))
+    val dp = handOff("dim_playlists", dimPlaylists(sp))
+    val da = handOff("dim_albums", dimAlbums(sal))
+    val dar = handOff("dim_artists", dimArtists(sar))
     Map(
       "stg_playlists" -> sp, "stg_tracks" -> st,
       "stg_albums" -> sal, "stg_artists" -> sar,
-      "dim_playlists" -> dimPlaylists(sp),
-      "dim_albums" -> da, "dim_artists" -> dar,
-      "fact_playlist_tracks" -> factPlaylistTracks(st, da, dar))
+      "dim_playlists" -> dp, "dim_albums" -> da, "dim_artists" -> dar,
+      "fact_playlist_tracks" -> handOff("fact_playlist_tracks", factPlaylistTracks(st, da, dar)))
   }
 }

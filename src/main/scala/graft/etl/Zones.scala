@@ -9,6 +9,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * is played by `saveAsTable` against the session catalog. Single-file
   * parity (`COPY ... TO` one parquet) is opt-in via `singleFile` — never
   * used on the hot path at scale (coalesce(1) serializes the write).
+  *
+  * Zone hand-offs go through [[materialize]]: the next zone reads the
+  * written copy with the schema the writer already had, so a hand-off
+  * costs the write and nothing else.
   */
 object Zones {
 
@@ -47,9 +51,19 @@ object Zones {
     df.write.mode(SaveMode.Overwrite).saveAsTable(table)
   }
 
-  /** S4/S5: parquet zone scan. */
+  /** S4/S5: parquet zone scan. The schema comes from the files' footers:
+    * Spark starts a schema-inference job per call. */
   def readParquet(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
+
+  /** Zone hand-off: write `df` to `path` ([[writeParquet]]) and return the
+    * written copy, read back with the writer's schema. The read-back starts
+    * no Spark job (no footer inference), and the next zone's plans scan the
+    * written parquet instead of recomputing `df`. */
+  def materialize(df: DataFrame, path: String, singleFile: Boolean = false): DataFrame = {
+    writeParquet(df, path, singleFile = singleFile)
+    df.sparkSession.read.schema(df.schema).parquet(path)
+  }
 
   /** Generic format surface (csv/orc/json/parquet interchange). CSV gets
     * headers; reads take an explicit schema — inference is never used on

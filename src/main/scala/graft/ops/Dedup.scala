@@ -671,7 +671,11 @@ object Dedup {
     * edge per non-root node, nothing for roots (each root still appears
     * as the `v` of its children — every local component has ≥ 2 nodes,
     * so no node is lost). Output keeps the u > v orientation (roots are
-    * local minima) and is distinct by construction (one row per node).
+    * local minima) and is distinct within each partition (one row per
+    * node); cross-partition duplicates are possible and harmless: a node
+    * seen in several partitions emits a row in each, the star steps end
+    * in `distinct()`, and only the first checkpoint's count and hash sum
+    * measure the multiset.
     * Same union-by-min + path-compression core as
     * [[connectedComponentsWithinGroups]], applied per PARTITION instead
     * of per group key — it needs no grouping shuffle because it only

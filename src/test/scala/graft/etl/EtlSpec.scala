@@ -1,8 +1,26 @@
 package graft.etl
 
 import graft.GraftSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
+
+/** The local filesystem under the `failzone` scheme, except that it
+  * refuses to create any directory under a `bronze/tracks` zone path: a
+  * zone write that fails midway through the bronze zone. */
+class FailingZoneFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "failzone"
+  override def getUri: java.net.URI = java.net.URI.create("failzone:///")
+  override def mkdirs(f: org.apache.hadoop.fs.Path,
+      permission: org.apache.hadoop.fs.permission.FsPermission): Boolean =
+    if (f.toUri.getPath.contains("/bronze/tracks")) throw new java.io.IOException(s"refused: $f")
+    else super.mkdirs(f, permission)
+  override def mkdirs(f: org.apache.hadoop.fs.Path): Boolean =
+    mkdirs(f, org.apache.hadoop.fs.permission.FsPermission.getDirDefault)
+}
 
 /** Golden-path + edge-case tests for the playlist ETL (SURVEY.md §5.2).
   *
@@ -169,11 +187,111 @@ class EtlSpec extends AnyFunSuite {
     assert(Bronze.tracks(good.drop("_corrupt_record")).count() == 5)
   }
 
+  // ------------------------------------------------- run's zone hand-offs
+
+  /** Order-independent (rows, xxhash64 sum) of a frame. */
+  def digest(df: DataFrame): (Long, BigDecimal) = {
+    val r = df.select(count(lit(1)),
+      sum(xxhash64(df.columns.toSeq.map(c => col(s"`$c`")): _*).cast("decimal(38,0)")))
+      .head()
+    (r.getLong(0), Option(r.getDecimal(1)).map(BigDecimal(_)).getOrElse(BigDecimal(0)))
+  }
+
+  /** Jobs started under a job group of its own while `body` runs. */
+  def jobsOf[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"etlspec-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null &&
+            j.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
+    }
+    // listenerBus/waitUntilEmpty are private[spark] = JVM-public
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    val drain = bus.getClass.getMethod("waitUntilEmpty")
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "EtlSpec", interruptOnCancel = false)
+      val a = try body finally sc.clearJobGroup()
+      drain.invoke(bus)
+      (a, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  def persistedRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
   test("materializing pipeline writes all three zones") {
     val out = java.nio.file.Files.createTempDirectory("graft_wh").toString
-    val g = Pipeline.run(spark, rawPath, out, singleFile = true)
-    assert(g("fact_playlist_tracks").count() == 3)
-    assert(new java.io.File(s"$out/silver/tracks").exists())
+    val viaRun = Pipeline.run(spark, rawPath, out, singleFile = true)
+    assert(viaRun("fact_playlist_tracks").count() == 3)
+    // gold equals compose's: rows, order-independent hash and schema
+    val viaCompose = Pipeline.compose(spark, rawPath)
+    assert(viaRun.keySet == viaCompose.keySet)
+    assert(viaRun.size == 8)
+    // parquet makes every column nullable on write; compose keeps e.g. the
+    // coalesced playlist_description non-nullable
+    def nullable(s: StructType) = StructType(s.fields.map(_.copy(nullable = true)))
+    viaCompose.foreach { case (t, c) =>
+      assert(viaRun(t).schema == nullable(c.schema), s"$t schema")
+      assert(viaRun(t).schema == Zones.readParquet(spark, s"$out/gold/$t").schema,
+        s"$t schema, nullability included, equals the written file's")
+      assert(digest(viaRun(t)) == digest(c), s"$t rows")
+    }
+    val tables = Silver.columns.keys.toSeq.flatMap(t => Seq(s"bronze/$t", s"silver/$t")) ++
+      viaCompose.keys.map(t => s"gold/$t")
+    assert(tables.size == 16)
+    tables.foreach(t => assert(new java.io.File(s"$out/$t/_SUCCESS").isFile, t))
+  }
+
+  test("run starts one job per zone write plus the dim shuffles and fact broadcasts; " +
+      "hand-off reads start none") {
+    val out = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val (_, jobs) = jobsOf(Pipeline.run(spark, rawPath, s"$out/wh"))
+    // 16 zone writes + 2 shuffle map stages (the dims' distinct) + 2
+    // broadcasts (the written dims, into the fact join) = 20. Inferring
+    // each read-back's schema from its footer and recomputing both dims
+    // for the fact made it 38.
+    assert(jobs <= 20, s"Pipeline.run started $jobs jobs")
+    val df = spark.range(10).toDF("id")
+    val (_, writeJobs) = jobsOf(Zones.writeParquet(df, s"$out/w"))
+    val (back, materializeJobs) = jobsOf(Zones.materialize(df, s"$out/m"))
+    assert(materializeJobs == writeJobs, "the read-back must not start a job")
+    assert(back.schema == Zones.readParquet(spark, s"$out/m").schema)
+    assert(back.count() == 10)
+  }
+
+  test("run releases its raw cache and leaves a caller's cache in place") {
+    val before = persistedRdds
+    Pipeline.run(spark, rawPath, java.nio.file.Files.createTempDirectory("graft_wh").toString)
+    assert(persistedRdds == before)
+    assert(Bronze.readRaw(spark, rawPath).storageLevel == StorageLevel.NONE)
+
+    val cached = Bronze.readRaw(spark, rawPath).persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      cached.count()
+      val withCaller = persistedRdds
+      Pipeline.run(spark, rawPath, java.nio.file.Files.createTempDirectory("graft_wh").toString)
+      assert(persistedRdds == withCaller)
+      assert(cached.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    } finally cached.unpersist(blocking = true)
+  }
+
+  test("run releases its raw cache when a zone write throws") {
+    spark.sparkContext.hadoopConfiguration.set("fs.failzone.impl",
+      classOf[FailingZoneFileSystem].getName)
+    val file = java.nio.file.Files.createTempFile("graft_wh", ".txt").toString
+    val dir = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    // the first bronze write fails before any task runs; bronze/tracks
+    // fails after the playlists write has filled the raw cache
+    for (wh <- Seq(s"$file/wh", s"failzone://$dir")) {
+      val before = persistedRdds
+      intercept[Exception](Pipeline.run(spark, rawPath, wh))
+      assert(persistedRdds == before, wh)
+      assert(Bronze.readRaw(spark, rawPath).storageLevel == StorageLevel.NONE, wh)
+    }
+    assert(new java.io.File(s"$dir/bronze/playlists/_SUCCESS").isFile)
+    assert(!new java.io.File(s"$dir/bronze/tracks").exists())
   }
 
   // ------------------------------------------------------- golden-file E2E
