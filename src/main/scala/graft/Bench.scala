@@ -76,11 +76,14 @@ object Bench {
     val pm = obj(_._3.toString)
     val sp = obj(_._4.toString)
     val total = results.map(_._2).filter(_ >= 0).sum
+    // a failed query reads -1 in "queries" and is left out of the total:
+    // name it, so a crash never reads as a speed-up
+    val failed = results.filter(_._2 < 0).map("\"" + _._1 + "\"").mkString("[", ",", "]")
     // "queries" stays LAST: the driver keeps the TAIL of long stdout
     // lines, and bench_gate's regex salvage takes the last value per
     // query name — both favor the seconds map over the memory maps
     val line = s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""peakMem":$pm,"spill":$sp,"sf":"$sfDir","queries":$qs}"""
+      s""""peakMem":$pm,"spill":$sp,"sf":"$sfDir","failed":$failed,"queries":$qs}"""
     println(line)
     // Also land the JSON in a file: stdout goes through sbt's log framing,
     // which can wrap/prefix the line and break a machine parse.

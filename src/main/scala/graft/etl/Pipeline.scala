@@ -11,12 +11,22 @@ import org.apache.spark.storage.StorageLevel
   * is a [[Zones.materialize]] (write, then read the written copy with the
   * writer's schema — no schema-inference job), the raw JSON is parsed once
   * for all four bronze tables, and each gold consumer (dims, fact) reads
-  * the written copies of its inputs instead of recomputing them.
+  * the written copies of its inputs instead of recomputing them. A
+  * hand-off whose plan scans an earlier hand-off unchanged copies its
+  * files instead of writing: the four silver tables (bronze's columns, in
+  * order) and `dim_playlists` (a passthrough of `stg_playlists`). A pass
+  * thus starts 15 jobs: 11 zone writes, the 2 dims' shuffles and the
+  * fact's 2 broadcasts.
   *
   * `compose` returns the gold frames as lazy plans over the raw input with
   * NO intermediate materialization — the whole raw→gold graph then
   * optimizes as a single Catalyst plan (a genuine improvement over the
   * reference's per-model walls, SURVEY §3.3).
+  *
+  * The gold frames of `run` and `compose` hold the same rows and differ in
+  * nullability only: `compose` keeps `playlist_description` non-nullable
+  * (bronze coalesces it to ""), while `run`'s parquet round-trip makes
+  * every column nullable.
   */
 object Pipeline {
 

@@ -1,6 +1,10 @@
 package graft.etl
 
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 
 /** Storage-zone IO (reference sinks K1–K7, SURVEY.md §2.2).
   *
@@ -12,7 +16,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *
   * Zone hand-offs go through [[materialize]]: the next zone reads the
   * written copy with the schema the writer already had, so a hand-off
-  * costs the write and nothing else.
+  * costs the write and nothing else — and a hand-off that changes nothing
+  * (an unchanged scan of an earlier hand-off) costs a file copy instead.
   */
 object Zones {
 
@@ -56,13 +61,66 @@ object Zones {
   def readParquet(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
-  /** Zone hand-off: write `df` to `path` ([[writeParquet]]) and return the
-    * written copy, read back with the writer's schema. The read-back starts
-    * no Spark job (no footer inference), and the next zone's plans scan the
-    * written parquet instead of recomputing `df`. */
+  /** Zone hand-off: write `df` to `path` and return the written copy, read
+    * back with the writer's schema. The read-back starts no Spark job (no
+    * footer inference), and the next zone's plans scan the written parquet
+    * instead of recomputing `df`.
+    *
+    * When `df`'s analyzed plan is an unchanged scan of an earlier
+    * read-back — the relation alone, or under a `Project` of exactly its
+    * output — its files already hold `df`'s rows and columns, so they are
+    * copied into `path` (file names kept, `_SUCCESS` last) through the
+    * Hadoop FileSystems of the two paths, on the calling thread and with
+    * no Spark job. That holds for silver (bronze's columns, in order) and
+    * for `dim_playlists` (a passthrough of `stg_playlists`). Every other
+    * frame is written by [[writeParquet]]: any other plan, a partitioned or
+    * bucketed relation, a scan this method did not return (a read with a
+    * narrowed schema may sit on wider files), or more than one file under
+    * `singleFile`.
+    *
+    * A hand-off into a path that `df` reads, or into a directory above one,
+    * is refused before anything is deleted: Spark's overwrite would delete
+    * the input first and then fail to read it. */
   def materialize(df: DataFrame, path: String, singleFile: Boolean = false): DataFrame = {
-    writeParquet(df, path, singleFile = singleFile)
-    df.sparkSession.read.schema(df.schema).parquet(path)
+    val spark = df.sparkSession
+    val plan = df.queryExecution.analyzed
+    val conf = spark.sessionState.newHadoopConf()
+    val dst = new Path(path)
+    val dstFs = dst.getFileSystem(conf)
+    val target = dstFs.makeQualified(dst)
+    def within(p: Path, dir: Path): Boolean = p != null && (p == dir || within(p.getParent, dir))
+    val read = plan.collectWithSubqueries { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.location.rootPaths }.flatten
+    require(!read.exists(within(_, target)),
+      s"cannot hand off into $path: the frame reads from it")
+    unchangedHandOff(plan).map(_.inputFiles).filter(!singleFile || _.length <= 1) match {
+      case Some(files) =>
+        dstFs.delete(dst, true)
+        files.map(f => new Path(new java.net.URI(f))).foreach(f =>
+          FileUtil.copy(f.getFileSystem(conf), f, dstFs, new Path(dst, f.getName), false, conf))
+        dstFs.create(new Path(dst, "_SUCCESS"), true).close()
+      case None => writeParquet(df, path, singleFile = singleFile)
+    }
+    spark.read.option(HandOffOption, "true").schema(df.schema).parquet(path)
+  }
+
+  /** Reader option of a [[materialize]] read-back. It stays in the scan's
+    * `HadoopFsRelation.options`, and says that the files hold exactly the
+    * columns the scan was read with. */
+  private val HandOffOption = "graft.zone.handoff"
+
+  /** The relation of a read-back that `plan` scans unchanged. */
+  private def unchangedHandOff(plan: LogicalPlan): Option[HadoopFsRelation] = {
+    val scan = plan match {
+      case l: LogicalRelation => Some(l)
+      case Project(list, l: LogicalRelation) if list == l.output => Some(l)
+      case _ => None
+    }
+    scan.map(_.relation).collect {
+      case r: HadoopFsRelation if r.fileFormat.isInstanceOf[ParquetFileFormat] &&
+          r.partitionSchema.isEmpty && r.bucketSpec.isEmpty &&
+          r.options.get(HandOffOption).contains("true") => r
+    }
   }
 
   /** Generic format surface (csv/orc/json/parquet interchange). CSV gets

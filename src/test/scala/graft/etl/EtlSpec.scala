@@ -9,17 +9,25 @@ import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The local filesystem under the `failzone` scheme, except that it
-  * refuses to create any directory under a `bronze/tracks` zone path: a
-  * zone write that fails midway through the bronze zone. */
+  * refuses to create any directory whose path contains the fragment in
+  * the Hadoop conf key [[FailingZoneFileSystem.Refuse]] (e.g.
+  * `/bronze/tracks`): a zone hand-off that fails partway through a pass. */
 class FailingZoneFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "failzone"
   override def getUri: java.net.URI = java.net.URI.create("failzone:///")
   override def mkdirs(f: org.apache.hadoop.fs.Path,
-      permission: org.apache.hadoop.fs.permission.FsPermission): Boolean =
-    if (f.toUri.getPath.contains("/bronze/tracks")) throw new java.io.IOException(s"refused: $f")
+      permission: org.apache.hadoop.fs.permission.FsPermission): Boolean = {
+    val refused = getConf.get(FailingZoneFileSystem.Refuse, "")
+    if (refused.nonEmpty && f.toUri.getPath.contains(refused))
+      throw new java.io.IOException(s"refused: $f")
     else super.mkdirs(f, permission)
+  }
   override def mkdirs(f: org.apache.hadoop.fs.Path): Boolean =
     mkdirs(f, org.apache.hadoop.fs.permission.FsPermission.getDirDefault)
+}
+
+object FailingZoneFileSystem {
+  val Refuse = "graft.test.failzone.refuse"
 }
 
 /** Golden-path + edge-case tests for the playlist ETL (SURVEY.md §5.2).
@@ -242,23 +250,73 @@ class EtlSpec extends AnyFunSuite {
       viaCompose.keys.map(t => s"gold/$t")
     assert(tables.size == 16)
     tables.foreach(t => assert(new java.io.File(s"$out/$t/_SUCCESS").isFile, t))
+    // silver and dim_playlists scan their inputs unchanged: their files are
+    // copies, names included
+    Silver.columns.keys.foreach { t =>
+      assert(partFiles(s"$out/silver/$t") == partFiles(s"$out/bronze/$t"), s"silver/$t")
+    }
+    assert(partFiles(s"$out/gold/dim_playlists") == partFiles(s"$out/gold/stg_playlists"))
+  }
+
+  /** The part files of a zone directory: name -> bytes. */
+  def partFiles(dir: String): Map[String, Seq[Byte]] = {
+    val parts = new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+    assert(parts.nonEmpty, s"$dir has no part files")
+    parts.map(f => f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
+  }
+
+  test("materialize copies only an unchanged scan of a hand-off") {
+    val out = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val back = Zones.materialize(
+      spark.range(0, 40, 1, 4).select(col("id"), (col("id") * 2).as("v")), s"$out/back")
+    assert(partFiles(s"$out/back").size == 4)
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    // a reordered, subset or cast projection is a new table: it is written
+    for ((name, df) <- Seq("reordered" -> back.select("v", "id"), "subset" -> back.select("v"),
+        "cast" -> back.select(col("id"), col("v").cast("string").as("v")))) {
+      val (m, jobs) = jobsOf(Zones.materialize(df, s"$out/$name"))
+      assert(jobs > 0, s"$name must be written")
+      assert(m.schema == df.schema && rows(m) == rows(df), name)
+      assert(Zones.readParquet(spark, s"$out/$name").schema == df.schema, name)
+    }
+    // a read with a narrowed schema over wider files is written: a copy
+    // would carry the dropped column
+    val narrow = spark.read.schema("v long").parquet(s"$out/back")
+    val (_, narrowJobs) = jobsOf(Zones.materialize(narrow, s"$out/narrow"))
+    assert(narrowJobs > 0)
+    assert(Zones.readParquet(spark, s"$out/narrow").schema == narrow.schema)
+    // a single-file hand-off of a multi-file scan coalesces
+    val single = Zones.materialize(back, s"$out/single", singleFile = true)
+    assert(partFiles(s"$out/single").size == 1)
+    assert(rows(single) == rows(back))
+    // a hand-off into the path it reads is refused, copied or written;
+    // the files stay
+    val before = partFiles(s"$out/back")
+    for (df <- Seq(back, back.select("v")))
+      intercept[IllegalArgumentException](Zones.materialize(df, s"$out/back"))
+    assert(partFiles(s"$out/back") == before)
+    assert(new java.io.File(s"$out/back/_SUCCESS").isFile)
   }
 
   test("run starts one job per zone write plus the dim shuffles and fact broadcasts; " +
       "hand-off reads start none") {
     val out = java.nio.file.Files.createTempDirectory("graft_wh").toString
     val (_, jobs) = jobsOf(Pipeline.run(spark, rawPath, s"$out/wh"))
-    // 16 zone writes + 2 shuffle map stages (the dims' distinct) + 2
-    // broadcasts (the written dims, into the fact join) = 20. Inferring
-    // each read-back's schema from its footer and recomputing both dims
-    // for the fact made it 38.
-    assert(jobs <= 20, s"Pipeline.run started $jobs jobs")
+    // 11 zone writes + 2 shuffle map stages (the dims' distinct) + 2
+    // broadcasts (the written dims, into the fact join) = 15. The other 5
+    // hand-offs (the four silver tables, dim_playlists) scan an earlier
+    // hand-off unchanged and copy its files. Writing them made it 20;
+    // inferring each read-back's schema from its footer and recomputing
+    // both dims for the fact made it 38.
+    assert(jobs <= 15, s"Pipeline.run started $jobs jobs")
     val df = spark.range(10).toDF("id")
     val (_, writeJobs) = jobsOf(Zones.writeParquet(df, s"$out/w"))
     val (back, materializeJobs) = jobsOf(Zones.materialize(df, s"$out/m"))
     assert(materializeJobs == writeJobs, "the read-back must not start a job")
     assert(back.schema == Zones.readParquet(spark, s"$out/m").schema)
     assert(back.count() == 10)
+    val (_, copyJobs) = jobsOf(Zones.materialize(back, s"$out/c"))
+    assert(copyJobs == 0, "a copied hand-off must not start a job")
   }
 
   test("run releases its raw cache and leaves a caller's cache in place") {
@@ -278,20 +336,28 @@ class EtlSpec extends AnyFunSuite {
   }
 
   test("run releases its raw cache when a zone write throws") {
-    spark.sparkContext.hadoopConfiguration.set("fs.failzone.impl",
-      classOf[FailingZoneFileSystem].getName)
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.failzone.impl", classOf[FailingZoneFileSystem].getName)
+    // a fresh instance per lookup, so each case's refused fragment applies
+    conf.setBoolean("fs.failzone.impl.disable.cache", true)
     val file = java.nio.file.Files.createTempFile("graft_wh", ".txt").toString
-    val dir = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val bronzeDir = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val silverDir = java.nio.file.Files.createTempDirectory("graft_wh").toString
     // the first bronze write fails before any task runs; bronze/tracks
-    // fails after the playlists write has filled the raw cache
-    for (wh <- Seq(s"$file/wh", s"failzone://$dir")) {
+    // fails after the playlists write has filled the raw cache;
+    // silver/tracks fails in a copied hand-off, after the cache is released
+    try for ((wh, refused) <- Seq(s"$file/wh" -> "/bronze/tracks",
+        s"failzone://$bronzeDir" -> "/bronze/tracks", s"failzone://$silverDir" -> "/silver/tracks")) {
+      conf.set(FailingZoneFileSystem.Refuse, refused)
       val before = persistedRdds
       intercept[Exception](Pipeline.run(spark, rawPath, wh))
       assert(persistedRdds == before, wh)
       assert(Bronze.readRaw(spark, rawPath).storageLevel == StorageLevel.NONE, wh)
-    }
-    assert(new java.io.File(s"$dir/bronze/playlists/_SUCCESS").isFile)
-    assert(!new java.io.File(s"$dir/bronze/tracks").exists())
+    } finally conf.unset(FailingZoneFileSystem.Refuse)
+    assert(new java.io.File(s"$bronzeDir/bronze/playlists/_SUCCESS").isFile)
+    assert(!new java.io.File(s"$bronzeDir/bronze/tracks").exists())
+    assert(new java.io.File(s"$silverDir/bronze/tracks/_SUCCESS").isFile)
+    assert(!new java.io.File(s"$silverDir/silver/tracks/_SUCCESS").exists())
   }
 
   // ------------------------------------------------------- golden-file E2E

@@ -47,6 +47,17 @@ class SchemeTransparencySpec extends AnyFunSuite {
     Zones.writeRawJson(df, s"$base/raw")
     assert(spark.read.json(s"$base/raw").count() == 3)
 
+    // a hand-off of an unchanged read-back copies its files: both
+    // FileSystems are resolved from the paths
+    val handedOff = Zones.materialize(df, s"$base/bronze")
+    val copied = Zones.materialize(handedOff, s"$base/silver")
+    assert(copied.exceptAll(df).count() == 0 && copied.count() == 3)
+    def parts(zone: String) = new java.io.File(s"$tmp/$zone").listFiles()
+      .filter(_.getName.startsWith("part-"))
+      .map(f => f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
+    assert(parts("silver").nonEmpty && parts("silver") == parts("bronze"))
+    assert(new java.io.File(s"$tmp/silver/_SUCCESS").isFile)
+
     // the resolved FileSystem really is the custom one, not the default
     val p = new org.apache.hadoop.fs.Path(s"$base/gold")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())

@@ -9,8 +9,12 @@ Usage:
 With no file arguments, picks the two highest-numbered BENCH_r*.json in
 the repo root.
 
-Flagging rule (all conditions must hold — r9 gate redesign + r14 epoch
-normalization):
+A query that has a time in the previous file and -1 (failed) in the new
+one is flagged as a regression: Bench leaves a failed query out of its
+total, so dropping it here would let a crash read as a speed-up.
+
+Flagging rule for timed queries (all conditions must hold — r9 gate
+redesign + r14 epoch normalization):
   1. EPOCH-NORMALIZED ratio (new/prev divided by the median new/prev
      ratio across the shared set) > max(--threshold, measured
      same-build amplitude)
@@ -105,7 +109,7 @@ def load(path, prefer_close_runs=True):
             print(f"bench_gate: using committed close run for {m.group(1)} "
                   f"({os.path.relpath(close, ROOT)}; --no-close-runs to disable)")
             data = close_data
-    return {k: v for k, v in _queries_of(data, path).items() if v >= 0}
+    return _queries_of(data, path)
 
 
 def _queries_of(data, path):
@@ -130,16 +134,20 @@ def selftest():
     """Prove the epoch-normalization properties on synthetic data:
     a uniform 1.3x slowdown (pure machine epoch) must produce ZERO
     flags, while a single-query 2x regression on an otherwise-flat
-    build must still flag. Exit 0 iff both hold."""
+    build must still flag, and so must a query that newly fails (-1).
+    Exit 0 iff all hold."""
     import tempfile
     n = 60
     prev = {f"q{i:03d}_synth": 1.0 + (i % 7) * 0.5 for i in range(n)}
     uniform = {q: v * 1.3 for q, v in prev.items()}
     spike = dict(prev)
     spike["q007_synth"] = prev["q007_synth"] * 2.0
+    crash = dict(prev)
+    crash["q007_synth"] = -1.0
     results = []
     for name, new, expect_fail in [("uniform-1.3x", uniform, False),
-                                   ("single-2x", spike, True)]:
+                                   ("single-2x", spike, True),
+                                   ("newly-failed", crash, True)]:
         with tempfile.TemporaryDirectory() as d:
             pp, np_ = os.path.join(d, "prev.json"), os.path.join(d, "new.json")
             json.dump({"queries": prev}, open(pp, "w"))
@@ -235,7 +243,8 @@ def gate(prev_path, new_path, threshold=1.3, min_delta=0.5,
     print(f"bench_gate: {os.path.basename(prev_path)} -> {os.path.basename(new_path)} "
           f"(epoch-normalized ratio > max({threshold}x, measured amplitude) "
           f"AND normalized delta > {min_delta}s)")
-    shared = sorted(set(prev) & set(new))
+    failed = sorted(q for q in set(prev) & set(new) if prev[q] >= 0 > new[q])
+    shared = sorted(q for q in set(prev) & set(new) if prev[q] >= 0 and new[q] >= 0)
     tp = sum(prev[q] for q in shared)
     tn = sum(new[q] for q in shared)
     if tp > 0:
@@ -254,23 +263,29 @@ def gate(prev_path, new_path, threshold=1.3, min_delta=0.5,
         print(f"epoch ratio (median of {len(ratios)} shared): {epoch:.3f}x "
               f"— flags are normalized by it")
     silent = []
+
+    def flag(q, what):
+        narrated = q.split("_")[0] in notes
+        if narrated:
+            tag = "narrated"
+        elif q in adjudicated:
+            tag = f"adjudicated:{adjudicated[q]} ({pair})"
+        else:
+            tag = "SILENT"
+        print(f"  REGRESSION {q}: {what} [{tag}]")
+        if not narrated and q not in adjudicated:
+            silent.append(q)
+
+    for q in failed:
+        flag(q, f"{prev[q]:.2f}s -> FAILED")
     for q in shared:
         raw = new[q] / prev[q] if prev[q] > 0 else float("inf")
         ratio = raw / epoch
         eff = max(threshold, noise.get(q, 1.0))
         if ratio > eff and new[q] - prev[q] * epoch > min_delta:
-            narrated = q.split("_")[0] in notes
-            if narrated:
-                tag = "narrated"
-            elif q in adjudicated:
-                tag = f"adjudicated:{adjudicated[q]} ({pair})"
-            else:
-                tag = "SILENT"
             amp = f", amplitude {noise[q]:.2f}x" if q in noise else ""
-            print(f"  REGRESSION {q}: {prev[q]:.2f}s -> {new[q]:.2f}s "
-                  f"({raw:.2f}x raw, {ratio:.2f}x normalized{amp}) [{tag}]")
-            if not narrated and q not in adjudicated:
-                silent.append(q)
+            flag(q, f"{prev[q]:.2f}s -> {new[q]:.2f}s "
+                    f"({raw:.2f}x raw, {ratio:.2f}x normalized{amp})")
     added = sorted(set(new) - set(prev))
     removed = sorted(set(prev) - set(new))
     if added:
