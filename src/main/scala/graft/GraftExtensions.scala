@@ -4,15 +4,13 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** SparkSessionExtensions entry point: makes the engine's native
-  * expressions and optimizer rules available cluster-wide via
-  * `--conf spark.sql.extensions=graft.GraftExtensions` (no per-session
-  * register() call needed). The injected functions come from the SAME
-  * single registry (`NativeFunctions.builders`) the per-session
-  * register uses — the two surfaces cannot drift (FunctionsSpec pins
-  * the builder list against the Column wrapper surface). The injected
-  * [[graft.plans.RewriteDotProduct]] rule transparently accelerates
-  * user-written HOF dot products.
+/** SparkSessionExtensions entry point, the cluster-wide twin of
+  * `GraftSession.local`: `--conf spark.sql.extensions=graft.GraftExtensions`
+  * injects every `graft_*` native kernel from `NativeFunctions.builders`,
+  * the same list `NativeFunctions.register` uses, so the two cannot drift
+  * (FunctionsSpec pins the builder list against the Column API). It also
+  * injects [[graft.plans.RewriteDotProduct]], which turns user-written
+  * HOF dot products into the native loop.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -1,5 +1,6 @@
 package graft.etl
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
@@ -22,17 +23,40 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 object Zones {
 
   /** K1/K2: raw-zone JSON landing. */
-  def writeRawJson(df: DataFrame, path: String): Unit =
+  def writeRawJson(df: DataFrame, path: String): Unit = {
+    refuseOverwritingInput(df, path, df.sparkSession.sessionState.newHadoopConf())
     df.write.mode(SaveMode.Overwrite).json(path)
+  }
 
   /** K3/K4: parquet zone write. `partitionBy` is the scale path (e.g.
     * ingest_date); `singleFile` reproduces the reference's one-file-per-
     * table layout for small parity outputs. */
   def writeParquet(df: DataFrame, path: String,
       partitionBy: Seq[String] = Nil, singleFile: Boolean = false): Unit = {
+    refuseOverwritingInput(df, path, df.sparkSession.sessionState.newHadoopConf())
+    overwriteParquet(df, path, partitionBy, singleFile)
+  }
+
+  private def overwriteParquet(df: DataFrame, path: String,
+      partitionBy: Seq[String], singleFile: Boolean): Unit = {
     val d = if (singleFile) df.coalesce(1) else df
     val w = d.write.mode(SaveMode.Overwrite)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
+  }
+
+  /** Every zone writer refuses, before anything is deleted, to overwrite
+    * a path that `df` reads or a directory above one: Spark's overwrite
+    * deletes the input first and then fails to read it
+    * (FAILED_READ_FILE.FILE_NOT_EXIST), and the data is lost. */
+  private def refuseOverwritingInput(df: DataFrame, path: String,
+      conf: Configuration): Unit = {
+    val dst = new Path(path)
+    val target = dst.getFileSystem(conf).makeQualified(dst)
+    def within(p: Path): Boolean = p != null && (p == target || within(p.getParent))
+    val read = df.queryExecution.analyzed
+      .collectWithSubqueries { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.location.rootPaths }.flatten
+    require(!read.exists(within), s"cannot overwrite $path: the frame reads from it")
   }
 
   /** K5/K7: warehouse materialization (MotherDuck CTAS equivalent).
@@ -76,30 +100,22 @@ object Zones {
     * frame is written by [[writeParquet]]: any other plan, a partitioned or
     * bucketed relation, a scan this method did not return (a read with a
     * narrowed schema may sit on wider files), or more than one file under
-    * `singleFile`.
-    *
-    * A hand-off into a path that `df` reads, or into a directory above one,
-    * is refused before anything is deleted: Spark's overwrite would delete
-    * the input first and then fail to read it. */
+    * `singleFile`. Like every zone writer, it refuses a hand-off into a
+    * path that `df` reads. */
   def materialize(df: DataFrame, path: String, singleFile: Boolean = false): DataFrame = {
     val spark = df.sparkSession
-    val plan = df.queryExecution.analyzed
     val conf = spark.sessionState.newHadoopConf()
+    refuseOverwritingInput(df, path, conf)
     val dst = new Path(path)
     val dstFs = dst.getFileSystem(conf)
-    val target = dstFs.makeQualified(dst)
-    def within(p: Path, dir: Path): Boolean = p != null && (p == dir || within(p.getParent, dir))
-    val read = plan.collectWithSubqueries { case l: LogicalRelation => l.relation }
-      .collect { case r: HadoopFsRelation => r.location.rootPaths }.flatten
-    require(!read.exists(within(_, target)),
-      s"cannot hand off into $path: the frame reads from it")
-    unchangedHandOff(plan).map(_.inputFiles).filter(!singleFile || _.length <= 1) match {
+    unchangedHandOff(df.queryExecution.analyzed).map(_.inputFiles)
+        .filter(!singleFile || _.length <= 1) match {
       case Some(files) =>
         dstFs.delete(dst, true)
         files.map(f => new Path(new java.net.URI(f))).foreach(f =>
           FileUtil.copy(f.getFileSystem(conf), f, dstFs, new Path(dst, f.getName), false, conf))
         dstFs.create(new Path(dst, "_SUCCESS"), true).close()
-      case None => writeParquet(df, path, singleFile = singleFile)
+      case None => overwriteParquet(df, path, Nil, singleFile)
     }
     spark.read.option(HandOffOption, "true").schema(df.schema).parquet(path)
   }
@@ -127,6 +143,7 @@ object Zones {
     * headers; reads take an explicit schema — inference is never used on
     * production paths. */
   def write(df: DataFrame, path: String, format: String): Unit = {
+    refuseOverwritingInput(df, path, df.sparkSession.sessionState.newHadoopConf())
     val w = df.write.mode(SaveMode.Overwrite)
     (if (format == "csv") w.option("header", "true") else w).format(format).save(path)
   }

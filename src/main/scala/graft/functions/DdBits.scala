@@ -101,8 +101,8 @@ object DdBits {
     * order — negatives from most-negative (largest mirrored index) down,
     * the zero bucket, then positives ascending — to the bucket covering
     * rank q·(n−1) (the element-quantile convention `approx_percentile`
-    * uses). Returns NaN on an empty sketch (the expression surfaces that
-    * as SQL NULL, the `percentile`-on-no-rows contract). */
+    * uses). Returns NaN on an empty sketch ([[quantileOrNull]] surfaces
+    * that as SQL NULL, the `percentile`-on-no-rows contract). */
   def quantile(bytes: Array[Byte], q: Double): Double = {
     require(q >= 0.0 && q <= 1.0, s"quantile fraction out of [0,1]: $q")
     val p = parse(bytes)
@@ -134,4 +134,11 @@ object DdBits {
 
   /** Total value count of a serialized sketch. */
   def count(bytes: Array[Byte]): Long = parse(bytes).count
+
+  /** The `graft_dd_quantile` kernel: [[quantile]] with an empty
+    * sketch's NaN boxed as null, so the call returns SQL NULL. */
+  def quantileOrNull(bytes: Array[Byte], q: Double): java.lang.Double = {
+    val r = quantile(bytes, q)
+    if (java.lang.Double.isNaN(r)) null else r
+  }
 }

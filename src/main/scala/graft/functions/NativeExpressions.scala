@@ -1,10 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, Literal, RuntimeReplaceable}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.{call_function, lit, typedLit}
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the hot text-fingerprinting paths.
@@ -712,7 +715,7 @@ object Hashing {
     *
     * Why it exists (measured, round 12): java.util.regex on this
     * workload costs ~70 ns/char single-threaded AND its total
-    * throughput is HARD-CAPPED per JVM — the RegexThreads drill shows
+    * throughput is HARD-CAPPED per JVM — BENCH_NOTES.md Round 12 records
     * replaceAll flat at ~9k ops/s from 1 to 32 threads while a plain
     * byte loop scales linearly to 26× — so the regex form of the
     * engine's single most-executed normalization both starts 20×
@@ -919,8 +922,8 @@ object Hashing {
 
   /** DEFLATE compression ratio of the UTF-8 bytes, in integer permille
     * (`compressed_len * 1000 / raw_len`; 0 for empty — null never reaches
-    * here: [[DeflateRatioExpr]] is a null-intolerant `UnaryExpression`,
-    * so SQL null in → null out, as FunctionsSpec pins). The cheap
+    * here: [[DeflateRatioExpr]]'s call propagates null, so SQL null in →
+    * null out, as FunctionsSpec pins). The cheap
     * entropy proxy web-curation pipelines use to flag degenerate text:
     * boilerplate/template/repetitive spam compresses far below natural
     * prose, random-ish machine noise far above it (the one-pass
@@ -1090,39 +1093,56 @@ object HllBits {
   }
 }
 
+/** The one shape of a native kernel: a `RuntimeReplaceable` whose
+  * `replacement` is a single `StaticInvoke` into a static helper above
+  * (the shape of Spark's own `Luhncheck` / `UrlEncode`). Analysis checks
+  * the children against `inputTypes` without casting and names the SQL
+  * function (`prettyName`) in the error. The optimizer's
+  * `ReplaceExpressions` then swaps in the call, which constant-folds
+  * literal calls, returns NULL for a NULL argument (`propagateNull`) and
+  * compiles to one static method call inside whole-stage codegen. The
+  * case classes stay so that `DESCRIBE FUNCTION EXTENDED` names a real
+  * `Expression`. */
+trait NativeKernel extends RuntimeReplaceable with ExpectsInputTypes {
+
+  /** `helper.method(args)` for a Scala object `helper`: `StaticInvoke`
+    * drops the object class's trailing `$`, so the generated code calls
+    * the static forwarder. The result is non-null for non-null args. */
+  protected def invoke(helper: AnyRef, method: String, resultType: DataType,
+      args: Expression*): Expression =
+    StaticInvoke(helper.getClass, resultType, method, args, returnNullable = false)
+
+  /** A per-call table (centroids, bloom bits, CMS grid, hyperplanes) as
+    * ONE reference object riding the plan: no per-row copy, and no
+    * k × dim literal tree through the analyzer and codegen. */
+  protected def table(values: AnyRef): Expression =
+    Literal.create(values, ObjectType(values.getClass))
+}
+
 /** `graft_fingerprint(text)`: native rolling-hash fingerprint. */
-case class RollingHashExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def foldable: Boolean = child.foldable // enables ConstantFolding
-  override def nullSafeEval(v: Any): Any =
-    Hashing.rollingHash(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Hashing.rollingHash($c)")
+case class RollingHashExpr(child: Expression) extends NativeKernel with UnaryLike[Expression] {
+  override def prettyName: String = "graft_fingerprint"
+  override def inputTypes = Seq(StringType)
+  override lazy val replacement: Expression = invoke(Hashing, "rollingHash", LongType, child)
   override protected def withNewChildInternal(c: Expression): RollingHashExpr = copy(c)
 }
 
 /** `graft_simhash(text)`: native 60-bit SimHash. */
-case class SimHashExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def foldable: Boolean = child.foldable
-  override def nullSafeEval(v: Any): Any =
-    Hashing.simHash60(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Hashing.simHash60($c)")
+case class SimHashExpr(child: Expression) extends NativeKernel with UnaryLike[Expression] {
+  override def prettyName: String = "graft_simhash"
+  override def inputTypes = Seq(StringType)
+  override lazy val replacement: Expression = invoke(Hashing, "simHash60", LongType, child)
   override protected def withNewChildInternal(c: Expression): SimHashExpr = copy(c)
 }
 
 /** `graft_word_shingles(text, n)`: native word n-gram shingling. */
-case class WordShinglesExpr(child: Expression, n: Int) extends UnaryExpression {
+case class WordShinglesExpr(child: Expression, n: Int)
+    extends NativeKernel with UnaryLike[Expression] {
   require(n >= 1, "shingle length must be >= 1")
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.StringType, containsNull = false)
-  override def foldable: Boolean = child.foldable
-  override def nullSafeEval(v: Any): Any =
-    Hashing.wordShingles(v.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Hashing.wordShingles($c, $n)")
+  override def prettyName: String = "graft_word_shingles"
+  override def inputTypes = Seq(StringType)
+  override lazy val replacement: Expression = invoke(Hashing, "wordShingles",
+    ArrayType(StringType, containsNull = false), child, Literal(n))
   override protected def withNewChildInternal(c: Expression): WordShinglesExpr =
     copy(child = c)
 }
@@ -1134,22 +1154,12 @@ case class WordShinglesExpr(child: Expression, n: Int) extends UnaryExpression {
   * reference) pays an interpreted lambda and a slice allocation per
   * window. */
 case class WinnowExpr(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
+    extends NativeKernel with UnaryLike[Expression] {
   require(k >= 2 && w >= 2, "k and w must be >= 2")
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == org.apache.spark.sql.types.StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_winnow requires STRING input, got ${child.dataType.simpleString}")
-  override def foldable: Boolean = child.foldable
-  override def nullSafeEval(v: Any): Any =
-    Hashing.winnow(v.asInstanceOf[UTF8String], k, w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Hashing.winnow($c, $k, $w)")
+  override def prettyName: String = "graft_winnow"
+  override def inputTypes = Seq(StringType)
+  override lazy val replacement: Expression = invoke(Hashing, "winnow",
+    ArrayType(LongType, containsNull = false), child, Literal(k), Literal(w))
   override protected def withNewChildInternal(c: Expression): WinnowExpr =
     copy(child = c)
 }
@@ -1157,31 +1167,16 @@ case class WinnowExpr(child: Expression, k: Int, w: Int)
 /** `graft_l2sq(vec, centroid)`: native squared-L2 distance to a literal
   * centroid ([[Hashing.l2sq]]) — the assignment kernel of IVF indexing /
   * Lloyd refinement (q48/q78) and PQ encoding (q91/q92). The centroid
-  * rides the compiled plan as a codegen reference object; per-row cost is
+  * rides the compiled plan as a reference object; per-row cost is
   * one fused loop where the HOF twin paid an interpreted lambda per
   * dimension. Bit-identical to the HOF fold (same operation order). */
 case class L2SqExpr(child: Expression, centroid: Array[Double])
-    extends UnaryExpression {
+    extends NativeKernel with UnaryLike[Expression] {
   require(centroid.nonEmpty, "centroid must be non-empty")
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_l2sq requires ARRAY<DOUBLE> input, got ${other.simpleString}")
-    }
-  override def foldable: Boolean = child.foldable
-  override def nullSafeEval(v: Any): Any =
-    Hashing.l2sq(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      centroid)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("centroid", centroid, "double[]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.Hashing.l2sq($c, $ref)")
-  }
+  override def prettyName: String = "graft_l2sq"
+  override def inputTypes = Seq(ArrayType(DoubleType))
+  override lazy val replacement: Expression =
+    invoke(Hashing, "l2sq", DoubleType, child, table(centroid))
   override protected def withNewChildInternal(c: Expression): L2SqExpr =
     copy(child = c)
 }
@@ -1197,34 +1192,16 @@ case class L2SqExpr(child: Expression, centroid: Array[Double])
   * NaN-greatest/ties-to-first-index ordering); the composed twins survive
   * as private spec references in [[graft.ops.Ivf]]/[[graft.ops.Pq]]. */
 case class ArgminL2Expr(child: Expression, cents: Array[Double], dim: Int)
-    extends UnaryExpression {
+    extends NativeKernel with UnaryLike[Expression] {
   require(dim >= 1, "dim must be >= 1")
   require(cents.nonEmpty && cents.length % dim == 0,
     s"flat centroid table length ${cents.length} is not a multiple of dim $dim")
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("d",
-      org.apache.spark.sql.types.DoubleType, nullable = false),
-    org.apache.spark.sql.types.StructField("i",
-      org.apache.spark.sql.types.IntegerType, nullable = false)))
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_argmin_l2 requires ARRAY<DOUBLE> input, got ${other.simpleString}")
-    }
-  override def foldable: Boolean = child.foldable
-  override def nullSafeEval(v: Any): Any =
-    Hashing.argminL2(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], cents, dim)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("cents", cents, "double[]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.Hashing.argminL2($c, $ref, $dim)")
-  }
+  override def prettyName: String = "graft_argmin_l2"
+  override def inputTypes = Seq(ArrayType(DoubleType))
+  override lazy val replacement: Expression = invoke(Hashing, "argminL2",
+    StructType(Seq(StructField("d", DoubleType, nullable = false),
+      StructField("i", IntegerType, nullable = false))),
+    child, table(cents), Literal(dim))
   override protected def withNewChildInternal(c: Expression): ArgminL2Expr =
     copy(child = c)
 }
@@ -1239,31 +1216,14 @@ case class ArgminL2Expr(child: Expression, cents: Array[Double], dim: Int)
   * tree, the q104 argmin lesson); the flat table rides ONE reference
   * object instead. */
 case class CellsByDistExpr(child: Expression, cents: Array[Double], dim: Int)
-    extends UnaryExpression {
+    extends NativeKernel with UnaryLike[Expression] {
   require(dim >= 1, "dim must be >= 1")
   require(cents.nonEmpty && cents.length % dim == 0,
     s"flat centroid table length ${cents.length} is not a multiple of dim $dim")
-  override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
-    org.apache.spark.sql.types.IntegerType, containsNull = false)
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_cells_by_dist requires ARRAY<DOUBLE> input, got ${other.simpleString}")
-    }
-  override def foldable: Boolean = child.foldable
-  override def nullSafeEval(v: Any): Any =
-    Hashing.cellsByDist(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], cents, dim)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("cents", cents, "double[]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.Hashing.cellsByDist($c, $ref, $dim)")
-  }
+  override def prettyName: String = "graft_cells_by_dist"
+  override def inputTypes = Seq(ArrayType(DoubleType))
+  override lazy val replacement: Expression = invoke(Hashing, "cellsByDist",
+    ArrayType(IntegerType, containsNull = false), child, table(cents), Literal(dim))
   override protected def withNewChildInternal(c: Expression): CellsByDistExpr =
     copy(child = c)
 }
@@ -1278,33 +1238,26 @@ case class CellsByDistExpr(child: Expression, cents: Array[Double], dim: Int)
   * composed q43/q44/q66 plans sat in (BENCH_NOTES round 9: 4-6
   * executions to converge). */
 case class HyperplaneSigExpr(child: Expression, dim: Int, bits: Int,
-    seed: Int) extends UnaryExpression {
+    seed: Int) extends NativeKernel with UnaryLike[Expression] {
   require(dim >= 1, "dim must be >= 1")
   require(bits >= 1 && bits <= 60, "bits must be in [1, 60]")
-  private lazy val planes: Array[Double] =
-    Hashing.flatHyperplanes(dim, bits, seed)
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_hplane_sig requires ARRAY<DOUBLE> input, got ${other.simpleString}")
-    }
-  override def foldable: Boolean = child.foldable
-  override def nullSafeEval(v: Any): Any =
-    Hashing.hyperplaneSig(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], planes, dim)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("planes", planes, "double[]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.Hashing.hyperplaneSig($c, $ref, $dim)")
-  }
+  override def prettyName: String = "graft_hplane_sig"
+  override def inputTypes = Seq(ArrayType(DoubleType))
+  override lazy val replacement: Expression = invoke(Hashing, "hyperplaneSig",
+    LongType, child, table(HyperplaneSigExpr.planes(dim, bits, seed)), Literal(dim))
   override protected def withNewChildInternal(c: Expression): HyperplaneSigExpr =
     copy(child = c)
+}
+
+object HyperplaneSigExpr {
+  private val tables =
+    new java.util.concurrent.ConcurrentHashMap[(Int, Int, Int), Array[Double]]()
+
+  /** One plane table per (dim, bits, seed). A table literal compares by
+    * reference, so equal calls must share it: the cache lookup of a
+    * persisted frame and exchange reuse match plans by equality. */
+  private[functions] def planes(dim: Int, bits: Int, seed: Int): Array[Double] =
+    tables.computeIfAbsent((dim, bits, seed), _ => Hashing.flatHyperplanes(dim, bits, seed))
 }
 
 /** `graft_shingle_fps(text, n)`: DISTINCT Rabin-Karp fingerprints of the
@@ -1314,22 +1267,13 @@ case class HyperplaneSigExpr(child: Expression, dim: Int, bits: Int,
   * `array_distinct(transform(TextOps.wordShingles(text, n),
   * TextOps.fingerprint))`, which FunctionsSpec pins; the HOF stays as the
   * oracle-replayable reference. */
-case class ShingleFpsExpr(child: Expression, n: Int) extends UnaryExpression {
+case class ShingleFpsExpr(child: Expression, n: Int)
+    extends NativeKernel with UnaryLike[Expression] {
   require(n >= 1, "shingle length must be >= 1")
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == org.apache.spark.sql.types.StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_shingle_fps requires STRING input, got ${child.dataType.simpleString}")
-  override def foldable: Boolean = child.foldable
-  override def nullSafeEval(v: Any): Any =
-    Hashing.shingleFps(v.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Hashing.shingleFps($c, $n)")
+  override def prettyName: String = "graft_shingle_fps"
+  override def inputTypes = Seq(StringType)
+  override lazy val replacement: Expression = invoke(Hashing, "shingleFps",
+    ArrayType(LongType, containsNull = false), child, Literal(n))
   override protected def withNewChildInternal(c: Expression): ShingleFpsExpr =
     copy(child = c)
 }
@@ -1337,21 +1281,13 @@ case class ShingleFpsExpr(child: Expression, n: Int) extends UnaryExpression {
 /** `graft_despan(text, span)`: intra-document repeated-span removal
   * ([[Hashing.despan]]) — keep the first occurrence of every
   * `span`-token chunk, drop repeats, re-join. One codegen'd O(L) pass. */
-case class DespanExpr(child: Expression, span: Int) extends UnaryExpression {
+case class DespanExpr(child: Expression, span: Int)
+    extends NativeKernel with UnaryLike[Expression] {
   require(span >= 1, "span must be >= 1")
-  override def dataType: DataType = org.apache.spark.sql.types.StringType
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == org.apache.spark.sql.types.StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_despan requires STRING input, got ${child.dataType.simpleString}")
-  override def foldable: Boolean = child.foldable
-  override def nullSafeEval(v: Any): Any =
-    Hashing.despan(v.asInstanceOf[UTF8String], span)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Hashing.despan($c, $span)")
+  override def prettyName: String = "graft_despan"
+  override def inputTypes = Seq(StringType)
+  override lazy val replacement: Expression =
+    invoke(Hashing, "despan", StringType, child, Literal(span))
   override protected def withNewChildInternal(c: Expression): DespanExpr =
     copy(child = c)
 }
@@ -1363,50 +1299,37 @@ case class DespanExpr(child: Expression, span: Int) extends UnaryExpression {
   * g => pmod(TextOps.fingerprint(g), buckets))` (FunctionsSpec pins);
   * that HOF form stays as the oracle-replayable reference. */
 case class GramBucketsExpr(child: Expression, buckets: Int)
-    extends UnaryExpression {
+    extends NativeKernel with UnaryLike[Expression] {
   require(buckets >= 2, "buckets must be >= 2")
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == org.apache.spark.sql.types.StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_gram_buckets requires STRING input, got ${child.dataType.simpleString}")
-  override def foldable: Boolean = child.foldable
-  override def nullSafeEval(v: Any): Any =
-    Hashing.gramBuckets(v.asInstanceOf[UTF8String], buckets)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Hashing.gramBuckets($c, $buckets)")
+  override def prettyName: String = "graft_gram_buckets"
+  override def inputTypes = Seq(StringType)
+  override lazy val replacement: Expression = invoke(Hashing, "gramBuckets",
+    ArrayType(LongType, containsNull = false), child, Literal(buckets))
   override protected def withNewChildInternal(c: Expression): GramBucketsExpr =
     copy(child = c)
 }
 
 /** `graft_minhash(text, n, numHashes)`: native MinHash signature. */
 case class MinHashSigExpr(child: Expression, n: Int, numHashes: Int)
-    extends UnaryExpression {
+    extends NativeKernel with UnaryLike[Expression] {
   require(n >= 1 && numHashes >= 1)
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-  override def foldable: Boolean = child.foldable
-  override def nullSafeEval(v: Any): Any =
-    Hashing.minhashSig(v.asInstanceOf[UTF8String], n, numHashes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Hashing.minhashSig($c, $n, $numHashes)")
+  override def prettyName: String = "graft_minhash"
+  override def inputTypes = Seq(StringType)
+  override lazy val replacement: Expression = invoke(Hashing, "minhashSig",
+    ArrayType(LongType, containsNull = false), child, Literal(n), Literal(numHashes))
   override protected def withNewChildInternal(c: Expression): MinHashSigExpr =
     copy(child = c)
 }
 
-/** `graft_dot(a, b)`: native sequential dot product over double arrays. */
+/** `graft_dot(a, b)`: native sequential dot product over double arrays.
+  * Hand-written, not a [[NativeKernel]]: [[graft.plans.RewriteDotProduct]]
+  * builds it inside the optimizer, after `RuntimeReplaceable`s are gone. */
 case class DotProductExpr(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
+  override def dataType: DataType = DoubleType
   override def foldable: Boolean = left.foldable && right.foldable
   override def nullSafeEval(a: Any, b: Any): Any =
-    Hashing.dotProduct(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
+    Hashing.dotProduct(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Hashing.dotProduct($a, $b)")
   override protected def withNewChildrenInternal(
@@ -1416,24 +1339,15 @@ case class DotProductExpr(left: Expression, right: Expression)
 /** `graft_bpe_merge(tokens, a, b)`: one greedy BPE merge pass over a
   * token array. The merge pair is fixed per round (chosen by the driver
   * loop from the corpus-wide pair counts, the CC-convergence control
-  * pattern), so it rides the compiled plan as two codegen reference
-  * objects — the per-row work is a single branchy scan inside
-  * whole-stage codegen. */
+  * pattern), so it rides the compiled plan as two string literals —
+  * the per-row work is a single branchy scan inside whole-stage
+  * codegen. */
 case class BpeMergeExpr(child: Expression, a: String, b: String)
-    extends UnaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.StringType, containsNull = true)
-  override def nullSafeEval(v: Any): Any =
-    Hashing.bpeMerge(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      UTF8String.fromString(a), UTF8String.fromString(b))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ra = ctx.addReferenceObj("bpeA", UTF8String.fromString(a),
-      "org.apache.spark.unsafe.types.UTF8String")
-    val rb = ctx.addReferenceObj("bpeB", UTF8String.fromString(b),
-      "org.apache.spark.unsafe.types.UTF8String")
-    defineCodeGen(ctx, ev, c => s"graft.functions.Hashing.bpeMerge($c, $ra, $rb)")
-  }
+    extends NativeKernel with UnaryLike[Expression] {
+  override def prettyName: String = "graft_bpe_merge"
+  override def inputTypes = Seq(ArrayType(StringType))
+  override lazy val replacement: Expression = invoke(Hashing, "bpeMerge",
+    ArrayType(StringType, containsNull = true), child, Literal(a), Literal(b))
   override protected def withNewChildInternal(c: Expression): BpeMergeExpr =
     copy(child = c)
 }
@@ -1443,21 +1357,11 @@ case class BpeMergeExpr(child: Expression, a: String, b: String)
   * [[Hashing.byteTokens]]). The byte-mode entry point of the BPE trainer
   * ([[graft.ops.CorpusStats.bpeMerges]]); composes with
   * [[BpeMergeExpr]], which is token-representation-agnostic. */
-case class ByteTokensExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.StringType, containsNull = false)
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == org.apache.spark.sql.types.StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_byte_tokens requires STRING input, got ${child.dataType.simpleString}")
-  override def nullSafeEval(v: Any): Any =
-    Hashing.byteTokens(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Hashing.byteTokens($c)")
+case class ByteTokensExpr(child: Expression) extends NativeKernel with UnaryLike[Expression] {
+  override def prettyName: String = "graft_byte_tokens"
+  override def inputTypes = Seq(StringType)
+  override lazy val replacement: Expression = invoke(Hashing, "byteTokens",
+    ArrayType(StringType, containsNull = false), child)
   override protected def withNewChildInternal(c: Expression): ByteTokensExpr =
     copy(child = c)
 }
@@ -1467,21 +1371,11 @@ case class ByteTokensExpr(child: Expression) extends UnaryExpression {
   * closed-alphabet fast path of the byte BPE trainer
   * ([[graft.ops.CorpusStats.bpeMergesBytes]]; BpeSpec pins the id↔string
   * correspondence). */
-case class ByteTokenIdsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.IntegerType, containsNull = false)
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == org.apache.spark.sql.types.StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_byte_token_ids requires STRING input, got ${child.dataType.simpleString}")
-  override def nullSafeEval(v: Any): Any =
-    Hashing.byteTokenIds(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Hashing.byteTokenIds($c)")
+case class ByteTokenIdsExpr(child: Expression) extends NativeKernel with UnaryLike[Expression] {
+  override def prettyName: String = "graft_byte_token_ids"
+  override def inputTypes = Seq(StringType)
+  override lazy val replacement: Expression = invoke(Hashing, "byteTokenIds",
+    ArrayType(IntegerType, containsNull = false), child)
   override protected def withNewChildInternal(c: Expression): ByteTokenIdsExpr =
     copy(child = c)
 }
@@ -1491,70 +1385,50 @@ case class ByteTokenIdsExpr(child: Expression) extends UnaryExpression {
   * becoming `newId`. The pair and its id are per-round constants riding
   * the compiled plan. */
 case class BpeMergeIdsExpr(child: Expression, a: Int, b: Int, newId: Int)
-    extends UnaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.IntegerType, containsNull = false)
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.IntegerType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_bpe_merge_ids requires ARRAY<INT> input, got ${other.simpleString}")
-    }
-  override def nullSafeEval(v: Any): Any =
-    Hashing.bpeMergeIds(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], a, b, newId)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.Hashing.bpeMergeIds($c, $a, $b, $newId)")
+    extends NativeKernel with UnaryLike[Expression] {
+  override def prettyName: String = "graft_bpe_merge_ids"
+  override def inputTypes = Seq(ArrayType(IntegerType))
+  override lazy val replacement: Expression = invoke(Hashing, "bpeMergeIds",
+    ArrayType(IntegerType, containsNull = false),
+    child, Literal(a), Literal(b), Literal(newId))
   override protected def withNewChildInternal(c: Expression): BpeMergeIdsExpr =
     copy(child = c)
 }
 
 /** `graft_bloom_contains(key, bits, k)`: native bloom-filter membership
   * probe. The bit array (built once from the SMALL side — see
-  * [[graft.ops.Bloom]]) rides the compiled plan as a codegen reference
+  * [[graft.ops.Bloom]]) rides the compiled plan as a reference
   * object, so the probe over the BIG side is a per-row branchy bit test
   * inside whole-stage codegen — no join, no shuffle, no broadcast
   * exchange. This is the same physical shape as Spark's own runtime
   * bloom filtering (`InjectRuntimeFilter`), exposed as a first-class
   * expression the user can aim at any long key. */
 case class BloomContainsExpr(child: Expression, bits: Array[Long], k: Int)
-    extends UnaryExpression {
+    extends NativeKernel with UnaryLike[Expression] {
   require(bits.nonEmpty && (bits.length & (bits.length - 1)) == 0,
     "bloom bit-array length (in longs) must be a power of two")
   require(k >= 1, "bloom needs at least one hash function")
-  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-  override def nullSafeEval(v: Any): Any =
-    BloomBits.mightContain(bits, v.asInstanceOf[Long], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloomBits", bits, "long[]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.BloomBits.mightContain($ref, $c, $k)")
-  }
+  override def prettyName: String = "graft_bloom_contains"
+  override def inputTypes = Seq(LongType)
+  override lazy val replacement: Expression =
+    invoke(BloomBits, "mightContain", BooleanType, table(bits), child, Literal(k))
   override protected def withNewChildInternal(c: Expression): BloomContainsExpr =
     copy(child = c)
 }
 
 /** `graft_cms_est(key, grid, w, d)`: native count-min point estimate. The
   * grid (built once by the distributed [[graft.ops.CountMin]] aggregator)
-  * rides the compiled plan as a codegen reference object, exactly like the
+  * rides the compiled plan as a reference object, exactly like the
   * bloom bit array — per-row estimation is d array reads inside
   * whole-stage codegen, no join against the sketch. */
 case class CmsEstExpr(child: Expression, grid: Array[Long], w: Int, d: Int)
-    extends UnaryExpression {
+    extends NativeKernel with UnaryLike[Expression] {
   require(w >= 64 && (w & (w - 1)) == 0, "CMS width must be a power of two >= 64")
   require(d >= 1 && grid.length == w * d, "grid length must be w*d")
-  override def dataType: DataType = LongType
-  override def nullSafeEval(v: Any): Any =
-    CmsBits.estimate(grid, v.asInstanceOf[Long], w, d)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("cmsGrid", grid, "long[]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.CmsBits.estimate($ref, $c, $w, $d)")
-  }
+  override def prettyName: String = "graft_cms_est"
+  override def inputTypes = Seq(LongType)
+  override lazy val replacement: Expression =
+    invoke(CmsBits, "estimate", LongType, table(grid), child, Literal(w), Literal(d))
   override protected def withNewChildInternal(c: Expression): CmsEstExpr =
     copy(child = c)
 }
@@ -1565,23 +1439,10 @@ case class CmsEstExpr(child: Expression, grid: Array[Long], w: Int, d: Int)
   * data (one sketch per group/shard), so the child is a real binary
   * column, not a plan-riding reference object — the estimate is a single
   * compiled fold per row inside whole-stage codegen. */
-case class HllEstExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  // fail at ANALYSIS, not with a runtime ClassCastException mid-job: the
-  // sketch argument must be the binary register array the Hll aggregators
-  // emit (the other graft functions get the same care via constArg)
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == org.apache.spark.sql.types.BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_hll_est requires a BINARY HLL register array, got " +
-          child.dataType.simpleString)
-  override def nullSafeEval(v: Any): Any =
-    HllBits.estimate(v.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HllBits.estimate($c)")
+case class HllEstExpr(child: Expression) extends NativeKernel with UnaryLike[Expression] {
+  override def prettyName: String = "graft_hll_est"
+  override def inputTypes = Seq(BinaryType)
+  override lazy val replacement: Expression = invoke(HllBits, "estimate", LongType, child)
   override protected def withNewChildInternal(c: Expression): HllEstExpr =
     copy(child = c)
 }
@@ -1592,81 +1453,36 @@ case class HllEstExpr(child: Expression) extends UnaryExpression {
   * group/shard), so the child is a real binary column; the fraction q
   * parameterizes the expression (registration-time foldable scalar, the
   * [[CmsEstExpr]] convention). NULL for an empty sketch — the
-  * `percentile`-over-no-rows contract. */
-case class DdQuantileExpr(child: Expression, q: Double) extends UnaryExpression {
+  * `percentile`-over-no-rows contract — through the boxed
+  * [[DdBits.quantileOrNull]], the one kernel whose result may be null. */
+case class DdQuantileExpr(child: Expression, q: Double)
+    extends NativeKernel with UnaryLike[Expression] {
   require(q >= 0.0 && q <= 1.0, s"quantile fraction out of [0,1]: $q")
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == org.apache.spark.sql.types.BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_dd_quantile requires a BINARY DDSketch, got " +
-          child.dataType.simpleString)
-  override def nullSafeEval(v: Any): Any = {
-    val r = DdBits.quantile(v.asInstanceOf[Array[Byte]], q)
-    if (java.lang.Double.isNaN(r)) null else r
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      // String.valueOf renders a valid Java double literal for any finite q
-      s"""
-         |double ${ev.value}_r = graft.functions.DdBits.quantile($c, ${String.valueOf(q)});
-         |if (Double.isNaN(${ev.value}_r)) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ${ev.value}_r; }
-       """.stripMargin
-    })
+  override def prettyName: String = "graft_dd_quantile"
+  override def inputTypes = Seq(BinaryType)
+  override lazy val replacement: Expression = StaticInvoke(DdBits.getClass,
+    DoubleType, "quantileOrNull", Seq(child, Literal(q)), returnNullable = true)
   override protected def withNewChildInternal(c: Expression): DdQuantileExpr =
     copy(child = c)
 }
 
 /** `graft_kmv_est(sketch)`: distinct-count estimate over a serialized KMV
   * sketch ([[graft.ops.Kmv]]) — exact below capacity, (k−1)/v_k above. */
-case class KmvEstExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == org.apache.spark.sql.types.BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_kmv_est requires a BINARY KMV sketch, got " +
-          child.dataType.simpleString)
-  override def nullSafeEval(v: Any): Any =
-    KmvBits.estimate(v.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.KmvBits.estimate($c)")
+case class KmvEstExpr(child: Expression) extends NativeKernel with UnaryLike[Expression] {
+  override def prettyName: String = "graft_kmv_est"
+  override def inputTypes = Seq(BinaryType)
+  override lazy val replacement: Expression = invoke(KmvBits, "estimate", LongType, child)
   override protected def withNewChildInternal(c: Expression): KmvEstExpr =
     copy(child = c)
 }
 
-/** Shared shape of the two-sketch KMV set estimators: both children must
-  * be BINARY sketches; the concrete op picks the [[KmvBits]] estimator. */
-abstract class KmvSetEstExpr
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  def fnName: String
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (left.dataType == org.apache.spark.sql.types.BinaryType &&
-        right.dataType == org.apache.spark.sql.types.BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$fnName requires two BINARY KMV sketches, got " +
-          s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-}
-
 /** `graft_kmv_union(a, b)`: |A ∪ B| estimate from two KMV sketches. */
 case class KmvUnionExpr(left: Expression, right: Expression)
-    extends KmvSetEstExpr {
-  override def fnName: String = "graft_kmv_union"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    KmvBits.unionEstimate(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.KmvBits.unionEstimate($a, $b)")
+    extends NativeKernel with BinaryLike[Expression] {
+  override def prettyName: String = "graft_kmv_union"
+  override def inputTypes = Seq(BinaryType, BinaryType)
+  override lazy val replacement: Expression =
+    invoke(KmvBits, "unionEstimate", LongType, left, right)
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): KmvUnionExpr = copy(left = l, right = r)
 }
@@ -1674,55 +1490,32 @@ case class KmvUnionExpr(left: Expression, right: Expression)
 /** `graft_kmv_inter(a, b)`: |A ∩ B| estimate from two KMV sketches — the
   * set operation the HLL/CMS/Bloom members cannot answer sketch-to-sketch. */
 case class KmvInterExpr(left: Expression, right: Expression)
-    extends KmvSetEstExpr {
-  override def fnName: String = "graft_kmv_inter"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    KmvBits.interEstimate(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.KmvBits.interEstimate($a, $b)")
+    extends NativeKernel with BinaryLike[Expression] {
+  override def prettyName: String = "graft_kmv_inter"
+  override def inputTypes = Seq(BinaryType, BinaryType)
+  override lazy val replacement: Expression =
+    invoke(KmvBits, "interEstimate", LongType, left, right)
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): KmvInterExpr = copy(left = l, right = r)
 }
 
-/** `graft_deflate_ratio(text)`: DEFLATE compression ratio in integer
-  * permille ([[Hashing.deflateRatioPermille]]) — the one-pass entropy
-  * proxy for degenerate-text filtering. A pure map-stage signal (no
-  * shuffle ever), codegen'd like the other natives; the compressor is
-  * thread-local so the per-row cost is the deflate itself. */
 /** `graft_url_parts(url)`: one-pass URL decomposition to
   * `struct<scheme, host, path, query>` ([[Hashing.urlParts]] — see its
   * scaladoc for exact semantics and the replaceAll-wall motivation).
   * The `Url` object's regex Columns remain the transparent twins the
   * SQL oracles replay; `Url.mark`/`markWithPsl` ride this kernel. */
-case class UrlPartsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = UrlPartsExpr.schema
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == org.apache.spark.sql.types.StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_url_parts requires STRING input, got ${child.dataType.simpleString}")
-  override def foldable: Boolean = child.foldable
-  override def nullSafeEval(v: Any): Any =
-    Hashing.urlParts(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Hashing.urlParts($c)")
+case class UrlPartsExpr(child: Expression) extends NativeKernel with UnaryLike[Expression] {
+  override def prettyName: String = "graft_url_parts"
+  override def inputTypes = Seq(StringType)
+  override lazy val replacement: Expression =
+    invoke(Hashing, "urlParts", UrlPartsExpr.schema, child)
   override protected def withNewChildInternal(c: Expression): UrlPartsExpr =
     copy(child = c)
 }
 
 object UrlPartsExpr {
-  val schema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("scheme",
-        org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("host",
-        org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("path",
-        org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("query",
-        org.apache.spark.sql.types.StringType, nullable = false)))
+  val schema: StructType = StructType(Seq("scheme", "host", "path", "query")
+    .map(StructField(_, StringType, nullable = false)))
 }
 
 /** `graft_dedup_key(text)`: the one-pass compiled dedup-key
@@ -1731,20 +1524,11 @@ object UrlPartsExpr {
   * semantics/scope). Value-identical to `TextOps.dedupKey` on ASCII and
   * on scripts whose lowercase stays non-ASCII; that regex form remains
   * the transparent oracle twin. */
-case class DedupKeyExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.StringType
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == org.apache.spark.sql.types.StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_dedup_key requires STRING input, got ${child.dataType.simpleString}")
-  override def foldable: Boolean = child.foldable
-  override def nullSafeEval(v: Any): Any =
-    Hashing.dedupKeyBytes(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Hashing.dedupKeyBytes($c)")
+case class DedupKeyExpr(child: Expression) extends NativeKernel with UnaryLike[Expression] {
+  override def prettyName: String = "graft_dedup_key"
+  override def inputTypes = Seq(StringType)
+  override lazy val replacement: Expression =
+    invoke(Hashing, "dedupKeyBytes", StringType, child)
   override protected def withNewChildInternal(c: Expression): DedupKeyExpr =
     copy(child = c)
 }
@@ -1754,134 +1538,89 @@ case class DedupKeyExpr(child: Expression) extends UnaryExpression {
   * cp1252 choice, and single-pass scope). No transparent SQL twin (the
   * repair is a byte-level re-decode no portable SQL expresses), so the
   * q143 oracle replays planted fixtures by construction instead. */
-case class FixMojibakeExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.StringType
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == org.apache.spark.sql.types.StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_fix_mojibake requires STRING input, got ${child.dataType.simpleString}")
-  override def foldable: Boolean = child.foldable
-  override def nullSafeEval(v: Any): Any =
-    Hashing.fixMojibake(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Hashing.fixMojibake($c)")
+case class FixMojibakeExpr(child: Expression) extends NativeKernel with UnaryLike[Expression] {
+  override def prettyName: String = "graft_fix_mojibake"
+  override def inputTypes = Seq(StringType)
+  override lazy val replacement: Expression =
+    invoke(Hashing, "fixMojibake", StringType, child)
   override protected def withNewChildInternal(c: Expression): FixMojibakeExpr =
     copy(c)
 }
 
-case class DeflateRatioExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == org.apache.spark.sql.types.StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_deflate_ratio requires STRING input, got ${child.dataType.simpleString}")
-  override def foldable: Boolean = child.foldable
-  override def nullSafeEval(v: Any): Any =
-    Hashing.deflateRatioPermille(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Hashing.deflateRatioPermille($c)")
+/** `graft_deflate_ratio(text)`: DEFLATE compression ratio in integer
+  * permille ([[Hashing.deflateRatioPermille]]) — the one-pass entropy
+  * proxy for degenerate-text filtering. A pure map-stage signal (no
+  * shuffle ever), codegen'd like the other natives; the compressor is
+  * thread-local so the per-row cost is the deflate itself. */
+case class DeflateRatioExpr(child: Expression) extends NativeKernel with UnaryLike[Expression] {
+  override def prettyName: String = "graft_deflate_ratio"
+  override def inputTypes = Seq(StringType)
+  override lazy val replacement: Expression =
+    invoke(Hashing, "deflateRatioPermille", LongType, child)
   override protected def withNewChildInternal(c: Expression): DeflateRatioExpr =
     copy(c)
 }
 
-/** Column-API + SQL registration for the native expressions. The Column
-  * constructors go through the function registry + `call_function` (the
-  * public route to a custom Expression since Spark 4 hid Column(expr)),
-  * so [[register]] must run once per session — GraftSession does it. */
+/** Column API + SQL registration of the native kernels.
+  *
+  * Every `graft_*` Column constructor goes through [[call]]: it runs
+  * [[ensureRegistered]] on the active session, then `call_function` (the
+  * public route to a custom Expression since Spark 4 hid Column(expr)).
+  * So an operator works on any active session without registering
+  * anything itself. Sessions made by `GraftSession.local` register at
+  * start, and `--conf spark.sql.extensions=graft.GraftExtensions`
+  * injects the same [[builders]] cluster-wide. */
 object NativeFunctions {
 
-  def graft_fingerprint(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_fingerprint", c)
-  def graft_simhash(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_simhash", c)
+  def graft_fingerprint(c: Column): Column = call("graft_fingerprint", c)
+  def graft_simhash(c: Column): Column = call("graft_simhash", c)
   def graft_word_shingles(c: Column, n: Int): Column =
-    org.apache.spark.sql.functions.call_function("graft_word_shingles",
-      c, org.apache.spark.sql.functions.lit(n))
-  def graft_dot(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_dot", a, b)
+    call("graft_word_shingles", c, lit(n))
+  def graft_dot(a: Column, b: Column): Column = call("graft_dot", a, b)
   def graft_minhash(c: Column, n: Int, numHashes: Int): Column =
-    org.apache.spark.sql.functions.call_function("graft_minhash",
-      c, org.apache.spark.sql.functions.lit(n),
-      org.apache.spark.sql.functions.lit(numHashes))
+    call("graft_minhash", c, lit(n), lit(numHashes))
   def graft_bloom_contains(key: Column, bits: Array[Long], k: Int): Column =
-    org.apache.spark.sql.functions.call_function("graft_bloom_contains",
-      key, org.apache.spark.sql.functions.typedLit(bits),
-      org.apache.spark.sql.functions.lit(k))
+    call("graft_bloom_contains", key, typedLit(bits), lit(k))
   def graft_bpe_merge(tokens: Column, a: String, b: String): Column =
-    org.apache.spark.sql.functions.call_function("graft_bpe_merge",
-      tokens, org.apache.spark.sql.functions.lit(a),
-      org.apache.spark.sql.functions.lit(b))
+    call("graft_bpe_merge", tokens, lit(a), lit(b))
   def graft_cms_est(key: Column, grid: Array[Long], w: Int, d: Int): Column =
-    org.apache.spark.sql.functions.call_function("graft_cms_est",
-      key, org.apache.spark.sql.functions.typedLit(grid),
-      org.apache.spark.sql.functions.lit(w), org.apache.spark.sql.functions.lit(d))
-  def graft_hll_est(sketch: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_hll_est", sketch)
+    call("graft_cms_est", key, typedLit(grid), lit(w), lit(d))
+  def graft_hll_est(sketch: Column): Column = call("graft_hll_est", sketch)
   def graft_dd_quantile(sketch: Column, q: Double): Column =
-    org.apache.spark.sql.functions.call_function("graft_dd_quantile",
-      sketch, org.apache.spark.sql.functions.lit(q))
-  def graft_byte_tokens(text: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_byte_tokens", text)
-  def graft_byte_token_ids(text: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_byte_token_ids", text)
+    call("graft_dd_quantile", sketch, lit(q))
+  def graft_byte_tokens(text: Column): Column = call("graft_byte_tokens", text)
+  def graft_byte_token_ids(text: Column): Column = call("graft_byte_token_ids", text)
   def graft_bpe_merge_ids(tokens: Column, a: Int, b: Int, newId: Int): Column =
-    org.apache.spark.sql.functions.call_function("graft_bpe_merge_ids",
-      tokens, org.apache.spark.sql.functions.lit(a),
-      org.apache.spark.sql.functions.lit(b),
-      org.apache.spark.sql.functions.lit(newId))
+    call("graft_bpe_merge_ids", tokens, lit(a), lit(b), lit(newId))
   def graft_winnow(text: Column, k: Int, w: Int): Column =
-    org.apache.spark.sql.functions.call_function("graft_winnow",
-      text, org.apache.spark.sql.functions.lit(k),
-      org.apache.spark.sql.functions.lit(w))
+    call("graft_winnow", text, lit(k), lit(w))
   def graft_l2sq(vec: Column, centroid: Array[Double]): Column =
-    org.apache.spark.sql.functions.call_function("graft_l2sq",
-      vec.cast("array<double>"),
-      org.apache.spark.sql.functions.typedLit(centroid.toSeq))
+    call("graft_l2sq", vec.cast("array<double>"), typedLit(centroid.toSeq))
   def graft_argmin_l2(vec: Column, centsFlat: Array[Double], dim: Int): Column =
-    org.apache.spark.sql.functions.call_function("graft_argmin_l2",
-      vec.cast("array<double>"),
-      org.apache.spark.sql.functions.typedLit(centsFlat.toSeq),
-      org.apache.spark.sql.functions.lit(dim))
+    call("graft_argmin_l2", vec.cast("array<double>"), typedLit(centsFlat.toSeq), lit(dim))
   def graft_cells_by_dist(vec: Column, centsFlat: Array[Double], dim: Int): Column =
-    org.apache.spark.sql.functions.call_function("graft_cells_by_dist",
-      vec.cast("array<double>"),
-      org.apache.spark.sql.functions.typedLit(centsFlat.toSeq),
-      org.apache.spark.sql.functions.lit(dim))
+    call("graft_cells_by_dist", vec.cast("array<double>"), typedLit(centsFlat.toSeq),
+      lit(dim))
   def graft_hplane_sig(vec: Column, dim: Int, bits: Int, seed: Int): Column =
-    org.apache.spark.sql.functions.call_function("graft_hplane_sig",
-      vec.cast("array<double>"),
-      org.apache.spark.sql.functions.lit(dim),
-      org.apache.spark.sql.functions.lit(bits),
-      org.apache.spark.sql.functions.lit(seed))
+    call("graft_hplane_sig", vec.cast("array<double>"), lit(dim), lit(bits), lit(seed))
   def graft_shingle_fps(text: Column, n: Int): Column =
-    org.apache.spark.sql.functions.call_function("graft_shingle_fps",
-      text, org.apache.spark.sql.functions.lit(n))
+    call("graft_shingle_fps", text, lit(n))
   def graft_gram_buckets(text: Column, buckets: Int): Column =
-    org.apache.spark.sql.functions.call_function("graft_gram_buckets",
-      text, org.apache.spark.sql.functions.lit(buckets))
-  def graft_despan(text: Column, span: Int): Column =
-    org.apache.spark.sql.functions.call_function("graft_despan",
-      text, org.apache.spark.sql.functions.lit(span))
-  def graft_kmv_est(sketch: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_kmv_est", sketch)
-  def graft_kmv_union(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_kmv_union", a, b)
-  def graft_kmv_inter(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_kmv_inter", a, b)
-  def graft_deflate_ratio(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_deflate_ratio", c)
-  def graft_dedup_key(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_dedup_key", c)
-  def graft_url_parts(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_url_parts", c)
-  def graft_fix_mojibake(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_fix_mojibake", c)
+    call("graft_gram_buckets", text, lit(buckets))
+  def graft_despan(text: Column, span: Int): Column = call("graft_despan", text, lit(span))
+  def graft_kmv_est(sketch: Column): Column = call("graft_kmv_est", sketch)
+  def graft_kmv_union(a: Column, b: Column): Column = call("graft_kmv_union", a, b)
+  def graft_kmv_inter(a: Column, b: Column): Column = call("graft_kmv_inter", a, b)
+  def graft_deflate_ratio(c: Column): Column = call("graft_deflate_ratio", c)
+  def graft_dedup_key(c: Column): Column = call("graft_dedup_key", c)
+  def graft_url_parts(c: Column): Column = call("graft_url_parts", c)
+  def graft_fix_mojibake(c: Column): Column = call("graft_fix_mojibake", c)
+
+  /** The one registration guard behind every Column constructor. */
+  private def call(name: String, args: Column*): Column = {
+    ensureRegistered()
+    call_function(name, args: _*)
+  }
 
   /** Evaluate a registration-time scalar argument (shingle width, merge
     * pair, sketch geometry…). These parameterize the EXPRESSION — they
@@ -1899,8 +1638,6 @@ object NativeFunctions {
     e.eval()
   }
 
-  /** Register `graft_fingerprint` / `graft_simhash` in the session's
-    * function registry (Column API + spark.sql both resolve through it). */
   /** The single (name → expression builder) registry behind BOTH
     * registration surfaces — the per-session [[register]] call and the
     * cluster-wide [[graft.GraftExtensions]] injection — so the two can
@@ -1911,9 +1648,7 @@ object NativeFunctions {
     * FUNCTION EXTENDED` points at the real implementation class rather
     * than a shared registry label. Builders validate scalar arguments
     * through [[constArg]] (foldable-only, loud errors). */
-  private[graft] val builders: Seq[(String, String,
-      Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-        org.apache.spark.sql.catalyst.expressions.Expression)] = Seq(
+  private[graft] val builders: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
     ("graft_fingerprint", "graft.functions.RollingHashExpr", exprs => RollingHashExpr(exprs.head)),
     ("graft_simhash", "graft.functions.SimHashExpr", exprs => SimHashExpr(exprs.head)),
     ("graft_word_shingles", "graft.functions.WordShinglesExpr", exprs => WordShinglesExpr(exprs.head,
@@ -2005,13 +1740,13 @@ object NativeFunctions {
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, java.lang.Boolean]())
 
-  /** Idempotent registration against the ACTIVE session — the hook
-    * library operators use so a `Column` built through `call_function`
-    * resolves even when the caller constructed its session without
-    * [[register]] (GraftSession registers; ad-hoc test sessions may
-    * not). Weak map: sessions are never retained. */
-  def ensureRegistered(): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    if (!registered.containsKey(spark)) register(spark)
-  }
+  /** Idempotent [[register]] against the active (else the default)
+    * session, so a Column built on a session that never went through
+    * `GraftSession` still resolves. Weak map: sessions are never
+    * retained. */
+  def ensureRegistered(): Unit =
+    org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+      .filterNot(registered.containsKey)
+      .foreach(register)
 }

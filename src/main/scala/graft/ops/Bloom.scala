@@ -75,10 +75,8 @@ object Bloom {
   /** Convenience: build from a TEXT column keyed by the engine-independent
     * rolling-hash fingerprint (`graft_fingerprint`). */
   def buildFromText(df: DataFrame, textCol: Column,
-      numBits: Int = DefaultNumBits, k: Int = DefaultK): Array[Long] = {
-    NativeFunctions.register(df.sparkSession)
+      numBits: Int = DefaultNumBits, k: Int = DefaultK): Array[Long] =
     build(df, NativeFunctions.graft_fingerprint(textCol), numBits, k)
-  }
 
   /** Probe column: true iff `keyCol` might be in the filter (codegen'd
     * per-row bit test — see [[graft.functions.BloomContainsExpr]]). */

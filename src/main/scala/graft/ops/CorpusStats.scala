@@ -155,7 +155,6 @@ object CorpusStats {
     require(rounds >= 1, "bpeTrain needs at least one merge round")
     require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
     val spark = docs.sparkSession
-    graft.functions.NativeFunctions.register(spark) // graft_bpe_merge
     // `base` + `pending` define the current corpus: the merges since the
     // last checkpoint stay UNMATERIALIZED, composed as nested compiled
     // merge expressions over `base` — one job per round, not two. The
@@ -266,7 +265,6 @@ object CorpusStats {
     require(rounds < (1 << 21) - 258, "merge ids must stay below 2^21")
     require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
     val spark = docs.sparkSession
-    graft.functions.NativeFunctions.register(spark)
     var base: DataFrame = docs.select(graft.functions.NativeFunctions
       .graft_byte_token_ids(col(textCol)).as("toks")).localCheckpoint()
     var ck: Option[DataFrame] = Some(base)
@@ -364,7 +362,6 @@ object CorpusStats {
   def bpeEncode(docs: DataFrame, textCol: String,
       merges: Seq[BpeMerge], outCol: String = "tokens",
       tokenizer: Column => Column = TextOps.tokens): DataFrame = {
-    graft.functions.NativeFunctions.register(docs.sparkSession)
     val encoded = merges.foldLeft(tokenizer(col(textCol))) { (c, m) =>
       graft.functions.NativeFunctions.graft_bpe_merge(c, m.a, m.b)
     }
@@ -513,7 +510,6 @@ object CorpusStats {
     * row per group (counts + two sketch blobs), never text. */
   def profile(docs: DataFrame, groupCol: String, textCol: String,
       lenCol: String): DataFrame = {
-    graft.functions.NativeFunctions.register(docs.sparkSession)
     val g = TextOps.gopherFlags(col(textCol))
     docs.groupBy(groupCol)
       .agg(

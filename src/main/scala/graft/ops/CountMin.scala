@@ -60,10 +60,8 @@ object CountMin {
 
   /** Build keyed by the engine-independent text fingerprint. */
   def buildFromText(df: DataFrame, textCol: Column,
-      w: Int = DefaultWidth, d: Int = DefaultDepth): Array[Long] = {
-    NativeFunctions.register(df.sparkSession)
+      w: Int = DefaultWidth, d: Int = DefaultDepth): Array[Long] =
     build(df, NativeFunctions.graft_fingerprint(textCol), w, d)
-  }
 
   /** Point-estimate column (codegen'd — see
     * [[graft.functions.CmsEstExpr]]). */

@@ -163,7 +163,6 @@ object DdSketch {
     * never the values). */
   def build(df: DataFrame, valCol: Column, alpha: Double = DefaultAlpha): Array[Byte] = {
     checkAlpha(alpha)
-    NativeFunctions.register(df.sparkSession)
     val rows = df.filter(valCol.isNotNull)
       .agg(sketch(valCol, alpha).as("sk"))
       .collect()

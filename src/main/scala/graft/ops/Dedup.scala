@@ -188,7 +188,6 @@ object Dedup {
     // it equal to the composed HOF formulation
     // minhashSignature(TextOps.hashedShingles(...)), which walks
     // interpreted lambdas per token × per hash and exists as the spec
-    graft.functions.NativeFunctions.register(df.sparkSession)
     // persisted via OpCaches (lifetime contract documented there): the
     // signature table is referenced three times below (bucket derivation +
     // both sides of the pair join); without caching the 32-hash minhash
@@ -388,7 +387,6 @@ object Dedup {
   def contaminationPairs(train: DataFrame, trainId: String,
       evalDf: DataFrame, evalId: String, textCol: String,
       shingleLen: Int = 3, minShared: Long = 5L): DataFrame = {
-    graft.functions.NativeFunctions.register(train.sparkSession)
     def shingled(df: DataFrame, idCol: String, as: String) =
       df.select(col(idCol).as(as),
         explode(array_distinct(graft.functions.NativeFunctions
@@ -417,7 +415,6 @@ object Dedup {
     * SQL — no float division on either side. */
   def overlapScore(train: DataFrame, trainId: String, evalDf: DataFrame,
       textCol: String, shingleLen: Int = 3): DataFrame = {
-    graft.functions.NativeFunctions.register(train.sparkSession)
     // native codegen'd shingle fingerprints (== the HOF composition
     // array_distinct(transform(wordShingles, fingerprint)), pinned by
     // FunctionsSpec; the interpreted per-character fold dominated q94)
@@ -464,7 +461,6 @@ object Dedup {
   def winnowContaminationPairs(train: DataFrame, trainId: String,
       evalDf: DataFrame, evalId: String, textCol: String,
       k: Int = 5, w: Int = 8, minShared: Long = 3L): DataFrame = {
-    graft.functions.NativeFunctions.register(train.sparkSession)
     def fps(df: DataFrame, idCol: String, as: String) =
       df.select(col(idCol).as(as),
         explode(graft.functions.NativeFunctions
@@ -621,34 +617,42 @@ object Dedup {
       .as[(Long, Long, Long)]
       .groupByKey(_._1)
       .flatMapGroups { (g, it) =>
-        val parent = scala.collection.mutable.LongMap.empty[Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var c = x // path compression: point the walked chain at the root
-          while (parent.getOrElse(c, c) != c) {
-            val nxt = parent(c); parent(c) = r; c = nxt
-          }
-          r
-        }
         var nEdges = 0L
-        it.foreach { case (_, a, b) =>
+        minRootComponents(it.map { case (_, a, b) =>
           nEdges += 1
           require(nEdges <= maxEdgesPerGroup,
             s"connectedComponentsWithinGroups: group $g exceeds " +
               s"$maxEdgesPerGroup edges — cap the bucket upstream or use " +
               "connectedComponentsStar")
-          val (ra, rb) = (find(a), find(b))
-          // union by MIN root: the surviving root is the component min
-          if (ra < rb) parent(rb) = ra
-          else if (rb < ra) parent(ra) = rb
-          parent.getOrElseUpdate(ra.min(rb), ra.min(rb))
-        }
-        // materialize the key set BEFORE the final find() pass: path
-        // compression mutates the map while we walk it
-        parent.keys.toArray.iterator.map(id => (id, find(id)))
+          (a, b)
+        })
       }
       .toDF("id", "component")
+  }
+
+  /** In-memory union-find over long-id edges, union by MIN root with path
+    * compression, so every root is its component's minimum id whatever
+    * the edge order. Returns (id, root) for every id an edge touched. */
+  private def minRootComponents(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x // path compression: point the walked chain at the root
+      while (parent.getOrElse(c, c) != c) {
+        val nxt = parent(c); parent(c) = r; c = nxt
+      }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra
+      else if (rb < ra) parent(ra) = rb
+      parent.getOrElseUpdate(ra.min(rb), ra.min(rb))
+    }
+    // materialize the key set BEFORE the final find() pass: path
+    // compression mutates the map while we walk it
+    parent.keys.toArray.iterator.map(id => (id, find(id)))
   }
 
   /** One LARGE-STAR step over (u, v) edges (input treated as symmetric;
@@ -676,7 +680,7 @@ object Dedup {
     * seen in several partitions emits a row in each, the star steps end
     * in `distinct()`, and only the first checkpoint's count and hash sum
     * measure the multiset.
-    * Same union-by-min + path-compression core as
+    * Same [[minRootComponents]] core as
     * [[connectedComponentsWithinGroups]], applied per PARTITION instead
     * of per group key — it needs no grouping shuffle because it only
     * claims LOCAL minima; the star rounds finish the global merge. */
@@ -684,27 +688,7 @@ object Dedup {
     val spark = e.sparkSession
     import spark.implicits._
     e.as[(Long, Long)].mapPartitions { it =>
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x // path compression: point the walked chain at the root
-        while (parent.getOrElse(c, c) != c) {
-          val nxt = parent(c); parent(c) = r; c = nxt
-        }
-        r
-      }
-      it.foreach { case (u, v) =>
-        val (ru, rv) = (find(u), find(v))
-        if (ru < rv) parent(rv) = ru
-        else if (rv < ru) parent(ru) = rv
-        parent.getOrElseUpdate(ru.min(rv), ru.min(rv))
-      }
-      // materialize the key set BEFORE the final find() pass: path
-      // compression mutates the map while we walk it
-      parent.keys.toArray.iterator
-        .map(id => (id, find(id)))
-        .filter { case (id, root) => id != root }
+      minRootComponents(it).filter { case (id, root) => id != root }
     }.toDF("u", "v")
   }
 
@@ -824,7 +808,6 @@ object Dedup {
       maxBucket: Int = 1000): DataFrame = {
     // native codegen'd shingling (FunctionsSpec pins it == the composed
     // TextOps.wordShingles HOF, which evaluates interpreted and ~10× slower)
-    graft.functions.NativeFunctions.register(df.sparkSession)
     val shingles = graft.functions.NativeFunctions
       .graft_word_shingles(col(textCol), shingleLen)
     // persisted PRE-PARTITIONED on the bucket key (r14): every consumer
@@ -896,7 +879,6 @@ object Dedup {
   def lineDedupBySpan(df: DataFrame, idCol: String, textCol: String,
       spanTokens: Int = 10): DataFrame = {
     require(spanTokens >= 1, s"spanTokens must be positive, got $spanTokens")
-    graft.functions.NativeFunctions.register(df.sparkSession)
     val toks = split(trim(col(textCol)), "\\s+")
     val nSpans = ceil(size(toks).cast("double") / spanTokens).cast("int")
     val spanArr = transform(sequence(lit(0), nSpans - 1),

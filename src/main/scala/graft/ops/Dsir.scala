@@ -60,7 +60,6 @@ object Dsir {
     // transform(grams(text), g => gramBucket(g, buckets)) — the HOF
     // fold re-walked every character of both bigram tokens interpreted,
     // and dominated the q93/q97 model build)
-    graft.functions.NativeFunctions.register(docs.sparkSession)
     docs.select(explode(graft.functions.NativeFunctions
         .graft_gram_buckets(col(textCol), buckets)).as("bucket"))
       .groupBy("bucket").agg(count(lit(1)).as("cnt"))

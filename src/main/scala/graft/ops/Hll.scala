@@ -104,7 +104,6 @@ object Hll {
     * one 2^p-byte row — never the keys). */
   def build(df: DataFrame, keyCol: Column, p: Int = DefaultP): Array[Byte] = {
     checkP(p)
-    NativeFunctions.register(df.sparkSession)
     val rows = df.filter(keyCol.isNotNull)
       .agg(sketch(keyCol, p).as("sk"))
       .collect()

@@ -8,7 +8,7 @@ import java.awt.image.BufferedImage
   * call walks the IIORegistry (provider iteration + `canDecode` probes +
   * stream-SPI lookup) and constructs a fresh reader/writer; under a
   * 32-thread Spark stage the registry machinery serializes enough that
-  * the parallel microbench (graft.tools.MediaMicro) measured PNG encode
+  * the parallel microbench (OPTIMIZATION_r14.md §2) measured PNG encode
   * at 8.2× the ideal per-op wall, PNG decode at 6.9×, GIF encode at
   * 3.8×. This object keeps ONE reader/writer per (thread, format) —
   * the SAME JDK plugin classes the registry would return, dispatched on

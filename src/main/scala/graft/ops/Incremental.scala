@@ -36,10 +36,8 @@ object Incremental {
 
   /** Exact-dedup state of a batch: one row per distinct text fingerprint
     * (column `fp`). Union with prior state via [[updatedState]]. */
-  def fingerprintState(docs: DataFrame, textCol: String): DataFrame = {
-    NativeFunctions.register(docs.sparkSession)
+  def fingerprintState(docs: DataFrame, textCol: String): DataFrame =
     docs.select(NativeFunctions.graft_fingerprint(col(textCol)).as("fp")).distinct()
-  }
 
   /** Persist a state table (overwrite — state tables are snapshots; keep
     * daily versions by pathing per run if audit history is needed). */
@@ -61,7 +59,6 @@ object Incremental {
     * broadcasts the smaller side). The raw text never shuffles. */
   def dedupAgainstState(today: DataFrame, idCol: String, textCol: String,
       state: DataFrame): DataFrame = {
-    NativeFunctions.register(today.sparkSession)
     val withFp = today.withColumn("__fp",
       NativeFunctions.graft_fingerprint(col(textCol)))
     val winners = withFp.groupBy(col("__fp"))
@@ -81,11 +78,9 @@ object Incremental {
     * same engine-independent rolling hash as [[fingerprintState]], so a
     * SQL oracle replays the whole incremental run, q138). Growth ∝
     * distinct URLs ever crawled, 8 bytes each. */
-  def urlState(pages: DataFrame, urlCol: String): DataFrame = {
-    NativeFunctions.register(pages.sparkSession)
+  def urlState(pages: DataFrame, urlCol: String): DataFrame =
     pages.select(NativeFunctions.graft_fingerprint(
       Url.canonicalCompiled(col(urlCol))).as("url_fp")).distinct()
-  }
 
   /** Roll the canonical-URL state forward with a new crawl batch. */
   def updatedUrlState(state: DataFrame, pages: DataFrame,
@@ -101,23 +96,19 @@ object Incremental {
     * fetch/parse stages. [[Curation.curateWeb]] exposes it via
     * `seenUrls`; the first-seen-wins invariant is q138's oracle. */
   def dropSeenUrls(today: DataFrame, idCol: String, urlCol: String,
-      state: DataFrame): DataFrame = {
-    NativeFunctions.register(today.sparkSession)
+      state: DataFrame): DataFrame =
     dropSeenByFp(today, idCol,
       NativeFunctions.graft_fingerprint(Url.canonicalCompiled(col(urlCol))),
       state)
-  }
 
   /** [[dropSeenUrls]] over an ALREADY-canonical column (the
     * [[Curation.curateWeb]] path — `Url.mark` computed `canonical_url`
     * one kernel call earlier; re-canonicalizing would double the map
     * cost for nothing). */
   def dropSeenCanonicalUrls(today: DataFrame, idCol: String,
-      canonicalCol: String, state: DataFrame): DataFrame = {
-    NativeFunctions.register(today.sparkSession)
+      canonicalCol: String, state: DataFrame): DataFrame =
     dropSeenByFp(today, idCol,
       NativeFunctions.graft_fingerprint(col(canonicalCol)), state)
-  }
 
   private def dropSeenByFp(today: DataFrame, idCol: String, fp: Column,
       state: DataFrame): DataFrame = {
@@ -471,11 +462,9 @@ object Incremental {
   /** Minhash signature state of a batch: (doc_id, sig) — store next to
     * the warehouse so later runs never re-shingle history. */
   def signatureState(docs: DataFrame, idCol: String, textCol: String,
-      shingleLen: Int = 3, numHashes: Int = 32): DataFrame = {
-    NativeFunctions.register(docs.sparkSession)
+      shingleLen: Int = 3, numHashes: Int = 32): DataFrame =
     docs.select(col(idCol).as("doc_id"),
       NativeFunctions.graft_minhash(col(textCol), shingleLen, numHashes).as("sig"))
-  }
 
   /** Near-dups of TODAY's docs against the HISTORY signature state:
     * (today_id, state_id, est_jaccard) pairs whose LSH band keys collide

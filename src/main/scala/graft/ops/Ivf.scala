@@ -145,10 +145,8 @@ object Ivf {
       lit(0.0), (acc, v) => acc + v)
 
   /** Add the IVF cell id to a vector table (the "index build"). */
-  def index(model: IvfModel, vectors: DataFrame, vecCol: String): DataFrame = {
-    graft.functions.NativeFunctions.register(vectors.sparkSession)
+  def index(model: IvfModel, vectors: DataFrame, vecCol: String): DataFrame =
     vectors.withColumn("ivf_cell", assign(model, col(vecCol)))
-  }
 
   /** A refined model plus the per-round inertia trace (Σ squared distance
     * to the assigned centroid, in 2^-qBits fixed-point units — integer,
@@ -185,7 +183,6 @@ object Ivf {
   def refine(model: IvfModel, vectors: DataFrame, vecCol: String,
       iters: Int, qBits: Int = 20): Refined = {
     require(iters >= 1 && qBits >= 0 && qBits <= 40)
-    graft.functions.NativeFunctions.register(vectors.sparkSession)
     val scale = (1L << qBits).toDouble
     var cur = model
     val inertias = scala.collection.mutable.ArrayBuffer.empty[BigInt]
@@ -291,8 +288,6 @@ object Ivf {
   /** Top-k by cosine probing only the `nProbe` cells nearest the query. */
   def topK(model: IvfModel, indexed: DataFrame, idCol: String, vecCol: String,
       query: Seq[Float], k: Int, nProbe: Int = 2): DataFrame = {
-    // Similarity.cosine resolves through the graft_dot native expression
-    graft.functions.NativeFunctions.register(indexed.sparkSession)
     val q = array(query.map(lit(_)): _*)
     indexed
       .filter(col("ivf_cell").isInCollection(probeCells(model, query, nProbe)))

@@ -38,7 +38,6 @@ object Pq {
     * subspace slice; seed offset per subspace decorrelates inits). */
   def train(vectors: DataFrame, vecCol: String, m: Int = 8, codes: Int = 16,
       seed: Long = 42L, maxSample: Int = 100000): PqModel = {
-    graft.functions.NativeFunctions.register(vectors.sparkSession)
     val dim = vectors.select(size(col(vecCol)).as("d")).head().getInt(0)
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val d = dim / m
@@ -67,8 +66,7 @@ object Pq {
       _ => train(vectors, vecCol, m, codes, seed))
 
   /** Native codegen'd squared-L2 to a literal sub-centroid (bit-identical
-    * to the HOF fold — see [[graft.functions.L2SqExpr]]; callers with a
-    * DataFrame in hand register the graft_* functions first). */
+    * to the HOF fold — see [[graft.functions.L2SqExpr]]). */
   private def l2sqLit(sub: Column, c: Array[Double]): Column =
     graft.functions.NativeFunctions.graft_l2sq(sub, c)
 

@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * ∝ density·(span + binWidth) while interval registrations are
   * ∝ span/binWidth, so when the interval side broadcasts (registrations
   * cheap) the optimum sits BELOW the typical span — measured ~span/2 at
-  * sf0.1 (2.1× over span-width bins; `graft.tools.RangeJoinTune` sweeps
-  * the trade for any SF dir). Without the broadcast, wider bins re-balance
+  * sf0.1 (2.1× over span-width bins; the sweep is in BENCH_NOTES.md
+  * Round 3). Without the broadcast, wider bins re-balance
   * toward fewer registrations.
   */
 object RangeJoin {

@@ -58,7 +58,6 @@ object SemDedup {
       maxEdgesPerGroup: Long = 10000000L): DataFrame = {
     require(eps > 0 && eps <= 1, "eps must be in (0, 1]")
     require(maxEdgesPerGroup >= 1, "maxEdgesPerGroup must be >= 1")
-    graft.functions.NativeFunctions.register(vectors.sparkSession)
     // persisted: referenced by the cell-size profile, both pair-join
     // sides, and the representative lookup. The L2 norm is hoisted HERE
     // (one native fold per ROW) so the pair filter below pays one dot

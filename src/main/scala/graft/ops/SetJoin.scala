@@ -45,7 +45,6 @@ object SetJoin {
     // paid an interpreted lambda + boxing per CHARACTER and was the
     // single heaviest stage of the query: 4.5s of the 5.4s isolated total
     // at sf0.1 went to this explode before the swap)
-    graft.functions.NativeFunctions.register(df.sparkSession)
     val fps = df.select(col(idCol).as("id"),
       explode(graft.functions.NativeFunctions
         .graft_shingle_fps(col(textCol), shingleLen)).as("fp"))

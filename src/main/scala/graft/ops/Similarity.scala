@@ -24,9 +24,7 @@ object Similarity {
   /** Dot product of two float/double-array columns, accumulated in double
     * in index order (deterministic): the native codegen'd expression
     * ([[graft.functions.DotProductExpr]] — one compiled loop, bit-identical
-    * to [[dotHof]] and to DuckDB's list_dot_product). Requires
-    * `NativeFunctions.register` on the session (GraftSession.local does it;
-    * every operator entry point in this object re-registers defensively). */
+    * to [[dotHof]] and to DuckDB's list_dot_product). */
   def dot(a: Column, b: Column): Column =
     graft.functions.NativeFunctions.graft_dot(
       a.cast("array<double>"), b.cast("array<double>"))
@@ -37,9 +35,6 @@ object Similarity {
   def dotHof(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, v) => acc + v)
-
-  private def registerNatives(df: DataFrame): Unit =
-    graft.functions.NativeFunctions.register(df.sparkSession)
 
   /** L2 norm. */
   def norm(a: Column): Column = sqrt(dot(a, a))
@@ -67,7 +62,6 @@ object Similarity {
     * Compiles to scan → project(score) → TakeOrderedAndProject. */
   def bruteForceTopK(vectors: DataFrame, idCol: String, vecCol: String,
       query: Seq[Float], k: Int): DataFrame = {
-    registerNatives(vectors)
     val q = array(query.map(v => lit(v)): _*)
     vectors
       .select(col(idCol), cosine(col(vecCol), q).as("cosine_sim"))
@@ -113,7 +107,6 @@ object Similarity {
     * cosine within the bucket. `bits` trades recall for bucket size. */
   def lshTopK(vectors: DataFrame, idCol: String, vecCol: String,
       query: Seq[Float], dim: Int, k: Int, bits: Int = 8): DataFrame = {
-    registerNatives(vectors)
     val q = array(query.map(v => lit(v)): _*)
     val querySig = hyperplaneSignature(q, dim, bits)
     vectors
@@ -162,7 +155,6 @@ object Similarity {
   private[ops] def cosineNearDupPairsWithBucket(vectors: DataFrame,
       idCol: String, vecCol: String, dim: Int, threshold: Double,
       bits: Int = 0, maxBucket: Int = 4096): DataFrame = {
-    registerNatives(vectors)
     val nBits =
       if (bits > 0) bits
       else bitsFor(vectors.select(approx_count_distinct(col(idCol))).head().getLong(0))
@@ -231,7 +223,6 @@ object Similarity {
   def embedQualityFilter(vectors: DataFrame, idCol: String, vecCol: String,
       seed: DataFrame, dims: Int, minCosine: Double,
       qBits: Int = 20): DataFrame = {
-    registerNatives(vectors)
     val scale = (1L << qBits).toDouble
     val cent = groupCentroidFixedPoint(
         seed.select(lit(0).as("g"), col(vecCol)), "g", vecCol, dims, qBits)
@@ -269,7 +260,6 @@ object Similarity {
   def hardNegatives(corpus: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String,
       positives: DataFrame, k: Int): DataFrame = {
-    registerNatives(corpus)
     require(k >= 1, "k must be >= 1")
     val scored = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
       .join(broadcast(queries.select(col(qIdCol).as("query_id"),
@@ -323,7 +313,6 @@ object Similarity {
       queries: DataFrame, qIdCol: String, qVecCol: String,
       positives: DataFrame, k: Int, model: Ivf.IvfModel,
       nProbe: Int): DataFrame = {
-    registerNatives(corpus)
     require(k >= 1, "k must be >= 1")
     require(nProbe >= 1 && nProbe <= model.centroids.length,
       s"nProbe must be in [1, ${model.centroids.length}]")
@@ -376,7 +365,6 @@ object Similarity {
     * fold + sqrt + one division per component), so the whole row
     * replays bit-for-bit in external SQL. */
   def l2Normalize(df: DataFrame, vecCol: String): DataFrame = {
-    registerNatives(df)
     df.withColumn("norm", norm(col(vecCol)))
       .withColumn("unit",
         when(col("norm") === lit(0.0),

@@ -263,15 +263,11 @@ object TextOps {
     * text-cleaning stage a web corpus runs BEFORE language ID and
     * quality scoring — mojibake skews both. Map-only, codegen'd, no SQL
     * twin (byte-level re-decode); q143 oracles it by construction. */
-  def fixMojibake(text: Column): Column = {
-    graft.functions.NativeFunctions.ensureRegistered()
+  def fixMojibake(text: Column): Column =
     graft.functions.NativeFunctions.graft_fix_mojibake(text)
-  }
 
-  def dedupKeyNative(text: Column): Column = {
-    graft.functions.NativeFunctions.ensureRegistered()
+  def dedupKeyNative(text: Column): Column =
     graft.functions.NativeFunctions.graft_dedup_key(text)
-  }
 
   /** 8-byte dedup key: `xxhash64` of the dedup key (computed via the
     * compiled [[dedupKeyNative]] pass) — the production shuffle key for

@@ -135,10 +135,8 @@ object Url {
     * measurement). The regex Columns STAY as the transparent forms the
     * SQL oracles replay; [[mark]]/[[markWithPsl]] derive everything
     * from one kernel evaluation per row. */
-  def parts(url: Column): Column = {
-    graft.functions.NativeFunctions.ensureRegistered()
+  def parts(url: Column): Column =
     graft.functions.NativeFunctions.graft_url_parts(url)
-  }
 
   /** Compiled canonical URL — [[canonicalize]]'s production twin riding
     * ONE `graft_url_parts` kernel evaluation (the [[mark]] path's form;

@@ -2240,7 +2240,6 @@ object DataOpsQueries {
     * real native-vs-HOF comparison on the sample. The oracle asserts
     * one TRUE per doc, so a single divergent signature hash-mismatches. */
   val q41Simhash: Q = (s, dir) => {
-    graft.functions.NativeFunctions.register(s)
     val native = graft.functions.NativeFunctions.graft_simhash(col("text"))
     load(s, dir, "documents")
       .select(col("doc_id"),
@@ -2471,7 +2470,6 @@ object DataOpsQueries {
     * < 800. Every verdict is engine-evaluated on genuinely compressed
     * bytes; the oracle asserts the booleans. */
   val q130CompressionRatio: Q = (s, dir) => {
-    graft.functions.NativeFunctions.register(s)
     import graft.functions.NativeFunctions.graft_deflate_ratio
     val docs = load(s, dir, "documents")
     val noise = array_join(transform(sequence(lit(0), lit(15)),
@@ -2759,7 +2757,6 @@ object DataOpsQueries {
     * right if the engine's repair really contracted 'Ã©'→'é',
     * 'â€”'→'—', 'Ã¯'→'ï'. */
   val q143Mojibake: Q = (s, dir) => {
-    graft.functions.NativeFunctions.register(s)
     val clean = " café — naïve" // " café — naïve", 13 chars
     val moji = new String(
       clean.getBytes(java.nio.charset.StandardCharsets.UTF_8), "windows-1252")
@@ -3220,7 +3217,6 @@ object DataOpsQueries {
     * path hashes UTF-8 BYTES, the oracle character codes; the corpus is
     * verified ASCII-only, where the two coincide.) */
   val q46Fingerprint: Q = (s, dir) => {
-    graft.functions.NativeFunctions.register(s)
     load(s, dir, "documents")
       .select(col("doc_id"),
         graft.functions.NativeFunctions.graft_fingerprint(col("text")).as("fingerprint"))
@@ -3270,7 +3266,7 @@ object DataOpsQueries {
     * pairs) and the HLL sketches ride a third, plain aggregation; the three
     * small per-group results then join.
     *
-    * Measured crossover ([[graft.tools.Q47Crossover]], cached input,
+    * Measured crossover (BENCH_NOTES.md Round 2, cached input,
     * local[32], min-of-2): sf0.1 (600k rows) Expand 2.04s vs two-phase
     * 1.19s (1.7×); 8× key-shifted corpus (4.8M rows) 11.19s vs 2.66s
     * (4.2×). The two-phase shape wins at every measured scale — the r2
@@ -3310,7 +3306,6 @@ object DataOpsQueries {
     * The oracle asserts the exact counts + TRUE×2 (q47/q73 pattern), so an
     * estimation or merge regression hash-mismatches. */
   val q76HllDistinct: Q = (s, dir) => {
-    graft.functions.NativeFunctions.register(s)
     val li = load(s, dir, "lineitem")
     val exact = li.select(col("l_returnflag"), col("l_partkey")).distinct()
       .groupBy("l_returnflag").agg(count(lit(1)).as("exact_parts"))
@@ -3861,7 +3856,6 @@ object DataOpsQueries {
     *    built one (exact mergeability in-query, the q76 contract).
     * Oracle asserts the exact percentiles + TRUE×3. */
   val q85DdQuantile: Q = (s, dir) => {
-    graft.functions.NativeFunctions.register(s)
     // NOT persisted (r14 measured): OpCaches.persist of the 600k-row
     // projection cost more than the three re-scans it saves — the
     // parquet scan+cast is cheaper than a memory-store write+read here.
@@ -3918,7 +3912,6 @@ object DataOpsQueries {
     * t0 differs. The DuckDB oracle replays all three rounds over the
     * byte tokenization — a full value oracle. */
   val q87ByteBpe: Q = (s, dir) => {
-    graft.functions.NativeFunctions.register(s)
     // the INT-id fast path (closed byte alphabet; BpeSpec pins it
     // merge-for-merge equal to bpeTrain(byteTokens), the string path)
     graft.ops.CorpusStats.byteBpeTrain(load(s, dir, "documents"), "text",
@@ -3962,7 +3955,6 @@ object DataOpsQueries {
     *    for KMV it holds unconditionally, no collapse cap).
     * Oracle asserts the exact counts + TRUE×5 (q47/q76 pattern). */
   val q88KmvSetops: Q = (s, dir) => {
-    graft.functions.NativeFunctions.register(s)
     val fk = load(s, dir, "lineitem")
       .filter(col("l_returnflag").isin("A", "N"))
       .select(col("l_returnflag").as("f"), col("l_partkey").as("pk"))
@@ -4419,7 +4411,6 @@ object DataOpsQueries {
     * DuckDB replays the chunking, fingerprints, first-occurrence filter
     * and the CLEANED TEXT itself. */
   val q111IntraDedup: Q = (s, dir) => {
-    graft.functions.NativeFunctions.register(s)
     val toks = graft.ops.TextOps.tokens(col("text"))
     val docs = load(s, dir, "documents")
       .filter(size(toks) >= 32)
@@ -4559,7 +4550,6 @@ object DataOpsQueries {
     * surface as verdict booleans; p50_chars is the QUANTILE_DISC value
     * replay (the q117 convention). */
   val q121CorpusProfile: Q = (s, dir) => {
-    graft.functions.NativeFunctions.register(s)
     import graft.ops.{CorpusStats, DdSketch, ExactPercentile, Hll}
     val docs = load(s, dir, "documents")
     val prof = CorpusStats.profile(docs, "lang", "text", "n_chars")

@@ -143,7 +143,6 @@ object EventQueries {
     * bounded state; the exact histogram is the audit). One lag window
     * on user_id; all three aggregations group on the user key. */
   val q117GapQuantiles: Q = (s, dir) => {
-    graft.functions.NativeFunctions.register(s)
     import graft.ops.{DdSketch, ExactPercentile}
     val byUser = Window.partitionBy("user_id").orderBy("ts_ns", "event_id")
     val gaps = graft.ops.OpCaches.persist(loadEvents(s, dir)

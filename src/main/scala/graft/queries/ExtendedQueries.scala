@@ -267,7 +267,7 @@ object ExtendedQueries {
         (dec2(col("p_retailprice")).cast("double") / 10 - 0.5).as("lo"),
         (dec2(col("p_retailprice")).cast("double") / 10 + 0.5).as("hi"))
     // binWidth = span/2: measured 2.1x faster than span-width bins at
-    // sf0.1 (candidates ∝ span+binWidth; see tools/RangeJoinTune)
+    // sf0.1 (candidates ∝ span+binWidth; sweep in BENCH_NOTES.md Round 3)
     graft.ops.RangeJoin.pointInInterval(points, "value", bands, "lo", "hi", binWidth = 0.5)
       .groupBy("p_partkey")
       // lsum, not dsum: this aggregation runs over the full ~matches

@@ -178,7 +178,6 @@ object Streams {
       seenUrls: Option[DataFrame] = None,
       fixMojibake: Boolean = false): DataFrame = {
     import graft.ops.{Html, Pii, TextOps, Url}
-    graft.functions.NativeFunctions.register(pages.sparkSession)
     // watermark declared ONCE, up front (Spark disallows redefining it
     // mid-chain): the stateless front stages pass it through, and both
     // stateful dedups below share the same horizon
@@ -312,10 +311,8 @@ object Streams {
     * nothing contaminated ever passes. */
   def decontaminateStream(docs: DataFrame, textCol: String,
       bloomBits: Array[Long],
-      k: Int = graft.ops.Bloom.DefaultK): DataFrame = {
-    graft.functions.NativeFunctions.register(docs.sparkSession)
+      k: Int = graft.ops.Bloom.DefaultK): DataFrame =
     docs.filter(!graft.ops.Bloom.mightContainText(col(textCol), bloomBits, k))
-  }
 
   /** Cross-RUN incremental dedup as a stream — the continuous-ingest twin
     * of [[graft.ops.Incremental.dedupAgainstState]]: rows whose text the
@@ -329,13 +326,11 @@ object Streams {
     * state roll-forward artifact). */
   def dedupAgainstStateStream(docs: DataFrame, textCol: String,
       stateBits: Array[Long],
-      k: Int = graft.ops.Bloom.DefaultK): DataFrame = {
-    graft.functions.NativeFunctions.register(docs.sparkSession)
+      k: Int = graft.ops.Bloom.DefaultK): DataFrame =
     docs.filter(!graft.ops.Bloom.mightContainText(col(textCol), stateBits, k))
       .withColumn("fp",
         graft.functions.NativeFunctions.graft_fingerprint(col(textCol)))
       .dropDuplicates("fp")
-  }
 
   /** Streaming distinct-count sketch — the continuous-ingest twin of
     * [[graft.ops.Hll]] (q76): per event-time window, the HLL register
@@ -352,15 +347,13 @@ object Streams {
   def distinctSketchStream(rows: DataFrame, keyCol: String,
       eventTimeCol: String = "event_time", window_ : String = "1 hour",
       watermark: String = "10 minutes",
-      p: Int = graft.ops.Hll.DefaultP): DataFrame = {
-    graft.functions.NativeFunctions.register(rows.sparkSession)
+      p: Int = graft.ops.Hll.DefaultP): DataFrame =
     rows.withWatermark(eventTimeCol, watermark)
       .groupBy(window(col(eventTimeCol), window_))
       .agg(graft.ops.Hll.sketch(col(keyCol), p).as("sketch"))
       .select(col("window"),
         graft.ops.Hll.estimate(col("sketch")).as("n_distinct_est"),
         col("sketch"))
-  }
 
   /** Streaming quantile sketch — the continuous-ingest twin of
     * [[graft.ops.DdSketch]] (q85): per event-time window, the DDSketch
@@ -378,8 +371,7 @@ object Streams {
   def quantileSketchStream(rows: DataFrame, valueCol: String,
       eventTimeCol: String = "event_time", window_ : String = "1 hour",
       watermark: String = "10 minutes",
-      alpha: Double = graft.ops.DdSketch.DefaultAlpha): DataFrame = {
-    graft.functions.NativeFunctions.register(rows.sparkSession)
+      alpha: Double = graft.ops.DdSketch.DefaultAlpha): DataFrame =
     rows.withWatermark(eventTimeCol, watermark)
       .groupBy(window(col(eventTimeCol), window_))
       .agg(graft.ops.DdSketch.sketch(col(valueCol), alpha).as("sketch"))
@@ -387,7 +379,6 @@ object Streams {
         graft.ops.DdSketch.quantile(col("sketch"), 0.5).as("p50_est"),
         graft.ops.DdSketch.quantile(col("sketch"), 0.95).as("p95_est"),
         col("sketch"))
-  }
 
   /** Streaming heavy hitters — the continuous-ingest twin of
     * [[graft.ops.CorpusStats.heavyHitters]] (q131): per event-time
@@ -437,11 +428,9 @@ object Streams {
     * (StreamingSpec pins the law). Thresholding the weight composes as
     * a plain filter for continuous-ingest data selection. */
   def dsirScoreStream(docs: DataFrame, idCol: String, textCol: String,
-      model: Array[Long]): DataFrame = {
-    graft.functions.NativeFunctions.register(docs.sparkSession)
+      model: Array[Long]): DataFrame =
     docs.select(col(idCol),
       graft.ops.Dsir.score(model, col(textCol)).as("weight_x1e8"))
-  }
 
   /** Stateless streaming mixture rebalancing — the continuous-ingest
     * twin of [[graft.ops.Curation.mixtureBalance]] (q98): apply the
@@ -489,11 +478,9 @@ object Streams {
     * sees every raw row once); cross-document dedup stays with the
     * keyed/bloom stages above. */
   def despanStream(docs: DataFrame, textCol: String,
-      span: Int = 16): DataFrame = {
-    graft.functions.NativeFunctions.register(docs.sparkSession)
+      span: Int = 16): DataFrame =
     docs.withColumn(textCol,
       graft.functions.NativeFunctions.graft_despan(col(textCol), span))
-  }
 
   // ---- stateful sessionization (flatMapGroupsWithState) ----
 

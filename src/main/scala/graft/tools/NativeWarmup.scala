@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{NativeFunctions => NF}
@@ -10,9 +10,10 @@ import graft.ops.{DdSketch, Hll, Kmv}
   *
   * Round 9 root-caused the q44-class bench bimodality to tiered-JIT
   * warm-up: every native expression's hot loop lives in a SHARED static
-  * helper (`graft.functions.Hashing.*` — both `nullSafeEval` and the
-  * generated code call the same method), so the first few thousand rows
-  * of any signature-heavy query execute interpreter-tier bytecode.
+  * helper (`graft.functions.Hashing.*` — both the interpreted and the
+  * generated path of each kernel call the same method), so the first few
+  * thousand rows of any signature-heavy query execute interpreter-tier
+  * bytecode.
   * Min-of-2 sampling lands anywhere on that compile curve.
   *
   * This warm-up drives EVERY registered native function over a few
@@ -107,12 +108,14 @@ object NativeWarmup {
     * repeated invocation). Returns the exercised function names. */
   def warmup(spark: SparkSession, rows: Long = 4096L,
       passes: Int = 3): Seq[String] = {
-    graft.functions.NativeFunctions.register(spark)
-    val cols = warmCols ++ sketchCols(spark)
-    val frame = spark.range(rows).select(
-      cols.map { case (n, c) => c.as(n) }: _*)
+    val f = frame(spark, rows)
     (1 to passes).foreach(_ =>
-      frame.write.format("noop").mode("overwrite").save())
-    cols.map(_._1)
+      f.write.format("noop").mode("overwrite").save())
+    f.columns.toSeq
   }
+
+  /** One column per native function, named after it, over `rows` ids. */
+  private[graft] def frame(spark: SparkSession, rows: Long): DataFrame =
+    spark.range(rows).select(
+      (warmCols ++ sketchCols(spark)).map { case (n, c) => c.as(n) }: _*)
 }

@@ -22,7 +22,6 @@ object ScaleDrill {
   def main(args: Array[String]): Unit = {
     val scales = if (args.nonEmpty) args.toSeq.map(_.toInt) else Seq(1, 10)
     val spark = graft.GraftSession.local()
-    graft.functions.NativeFunctions.register(spark)
     val sc = spark.sparkContext
     val peak = new java.util.concurrent.atomic.AtomicLong(0L)
     val spill = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -43,9 +42,10 @@ object ScaleDrill {
       spark.read.format("graft-synth")
         .option("rows", rows).option("partitions", 32).load()
 
-    /** q133's page construction over synthetic docs (the Q133Profile
-      * arithmetic — same host/url/html shape, so the curation chain
-      * does the same per-row work as the suite query). */
+    /** q133's page construction over synthetic docs (the arithmetic of
+      * BENCH_NOTES.md Round 12's q133 attribution — same host/url/html
+      * shape, so the curation chain does the same per-row work as the
+      * suite query). */
     def pages(rows: Long): DataFrame = {
       val docs = synthDocs(rows)
       val d2 = col("doc_id")

@@ -298,6 +298,25 @@ class EtlSpec extends AnyFunSuite {
     assert(new java.io.File(s"$out/back/_SUCCESS").isFile)
   }
 
+  test("zone writers refuse to overwrite what they read") {
+    val out = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val rows = spark.range(0, 40, 1, 4).select(col("id"), (col("id") * 2).as("v"))
+    Zones.writeParquet(rows, s"$out/parquet")
+    Zones.write(rows, s"$out/csv", "csv")
+    Zones.writeRawJson(rows, s"$out/json")
+    val cases = Seq[(String, () => Unit)](
+      "parquet" -> (() => Zones.writeParquet(spark.read.parquet(s"$out/parquet"), s"$out/parquet")),
+      "csv" -> (() => Zones.write(Zones.read(spark, s"$out/csv", "csv", rows.schema),
+        s"$out/csv", "csv")),
+      "json" -> (() => Zones.writeRawJson(spark.read.schema(rows.schema).json(s"$out/json"),
+        s"$out/json")))
+    for ((dir, overwrite) <- cases) {
+      val before = partFiles(s"$out/$dir")
+      intercept[IllegalArgumentException](overwrite())
+      assert(partFiles(s"$out/$dir") == before, dir)
+    }
+  }
+
   test("run starts one job per zone write plus the dim shuffles and fact broadcasts; " +
       "hand-off reads start none") {
     val out = java.nio.file.Files.createTempDirectory("graft_wh").toString

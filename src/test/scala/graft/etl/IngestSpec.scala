@@ -179,8 +179,8 @@ class IngestSpec extends AnyFunSuite {
     // and the expression eval path directly
     new graft.GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions)
     import org.apache.spark.sql.catalyst.expressions.Literal
-    val fp = graft.functions.RollingHashExpr(Literal("abc")).eval(null)
+    val fp = graft.functions.RollingHashExpr(Literal("abc")).replacement.eval(null)
     assert(fp == (("a".codePointAt(0) * 31L + 'b') * 31 + 'c') % 2147483647L)
-    assert(graft.functions.SimHashExpr(Literal("a b c")).eval(null).asInstanceOf[Long] != 0L)
+    assert(graft.functions.SimHashExpr(Literal("a b c")).replacement.eval(null).asInstanceOf[Long] != 0L)
   }
 }

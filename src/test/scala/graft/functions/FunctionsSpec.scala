@@ -116,6 +116,46 @@ class FunctionsSpec extends AnyFunSuite {
           .isAssignableFrom(c),
         s"$name: $cls is not an Expression subclass")
     }
+    // one shape: every builder builds a RuntimeReplaceable over a static
+    // call, except the kernels that name their reason at the class
+    val handWritten = Set("graft_dot") // built inside the optimizer
+    val built = graft.tools.NativeWarmup.frame(spark, 1L)
+      .queryExecution.analyzed.expressions.flatMap(_.collect { case e => e })
+    NativeFunctions.builders.foreach { case (name, cls, _) =>
+      val made = built.filter(_.getClass.getName == cls)
+      assert(made.nonEmpty, s"$name: the warm-up frame builds no $cls")
+      assert(made.forall(_.isInstanceOf[
+          org.apache.spark.sql.catalyst.expressions.RuntimeReplaceable]) ||
+        handWritten(name), s"$name: $cls is not a RuntimeReplaceable")
+    }
+  }
+
+  test("an active session that never went through GraftSession runs every op") {
+    import org.apache.spark.sql.SparkSession
+    import graft.ops.{Bloom, Ivf}
+    // one op per way the operators used to register for themselves:
+    // Bloom (the frame's session), Ivf (the vectors' session, around
+    // Ivf.assign) and TextOps' dedup fingerprint (the active session)
+    val model = Ivf.IvfModel(Array(Array.fill(8)(0.0), Array.fill(8)(0.5)))
+    def run(s: SparkSession) = {
+      val text = s.read.parquet(docs)
+      val bits = Bloom.buildFromText(text, col("text"))
+      val hits = text.filter(Bloom.mightContainText(col("text"), bits)).count()
+      val cells = Ivf.index(model,
+        s.range(64).select(array((0 until 8).map(i =>
+          col("id").cast("double") / 64.0 + lit(i * 0.01)): _*).as("v")), "v")
+        .select("ivf_cell").collect().map(_.getInt(0)).toSeq
+      val fps = text.select(TextOps.dedupFingerprint(col("text")))
+        .collect().map(_.getLong(0)).sorted.toSeq
+      (bits.toSeq, hits, cells, fps)
+    }
+    val home = run(spark)
+    val foreign = spark.newSession()
+    assert(!foreign.catalog.functionExists("graft_fingerprint"))
+    SparkSession.setActiveSession(foreign)
+    try assert(run(foreign) == home)
+    finally SparkSession.setActiveSession(spark)
+    assert(home._3.toSet == Set(0, 1))
   }
 
   test("bench warm-up exercises every registered native function") {
@@ -154,6 +194,12 @@ class FunctionsSpec extends AnyFunSuite {
       graft.ops.Similarity.hyperplaneSignature(col("v"), 4, 8, 42).as("native"),
       graft.ops.Similarity.hyperplaneSignatureHof(col("v"), 4, 8, 42).as("hofv"))
     assert(e.filter(col("native") =!= col("hofv")).count() == 0)
+    // two equal calls stay equal once replaced (the plane table is one
+    // shared reference), so cache lookup and exchange reuse still match
+    val v = org.apache.spark.sql.catalyst.expressions.AttributeReference("v",
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))()
+    assert(HyperplaneSigExpr(v, 4, 8, 42).canonicalized ==
+      HyperplaneSigExpr(v, 4, 8, 42).canonicalized)
   }
 
   test("native gram buckets equal the HOF composition (corpus + edges)") {
@@ -290,6 +336,18 @@ class FunctionsSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("graft_bpe_merge"), e.getMessage)
     assert(e.getCondition == "NON_FOLDABLE_ARGUMENT", e.getCondition)
+    // a column of the wrong type fails analysis too, naming the function,
+    // for kernels that once failed only at run time
+    import spark.implicits._
+    val wrongType = Seq(
+      () => spark.sql("SELECT graft_simhash(1)").collect(),
+      () => Seq("k").toDF("k").select(NativeFunctions.graft_bloom_contains(
+        col("k"), Array(1L, 2L), 3)).collect())
+    for ((run, fn) <- wrongType.zip(Seq("graft_simhash", "graft_bloom_contains"))) {
+      val t = intercept[org.apache.spark.sql.AnalysisException](run())
+      assert(t.getCondition.startsWith("DATATYPE_MISMATCH"), t.getCondition)
+      assert(t.getMessage.contains(fn), t.getMessage)
+    }
     // foldable NON-literal expressions still work (constant-folded exprs)
     val ok = spark.sql(
       "SELECT graft_word_shingles('a b c d', 1 + 1) AS sh").head().getSeq[String](0)
