@@ -179,7 +179,7 @@ object Curation {
     // the cap variants are result-identical (ids are globally unique);
     // boundedDomainCap trades the window's single skew-sensitive shuffle
     // for BottomK partials + a uniformly-keyed semi join — see
-    // [[capPerGroupBounded]] and the CapSkewProfile drill in BENCH_NOTES
+    // [[capPerGroupBounded]] and BENCH_NOTES Round 13, "Per-domain cap skew drill"
     else if (boundedDomainCap)
       capPerGroupBounded(deduped, "url_domain", idCol, maxPerDomain)
     else capPerGroup(deduped, "url_domain", idCol, maxPerDomain)
@@ -230,7 +230,7 @@ object Curation {
     * the cap exists for) that partition is corpus-scale. Here no
     * executor ever holds more than k pairs of state per group, at the
     * cost of a second (uniformly-keyed) shuffle for the payload re-join.
-    * The CapSkewProfile drill measures the crossover (BENCH_NOTES):
+    * BENCH_NOTES Round 13 ("Per-domain cap skew drill") measures the crossover:
     * balanced regimes favor the window's single shuffle; skewed regimes
     * favor this. [[curateWeb]] exposes the choice via `boundedDomainCap`.
     *

@@ -2569,7 +2569,8 @@ object DataOpsQueries {
     * per group, so the oracle is the SAME row_number replay as q67. The
     * point of a separate oracle row is the plan, not the answer — the
     * bounded variant's group-keyed shuffle carries ≤ k·groups rows no
-    * matter how skewed the groups (see the CapSkewProfile drill). */
+    * matter how skewed the groups (BENCH_NOTES Round 13, "Per-domain cap
+    * skew drill"). */
   val q137DomainCapBounded: Q = (s, dir) => {
     val docs = load(s, dir, "documents")
     val capped = Curation.capPerGroupBounded(docs, "source", "doc_id", 25)

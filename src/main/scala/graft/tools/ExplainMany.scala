@@ -1,7 +1,9 @@
 package graft.tools
 
-/** Batch plan dumper: [[ExplainQuery]] over many queries in ONE session,
-  * writing `<outDir>/<query>_<tag>.txt` per query — the plans/r15
+/** Plan dumper: for each named query, in ONE session, prints its
+  * exchange / scan / cache-scan counts and writes them with the formatted
+  * plan to `<outDir>/<query>_<tag>.txt` (unwrapped by any build-tool log
+  * framing), one query or many — the plans/r15
   * evidence flow. One fixed session config for every dump (VERDICT r14
   * What's-wrong #2: before/after plan evidence must be captured under
   * identical cpus/shuffle.partitions — run with SPARK_GRAFT_CPUS=32).

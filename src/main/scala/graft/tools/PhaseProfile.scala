@@ -4,87 +4,64 @@ package graft.tools
   * For each named query (all registered when none given), measures over
   * a fresh plan:
   *
-  *  - `plan`   — analysis + optimization + physical planning (driver,
-  *               single-threaded): time to force `executedPlan`;
+  *  - `build`  — the query constructor, which runs the eager jobs some
+  *               operators start before the final action (IVF training,
+  *               CC rounds, sketch and bloom builds);
+  *  - `jobs`   — the number of jobs the constructor started;
+  *  - `plan`   — analysis + optimization + physical planning of the built
+  *               frame (Spark driver, single-threaded): time to force
+  *               `executedPlan`;
   *  - `exec1`  — first noop write (incl. whole-stage codegen compile,
   *               which is lazy per stage);
-  *  - `exec2`  — second noop write of a FRESH identical plan (compile
-  *               cache warm — the generated-class cache is keyed by
-  *               source, so exec1 − exec2 ≈ codegen compile + JIT);
+  *  - `exec2`  — a Bench run of a FRESH identical query: build, plan and
+  *               noop write with the compile cache warm (the
+  *               generated-class cache is keyed by source);
   *  - `cgenMs` — delta of the global Janino compile-time counter
   *               (CodegenMetrics) across the whole query;
   *  - `cpuS`   — total task CPU seconds (executorCpuTime) of exec2's
-  *               jobs — the real per-row work, 32-way parallel.
+  *               jobs — the real per-row work.
+  *
+  * SPARK_GRAFT_PROFILE_STAGES set prints exec2's completed stages.
   *
   * Drill tooling for the optimization rounds, not part of the driver
   * contract. {{{ runMain graft.tools.PhaseProfile q133_web_curation }}}
   */
 object PhaseProfile {
+  private def clock[T](body: => T): (T, Double) = {
+    val t0 = System.nanoTime()
+    val r = body
+    (r, (System.nanoTime() - t0) / 1e9)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.GraftSession.local()
-    val sc = spark.sparkContext
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong(0L)
-    val stages = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[String]())
-    val stageOn = new java.util.concurrent.atomic.AtomicBoolean(false)
-    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) cpuNs.addAndGet(m.executorCpuTime)
-      }
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        if (stageOn.get) {
-          val i = s.stageInfo
-          val wall = (for {a <- i.completionTime; b <- i.submissionTime}
-            yield a - b).getOrElse(-1L)
-          stages.add(f"    stage ${i.stageId}%4d tasks=${i.numTasks}%4d " +
-            f"wall=${wall / 1e3}%6.2fs cpu=${i.taskMetrics.executorCpuTime / 1e9}%6.2fs " +
-            f"run=${i.taskMetrics.executorRunTime / 1e3}%6.2fs  ${i.name.takeWhile(_ != '\n')}")
-        }
-    })
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    val drain = bus.getClass.getMethod("waitUntilEmpty")
+    val probe = Probe(spark)
     def cgenTotalMs: Long =
       org.apache.spark.metrics.source.CodegenMetrics
         .METRIC_COMPILATION_TIME.getSnapshot.getValues.sum
+    // the warm-up's jobs absorb session start-up; no named query runs
+    // before it is measured, so the first one's codegen is counted too
     NativeWarmup.warmup(spark)
     val names =
       if (args.nonEmpty) args.toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
-    // one throwaway to absorb session-level startup
-    names.headOption.foreach { n =>
-      graft.SparkEntry.queries(n)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      graft.ops.OpCaches.releaseAll()
-    }
-    println(f"${"query"}%-34s ${"plan"}%7s ${"exec1"}%7s ${"exec2"}%7s " +
-      f"${"cgenMs"}%7s ${"cpuS"}%7s")
+    println(f"${"query"}%-34s ${"build"}%7s ${"jobs"}%5s ${"plan"}%7s " +
+      f"${"exec1"}%7s ${"exec2"}%7s ${"cgenMs"}%7s ${"cpuS"}%7s")
     names.foreach { n =>
       def mk = graft.SparkEntry.queries(n)(spark, sfDir)
       val cg0 = cgenTotalMs
-      val t0 = System.nanoTime()
-      val df1 = mk
-      df1.queryExecution.executedPlan // force analyze+optimize+plan
-      val t1 = System.nanoTime()
-      df1.write.format("noop").mode("overwrite").save()
-      val t2 = System.nanoTime()
-      graft.ops.OpCaches.releaseAll()
-      drain.invoke(bus); cpuNs.set(0L)
-      stages.clear(); stageOn.set(true)
-      val t3 = System.nanoTime()
-      mk.write.format("noop").mode("overwrite").save()
-      val t4 = System.nanoTime()
-      graft.ops.OpCaches.releaseAll()
-      drain.invoke(bus)
-      stageOn.set(false)
+      val ((df1, build), built) = probe.measure(clock(mk))
+      val (_, plan) = clock(df1.queryExecution.executedPlan)
+      val exec1 = Probe.seconds(df1)
+      val (exec2, run2) = probe.measure(Probe.seconds(mk))
       val cg1 = cgenTotalMs
-      println(f"$n%-34s ${(t1 - t0) / 1e9}%7.2f ${(t2 - t1) / 1e9}%7.2f " +
-        f"${(t4 - t3) / 1e9}%7.2f ${cg1 - cg0}%7d ${cpuNs.get / 1e9}%7.2f")
+      println(f"$n%-34s $build%7.2f ${built.jobs}%5d $plan%7.2f $exec1%7.2f " +
+        f"$exec2%7.2f ${cg1 - cg0}%7d ${run2.cpuNs / 1e9}%7.2f")
       if (sys.env.contains("SPARK_GRAFT_PROFILE_STAGES"))
-        stages.forEach(s => println(s))
+        run2.stages.foreach(s => println(f"    stage ${s.id}%4d tasks=${s.tasks}%4d " +
+          f"wall=${s.wallMs / 1e3}%6.2fs cpu=${s.cpuNs / 1e9}%6.2fs " +
+          f"run=${s.runMs / 1e3}%6.2fs  ${s.name}"))
     }
     spark.stop()
   }

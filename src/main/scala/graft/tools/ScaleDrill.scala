@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   * asking: generate 1× and 10× the sf0.1 row counts partition-parallel
   * via [[graft.sources.SynthDocsSource]] (no driver materialization),
   * run each shape isolated with wall/peak-task-memory/spill capture
-  * (the Bench listener), and print the per-decade scaling exponent
-  * `log10(t_10x / t_1x)` — 1.0 = perfectly linear, > 1 sublinear
-  * degradation worth a ranked item. Results land in BENCH_NOTES.
+  * ([[Probe]], over Bench's timed region), and print the per-decade
+  * scaling exponent `log10(t_10x / t_1x)` — 1.0 = perfectly linear,
+  * > 1 sublinear degradation worth a ranked item. Results land in
+  * BENCH_NOTES.
   *
   * Run: `runMain graft.tools.ScaleDrill [scale1 scale2 ...]`
   * (defaults 1 10; rows/scale pinned to sf0.1's 5000 docs / 2000
@@ -22,21 +23,7 @@ object ScaleDrill {
   def main(args: Array[String]): Unit = {
     val scales = if (args.nonEmpty) args.toSeq.map(_.toInt) else Seq(1, 10)
     val spark = graft.GraftSession.local()
-    val sc = spark.sparkContext
-    val peak = new java.util.concurrent.atomic.AtomicLong(0L)
-    val spill = new java.util.concurrent.atomic.AtomicLong(0L)
-    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          peak.getAndAccumulate(m.peakExecutionMemory, math.max(_, _))
-          spill.addAndGet(m.memoryBytesSpilled)
-        }
-      }
-    })
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    val drain = bus.getClass.getMethod("waitUntilEmpty")
+    val probe = Probe(spark)
 
     def synthDocs(rows: Long): DataFrame =
       spark.read.format("graft-synth")
@@ -87,21 +74,12 @@ object ScaleDrill {
           i => (pmod(xxhash64(col("doc_id"), i), lit(2000L)) - 1000L)
             .cast("double") / 1000.0).as("embedding"))
 
-    def t(label: String, rows: Long)(mk: => DataFrame): (Double, Long, Long) = {
-      drain.invoke(bus)
-      peak.set(0L); spill.set(0L)
-      val secs = (1 to 2).map { _ =>
-        val df = mk
-        val t0 = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        graft.ops.OpCaches.releaseAll()
-        dt
-      }.min
-      drain.invoke(bus)
+    /** Min seconds of two fresh runs; peak memory and spill cover both. */
+    def t(label: String, rows: Long)(mk: => DataFrame): Double = {
+      val (secs, c) = probe.measure((1 to 2).map(_ => Probe.seconds(mk)).min)
       println(f"[scale-drill] $label%-14s rows=$rows%9d  $secs%7.2fs  " +
-        f"peak=${peak.get / (1L << 20)}%6d MiB  spill=${spill.get / (1L << 20)}%6d MiB")
-      (secs, peak.get, spill.get)
+        f"peak=${c.peakMem / (1L << 20)}%6d MiB  spill=${c.spill / (1L << 20)}%6d MiB")
+      secs
     }
 
     val results = scala.collection.mutable.Map.empty[(String, Int), Double]
@@ -112,7 +90,7 @@ object ScaleDrill {
         graft.ops.Curation.curateWeb(pages(nDocs), "doc_id", "url", "html",
           allowedLangs = Seq("en", "de", "fr", "es"), minQuality = 40,
           blockedDomains = Seq("tracker.net"), maxPerDomain = 40 * s)
-      }._1
+      }
       results(("q65-shape", s)) = t("q65-shape", nDocs) {
         val docs = synthDocs(nDocs)
         val pairs = graft.ops.Dedup.minhashNearDups(docs, "doc_id", "text",
@@ -121,7 +99,7 @@ object ScaleDrill {
           .select(col("id").as("doc_id"))
         docs.join(losers, Seq("doc_id"), "left_anti")
           .agg(count(lit(1)).as("n_kept"))
-      }._1
+      }
       // fixed k: the suite configuration — cells GROW with the corpus,
       // so the intra-cell pair count grows quadratically per cell (the
       // Σs² term). Expect a superlinear exponent: this is the measured
@@ -135,7 +113,7 @@ object ScaleDrill {
           eps = 0.999999)
           .agg(count(lit(1)).as("n_kept"))
       }
-      results(("q104-shape", s)) = t("q104-shape", nEmb)(semdedup(model))._1
+      results(("q104-shape", s)) = t("q104-shape", nEmb)(semdedup(model))
       // k ∝ corpus: constant expected cell SIZE — the 100 TB
       // configuration (SemDeDup's own recipe: cells bounded, count
       // scales). Expect the exponent back to ~1.
@@ -144,7 +122,7 @@ object ScaleDrill {
         if (kScaled == 32) model
         else graft.ops.Ivf.train(synthEmb(nEmb), "embedding", k = kScaled)
       results(("q104-kscaled", s)) =
-        t(s"q104-k$kScaled", nEmb)(semdedup(modelScaled))._1
+        t(s"q104-k$kScaled", nEmb)(semdedup(modelScaled))
     }
     for (q <- Seq("q133-shape", "q65-shape", "q104-shape", "q104-kscaled");
          a <- scales; b <- scales if b > a) {

@@ -961,7 +961,7 @@ class ScaleSpec extends AnyFunSuite {
     // so a mutant builds the same page around its mutated text and the
     // pair collapses at the dedup stage. The constructed pages are
     // PERSISTED once before timing: the synthetic generator costs more
-    // per row than the whole recipe (WebChainProfile measured both), so
+    // per row than the whole recipe (BENCH_NOTES Round 12 measured both), so
     // uncached laps would measure the fixture, not the chain — a real
     // deployment reads pages from parquet at GB/s. Stage costs are then
     // attributed by timing successive PREFIXES of the chain over the
