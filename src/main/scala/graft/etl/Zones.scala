@@ -22,12 +22,6 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
   */
 object Zones {
 
-  /** K1/K2: raw-zone JSON landing. */
-  def writeRawJson(df: DataFrame, path: String): Unit = {
-    refuseOverwritingInput(df, path, df.sparkSession.sessionState.newHadoopConf())
-    df.write.mode(SaveMode.Overwrite).json(path)
-  }
-
   /** K3/K4: parquet zone write. `partitionBy` is the scale path (e.g.
     * ingest_date); `singleFile` reproduces the reference's one-file-per-
     * table layout for small parity outputs. */

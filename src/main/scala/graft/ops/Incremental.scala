@@ -61,13 +61,17 @@ object Incremental {
       state: DataFrame): DataFrame = {
     val withFp = today.withColumn("__fp",
       NativeFunctions.graft_fingerprint(col(textCol)))
-    val winners = withFp.groupBy(col("__fp"))
-      .agg(min(col(idCol)).as(idCol))
-    withFp
-      .join(winners, Seq("__fp", idCol), "left_semi")
+    firstSeen(withFp, Seq("__fp"), idCol)
       .join(state.withColumnRenamed("fp", "__fp"), Seq("__fp"), "left_anti")
       .drop("__fp")
   }
+
+  /** Within-day first-seen-wins: the rows of `df` holding the smallest
+    * `idCol` of their `keys` (a partial-aggregated groupBy on the keys +
+    * a left-semi join back). */
+  private def firstSeen(df: DataFrame, keys: Seq[String], idCol: String): DataFrame =
+    df.join(df.groupBy(keys.map(col): _*).agg(min(col(idCol)).as(idCol)),
+      keys :+ idCol, "left_semi")
 
   /** Canonical-URL fingerprint state of a crawl batch — the RECRAWL
     * story: a day-2 crawl drops already-seen pages at the URL stage,
@@ -112,11 +116,7 @@ object Incremental {
 
   private def dropSeenByFp(today: DataFrame, idCol: String, fp: Column,
       state: DataFrame): DataFrame = {
-    val withFp = today.withColumn("__url_fp", fp)
-    val winners = withFp.groupBy(col("__url_fp"))
-      .agg(min(col(idCol)).as(idCol))
-    withFp
-      .join(winners, Seq("__url_fp", idCol), "left_semi")
+    firstSeen(today.withColumn("__url_fp", fp), Seq("__url_fp"), idCol)
       .join(state.withColumnRenamed("url_fp", "__url_fp"),
         Seq("__url_fp"), "left_anti")
       .drop("__url_fp")
@@ -129,8 +129,12 @@ object Incremental {
     * images, which byte/URL keys both miss. Non-decodable payloads
     * contribute no state. 8 bytes per distinct image. */
   def imageHashState(media: DataFrame): DataFrame =
-    Multimodal.withImageDHash(media)
-      .select(col("dhash")).filter(col("dhash").isNotNull).distinct()
+    hashState(Multimodal.withImageDHash(media), "dhash")
+
+  /** One row per distinct non-null `hashCol` of `hashed` — the exact
+    * perceptual-hash state: payloads that do not decode contribute none. */
+  private def hashState(hashed: DataFrame, hashCol: String): DataFrame =
+    hashed.select(col(hashCol)).filter(col(hashCol).isNotNull).distinct()
 
   /** Roll the image-hash state forward with a new media batch. */
   def updatedImageHashState(state: DataFrame, media: DataFrame): DataFrame =
@@ -146,19 +150,22 @@ object Incremental {
     * equality only; for drifted re-encodes (1–3 flipped bits) use the
     * banded [[imageBandState]] + [[dropSeenImagesWithinDist]] pair. */
   def dropSeenImages(today: DataFrame, idCol: String,
+      state: DataFrame): DataFrame =
+    dropSeenHash(Multimodal.withImageDHash(today), idCol, "dhash", state)
+
+  /** The exact cross-run drop over a perceptual hash column of `hashed`:
+    * within-day first-seen-wins (smallest id per hash) + anti-join
+    * against the state's `hashCol`; null-hash rows pass through. */
+  private def dropSeenHash(hashed: DataFrame, idCol: String, hashCol: String,
       state: DataFrame): DataFrame = {
     // persisted: three consumers (winners aggregate, semi-join left
-    // side, null-hash union branch) — the real image decode must run
-    // ONCE per payload, not three times (the hammingNearDupPairs rule)
-    val withH = OpCaches.persist(Multimodal.withImageDHash(today))
-    val decodable = withH.filter(col("dhash").isNotNull)
-    val winners = decodable.groupBy(col("dhash"))
-      .agg(min(col(idCol)).as(idCol))
-    decodable
-      .join(winners, Seq("dhash", idCol), "left_semi")
-      .join(state, Seq("dhash"), "left_anti")
-      .unionByName(withH.filter(col("dhash").isNull))
-      .drop("dhash")
+    // side, null-hash union branch) — the real decode must run ONCE per
+    // payload, not three times (the hammingNearDupPairs rule)
+    val withH = OpCaches.persist(hashed)
+    firstSeen(withH.filter(col(hashCol).isNotNull), Seq(hashCol), idCol)
+      .join(state, Seq(hashCol), "left_anti")
+      .unionByName(withH.filter(col(hashCol).isNull))
+      .drop(hashCol)
   }
 
   /** BANDED perceptual image-hash state — [[imageHashState]] widened for
@@ -279,10 +286,7 @@ object Incremental {
       state.select(col("band"), col("bv"), col(hashCol).as("__st_h")),
       op, maxBucket, "hashes"))
     val withH = OpCaches.persist(withH0)
-    val decodable = withH.filter(col(hashCol).isNotNull)
-    val winners = decodable.groupBy(col(hashCol))
-      .agg(min(col(idCol)).as(idCol))
-    val afterDay = decodable.join(winners, Seq(hashCol, idCol), "left_semi")
+    val afterDay = firstSeen(withH.filter(col(hashCol).isNotNull), Seq(hashCol), idCol)
     val seen = afterDay
       .select(col(idCol).as("__id"), col(hashCol).as("__h"),
         explode(array(Dedup.hammingBandKeys(col(hashCol), bits, bands,
@@ -307,8 +311,7 @@ object Incremental {
     * fingerprint; `bands > maxDist` enforced at build. */
   def audioBandState(media: DataFrame, bits: Int = 31, bands: Int = 7,
       maxDist: Int = 2): DataFrame =
-    bandState(Multimodal.withAudioPHashWide(media)
-      .select(col("ahash31")).filter(col("ahash31").isNotNull).distinct(),
+    bandState(hashState(Multimodal.withAudioPHashWide(media), "ahash31"),
       "ahash31", bits, bands, maxDist)
 
   /** Roll the banded audio state forward with a new media batch. */
@@ -343,8 +346,7 @@ object Incremental {
     * at corpus scale treat the drop set as candidates, or widen the
     * segment count upstream). */
   def audioHashState(media: DataFrame): DataFrame =
-    Multimodal.withAudioPHash(media)
-      .select(col("ahash")).filter(col("ahash").isNotNull).distinct()
+    hashState(Multimodal.withAudioPHash(media), "ahash")
 
   /** Roll the audio-fingerprint state forward with a new media batch. */
   def updatedAudioHashState(state: DataFrame, media: DataFrame): DataFrame =
@@ -358,19 +360,8 @@ object Incremental {
     * [[graft.streaming.Streams.audioDedupStream]] twin's contract, so
     * stream and batch agree row-for-row on the same rows). */
   def dropSeenAudio(today: DataFrame, idCol: String,
-      state: DataFrame): DataFrame = {
-    // persisted: three consumers (winners aggregate, semi-join left
-    // side, null-hash union branch) — one real PCM decode per payload
-    val withH = OpCaches.persist(Multimodal.withAudioPHash(today))
-    val decodable = withH.filter(col("ahash").isNotNull)
-    val winners = decodable.groupBy(col("ahash"))
-      .agg(min(col(idCol)).as(idCol))
-    decodable
-      .join(winners, Seq("ahash", idCol), "left_semi")
-      .join(state, Seq("ahash"), "left_anti")
-      .unionByName(withH.filter(col("ahash").isNull))
-      .drop("ahash")
-  }
+      state: DataFrame): DataFrame =
+    dropSeenHash(Multimodal.withAudioPHash(today), idCol, "ahash", state)
 
   /** Video-sequence fingerprint state — the cross-run story for
     * ANIMATIONS ([[Multimodal.videoSeqHash]]): one row per distinct
@@ -415,12 +406,8 @@ object Incremental {
         col("__st_nf"), col("__st_f"), col("__st_m"), col("__st_l")),
       "dropSeenVideoSeqs", maxBucket, "fingerprints"))
     val withH = OpCaches.persist(Multimodal.withVideoSeqHash(today))
-    val decodable = withH.filter(col("h_first").isNotNull)
-    val winners = decodable
-      .groupBy(col("n_frames"), col("h_first"), col("h_mid"), col("h_last"))
-      .agg(min(col(idCol)).as(idCol))
-    val afterDay = decodable.join(winners,
-      Seq("n_frames", "h_first", "h_mid", "h_last", idCol), "left_semi")
+    val afterDay = firstSeen(withH.filter(col("h_first").isNotNull),
+      Seq("n_frames", "h_first", "h_mid", "h_last"), idCol)
     def near(a: Column, b: Column) =
       bit_count(a.bitwiseXOR(b)) <= maxDist
     val seen = afterDay

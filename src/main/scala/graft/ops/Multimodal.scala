@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -297,6 +297,12 @@ object Multimodal {
     * payload-differs/perceptual-dup fixture for [[audioPHash15]]. */
   private[graft] def synthWavSigned(id: Long, sign: Int): Array[Byte] = {
     require(sign == 1 || sign == -1, "sign must be +/-1")
+    renderWav(id, sign, bump = 0)
+  }
+
+  /** The [[synthWav]] family's one sample loop: sample
+    * `sign·((7m + 13i + 31ch) mod 201 − 100)`, plus `bump` on frame 0. */
+  private def renderWav(id: Long, sign: Int, bump: Int): Array[Byte] = {
     val channels = (Math.floorMod(id, 2L) + 1L).toInt
     val rates = Array(8000f, 11025f, 16000f, 22050f)
     val rate = rates(Math.floorMod(id, 4L).toInt)
@@ -307,7 +313,8 @@ object Multimodal {
     while (i < nFrames) {
       var ch = 0
       while (ch < channels) {
-        val s = sign * ((7 * m + 13 * i + 31 * ch) % 201 - 100)
+        val s = sign * ((7 * m + 13 * i + 31 * ch) % 201 - 100) +
+          (if (i == 0) bump else 0)
         val off = (i * channels + ch) * 2
         data(off) = (s & 0xff).toByte         // little-endian 16-bit
         data(off + 1) = ((s >> 8) & 0xff).toByte
@@ -445,83 +452,53 @@ object Multimodal {
     * clipping; fully oracle-replayable (mono(0) = base + channels·bump). */
   private[graft] def synthWavBumped(id: Long, bump: Int): Array[Byte] = {
     require(bump >= 0 && bump <= 1000, "bump must stay far from 16-bit range")
-    val channels = (Math.floorMod(id, 2L) + 1L).toInt
-    val rates = Array(8000f, 11025f, 16000f, 22050f)
-    val rate = rates(Math.floorMod(id, 4L).toInt)
-    val nFrames = (Math.floorMod(id, 50L) + 20L).toInt
-    val m = Math.floorMod(id, 256L).toInt
-    val data = new Array[Byte](nFrames * channels * 2)
-    var i = 0
-    while (i < nFrames) {
-      var ch = 0
-      while (ch < channels) {
-        val s = (7 * m + 13 * i + 31 * ch) % 201 - 100 +
-          (if (i == 0) bump else 0)
-        val off = (i * channels + ch) * 2
-        data(off) = (s & 0xff).toByte
-        data(off + 1) = ((s >> 8) & 0xff).toByte
-        ch += 1
-      }
-      i += 1
-    }
-    // byte-identical to the AudioSystem.write container (WavIoSpec) —
-    // no JVM-global provider lock, see [[WavIo]]
-    WavIo.writeCanonical(data, rate, channels)
+    renderWav(id, sign = 1, bump)
   }
 
   /** Media table of [[synthWavBumped]] fixtures — the q148
     * drifted-re-encode input. */
   def synthAudioBumped(df: DataFrame, idCol: String, bump: Int,
-      idOffset: Long = 0L): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("payload", BinaryType),
-      StructField("meta", mediaMetaSchema))))
-    df.select(col(idCol).cast("long").as("media_id"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          Row(id + idOffset, synthWavBumped(id, bump),
-            Row("audio", "wav", null, null, null))
-        }
-      }(enc)
-  }
+      idOffset: Long = 0L): DataFrame =
+    synthTable(df, idCol, idOffset)(id => (synthWavBumped(id, bump), "audio", "wav"))
 
   /** Media table of [[synthWavSigned]] fixtures — the polarity-pair
     * input for the q141 perceptual-audio-dedup contract. */
   def synthAudioSigned(df: DataFrame, idCol: String, sign: Int,
-      idOffset: Long = 0L): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("payload", BinaryType),
-      StructField("meta", mediaMetaSchema))))
-    df.select(col(idCol).cast("long").as("media_id"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          Row(id + idOffset, synthWavSigned(id, sign),
-            Row("audio", "wav", null, null, null))
-        }
-      }(enc)
-  }
+      idOffset: Long = 0L): DataFrame =
+    synthTable(df, idCol, idOffset)(id => (synthWavSigned(id, sign), "audio", "wav"))
 
   /** Media table of [[synthWav]] fixtures, one real WAV per input row —
     * partition-parallel encode, metadata deliberately left null so the
     * DECODE stage is the only source of rates/durations (the
     * [[synthImages]] contract for audio). */
-  def synthAudio(df: DataFrame, idCol: String): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("payload", BinaryType),
-      StructField("meta", mediaMetaSchema))))
+  def synthAudio(df: DataFrame, idCol: String): DataFrame =
+    synthTable(df, idCol)(id => (synthWav(id), "audio", "wav"))
+
+  /** Schema of every media table: id, payload, [[mediaMetaSchema]]. */
+  private val mediaSchema: StructType = StructType(Seq(
+    StructField("media_id", LongType),
+    StructField("payload", BinaryType),
+    StructField("meta", mediaMetaSchema)))
+
+  /** The one synthetic media-table builder: per input row, `media_id =
+    * id + idOffset` and the payload, media type and format `render(id)`
+    * returns. Width, height and duration stay null, so the DECODE stage
+    * is their only source. Partition-parallel, no shuffle. */
+  private def synthTable(df: DataFrame, idCol: String, idOffset: Long = 0L)(
+      render: Long => (Array[Byte], String, String)): DataFrame =
     df.select(col(idCol).cast("long").as("media_id"))
       .mapPartitions { rows =>
         rows.map { r =>
           val id = r.getLong(0)
-          Row(id, synthWav(id), Row("audio", "wav", null, null, null))
+          val (payload, mediaType, format) = render(id)
+          Row(id + idOffset, payload, Row(mediaType, format, null, null, null))
         }
-      }(enc)
-  }
+      }(Encoders.row(mediaSchema))
+
+  /** A payload no JDK reader claims: `(id mod 17)+3` copies of the byte
+    * `(id mod 199)+1` — no PNG magic, no RIFF header. */
+  private def junkPayload(id: Long): Array[Byte] =
+    Array.fill((Math.floorMod(id, 17L) + 3L).toInt)((Math.floorMod(id, 199L) + 1L).toByte)
 
   /** Deterministic tiny REAL PNG keyed by `id` — the oracle-checkable
     * decode fixture: width `(id mod 7)+2`, height `(id mod 5)+2`, pixel
@@ -533,44 +510,41 @@ object Multimodal {
     * decode CANNOT reproduce these values from the compressed bytes:
     * DEFLATE destroys the byte↔pixel correspondence). */
   private[graft] def synthPng(id: Long): Array[Byte] = {
+    val m = Math.floorMod(id, 256L).toInt
+    encodePng(id) { (x, y) =>
+      val r = (3 * m + 5 * x + 7 * y) % 256
+      val g = (11 * m + 13 * x + 17 * y) % 256
+      val b = (19 * m + 23 * x + 29 * y) % 256
+      (r << 16) | (g << 8) | b
+    }
+  }
+
+  /** The PNG fixtures' one pixel loop: a `(id mod 7)+2` × `(id mod 5)+2`
+    * RGB image whose pixel (x, y) is `rgb(x, y)`, through the per-thread
+    * PNG writer (byte-identical to `ImageIO.write`, ImgIoSpec — no
+    * per-call registry walk, see [[ImgIo]]). */
+  private def encodePng(id: Long)(rgb: (Int, Int) => Int): Array[Byte] = {
     val w = (Math.floorMod(id, 7L) + 2L).toInt
     val h = (Math.floorMod(id, 5L) + 2L).toInt
-    val m = Math.floorMod(id, 256L).toInt
     val img = new java.awt.image.BufferedImage(
       w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
     var y = 0
     while (y < h) {
       var x = 0
       while (x < w) {
-        val r = (3 * m + 5 * x + 7 * y) % 256
-        val g = (11 * m + 13 * x + 17 * y) % 256
-        val b = (19 * m + 23 * x + 29 * y) % 256
-        img.setRGB(x, y, (r << 16) | (g << 8) | b)
+        img.setRGB(x, y, rgb(x, y))
         x += 1
       }
       y += 1
     }
-    // per-thread PNG writer, byte-identical stream (ImgIoSpec) — no
-    // per-call registry walk, see [[ImgIo]]
     ImgIo.encodePng(img)
   }
 
   /** Media table of [[synthPng]] fixtures, one real PNG per input row —
     * partition-parallel encode, metadata deliberately left null so the
     * DECODE stage is the only source of dimensions. */
-  def synthImages(df: DataFrame, idCol: String): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("payload", BinaryType),
-      StructField("meta", mediaMetaSchema))))
-    df.select(col(idCol).cast("long").as("media_id"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          Row(id, synthPng(id), Row("image", "png", null, null, null))
-        }
-      }(enc)
-  }
+  def synthImages(df: DataFrame, idCol: String): DataFrame =
+    synthTable(df, idCol)(id => (synthPng(id), "image", "png"))
 
   /** MIXED media table — one heterogeneous pass for the [[JdkCodec]]
     * dispatch contract (q135): by `id mod 3`, a real PNG
@@ -581,26 +555,12 @@ object Multimodal {
     * whose byte histogram over a single-valued payload is EXACTLY
     * one-hot: bucket `((id mod 199)+1) mod dim` at 1.0 — integer
     * arithmetic an external oracle replays). */
-  def synthMixed(df: DataFrame, idCol: String): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("payload", BinaryType),
-      StructField("meta", mediaMetaSchema))))
-    df.select(col(idCol).cast("long").as("media_id"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          Math.floorMod(id, 3L) match {
-            case 0L => Row(id, synthPng(id), Row("image", "png", null, null, null))
-            case 1L => Row(id, synthWav(id), Row("audio", "wav", null, null, null))
-            case _ =>
-              val v = (Math.floorMod(id, 199L) + 1L).toByte
-              val bytes = Array.fill((Math.floorMod(id, 17L) + 3L).toInt)(v)
-              Row(id, bytes, Row("video", "bin", null, null, null))
-          }
-        }
-      }(enc)
-  }
+  def synthMixed(df: DataFrame, idCol: String): DataFrame =
+    synthTable(df, idCol)(id => Math.floorMod(id, 3L) match {
+      case 0L => (synthPng(id), "image", "png")
+      case 1L => (synthWav(id), "audio", "wav")
+      case _ => (junkPayload(id), "video", "bin")
+    })
 
   /** 63-bit perceptual difference hash (dHash) of a JDK-decodable image:
     * REAL decode, a 10×7 NEAREST-NEIGHBOR sample grid
@@ -654,24 +614,24 @@ object Multimodal {
     hash
   }
 
-  /** Appends a nullable hash column computed per payload, preserving
-    * every input column — the shared shape of [[withImageDHash]] /
-    * [[withAudioPHash]]. Stateless map, so it composes with Structured
-    * Streaming unchanged (the [[graft.streaming.Streams
-    * .imageDedupStream]] twin). */
-  private def withPayloadHash(media: DataFrame, outCol: String,
-      hashOf: Array[Byte] => Option[Long]): DataFrame = {
-    val outSchema = StructType(media.schema.fields :+
-      StructField(outCol, LongType))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
+  /** Appends the nullable `cols`, whose values `valuesOf` computes from
+    * each row's payload (one per column), preserving every input column —
+    * the one shape of the perceptual-hash columns. Stateless map, so it
+    * composes with Structured Streaming unchanged (the
+    * [[graft.streaming.Streams.imageDedupStream]] twin). */
+  private def withPayloadColumns(media: DataFrame, cols: StructField*)(
+      valuesOf: Array[Byte] => Seq[Any]): DataFrame = {
     val payloadIdx = media.schema.fieldIndex("payload")
     media.mapPartitions { rows =>
-      rows.map { r =>
-        Row.fromSeq(r.toSeq :+
-          hashOf(r.getAs[Array[Byte]](payloadIdx)).map(Long.box).orNull)
-      }
-    }(enc)
+      rows.map(r => Row.fromSeq(r.toSeq ++ valuesOf(r.getAs[Array[Byte]](payloadIdx))))
+    }(Encoders.row(StructType(media.schema.fields ++ cols)))
   }
+
+  /** [[withPayloadColumns]] for one nullable long hash column. */
+  private def withPayloadHash(media: DataFrame, outCol: String,
+      hashOf: Array[Byte] => Option[Long]): DataFrame =
+    withPayloadColumns(media, StructField(outCol, LongType))(bytes =>
+      Seq(hashOf(bytes).map(Long.box).orNull))
 
   /** Adds a nullable `dhash` column ([[dHash63]]) to a media table —
     * map-only, partition-parallel, input columns preserved, null for
@@ -689,24 +649,14 @@ object Multimodal {
     * decodable media and both are null for payloads no JDK reader
     * claims. The one decode per payload is what
     * [[graft.ops.Curation.curateMedia]] rides. */
-  def withPerceptualHashes(media: DataFrame): DataFrame = {
-    val outSchema = StructType(media.schema.fields ++ Seq(
-      StructField("dhash", LongType), StructField("ahash31", LongType)))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val payloadIdx = media.schema.fieldIndex("payload")
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](payloadIdx)
-        dHash63(bytes) match {
-          case Some(h) => Row.fromSeq(r.toSeq ++ Seq(Long.box(h), null))
-          case None => audioPHash31(bytes) match {
-            case Some(a) => Row.fromSeq(r.toSeq ++ Seq(null, Long.box(a)))
-            case None => Row.fromSeq(r.toSeq ++ Seq(null, null))
-          }
-        }
+  def withPerceptualHashes(media: DataFrame): DataFrame =
+    withPayloadColumns(media, StructField("dhash", LongType),
+      StructField("ahash31", LongType)) { bytes =>
+      dHash63(bytes) match {
+        case Some(h) => Seq(h, null)
+        case None => Seq(null, audioPHash31(bytes).map(Long.box).orNull)
       }
-    }(enc)
-  }
+    }
 
   /** [[synthPng]] with id-linear channels and a uniform brightness
     * shift — the dHash twin fixture: channels
@@ -720,25 +670,21 @@ object Multimodal {
     * distinct ids render distinct images. */
   private[graft] def synthPngShifted(id: Long, delta: Int): Array[Byte] = {
     require(delta >= 0 && delta <= 55, "delta must keep channels under 256")
+    renderPngShifted(id, delta, bump = 0)
+  }
+
+  /** The shifted PNG fixtures' pixel formula: id-linear channels mod 200
+    * plus `delta`, plus `bump` on the corner pixel (w−1, h−1). */
+  private def renderPngShifted(id: Long, delta: Int, bump: Int): Array[Byte] = {
     val w = (Math.floorMod(id, 7L) + 2L).toInt
     val h = (Math.floorMod(id, 5L) + 2L).toInt
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val r = Math.floorMod(3 * id + 5 * x + 7 * y, 200L).toInt + delta
-        val g = Math.floorMod(11 * id + 13 * x + 17 * y, 200L).toInt + delta
-        val b = Math.floorMod(19 * id + 23 * x + 29 * y, 200L).toInt + delta
-        img.setRGB(x, y, (r << 16) | (g << 8) | b)
-        x += 1
-      }
-      y += 1
+    encodePng(id) { (x, y) =>
+      val b0 = if (x == w - 1 && y == h - 1) bump else 0
+      val r = Math.floorMod(3 * id + 5 * x + 7 * y, 200L).toInt + delta + b0
+      val g = Math.floorMod(11 * id + 13 * x + 17 * y, 200L).toInt + delta + b0
+      val b = Math.floorMod(19 * id + 23 * x + 29 * y, 200L).toInt + delta + b0
+      (r << 16) | (g << 8) | b
     }
-    // per-thread PNG writer, byte-identical stream (ImgIoSpec) — no
-    // per-call registry walk, see [[ImgIo]]
-    ImgIo.encodePng(img)
   }
 
   /** [[synthPngShifted]] with an additional `bump` on the CORNER pixel
@@ -759,89 +705,31 @@ object Multimodal {
       bump: Int): Array[Byte] = {
     require(delta >= 0 && delta <= 25 && bump >= 0 && bump <= 30,
       "delta/bump must keep channels under 256")
-    val w = (Math.floorMod(id, 7L) + 2L).toInt
-    val h = (Math.floorMod(id, 5L) + 2L).toInt
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val b0 = if (x == w - 1 && y == h - 1) bump else 0
-        val r = Math.floorMod(3 * id + 5 * x + 7 * y, 200L).toInt + delta + b0
-        val g = Math.floorMod(11 * id + 13 * x + 17 * y, 200L).toInt + delta + b0
-        val b = Math.floorMod(19 * id + 23 * x + 29 * y, 200L).toInt + delta + b0
-        img.setRGB(x, y, (r << 16) | (g << 8) | b)
-        x += 1
-      }
-      y += 1
-    }
-    // per-thread PNG writer, byte-identical stream (ImgIoSpec) — no
-    // per-call registry walk, see [[ImgIo]]
-    ImgIo.encodePng(img)
+    renderPngShifted(id, delta, bump)
   }
 
   /** Media table of [[synthPngShiftedBumped]] fixtures — the q144
     * drifted-re-encode input. */
   def synthImagesShiftedBumped(df: DataFrame, idCol: String, delta: Int,
-      bump: Int, idOffset: Long = 0L): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("payload", BinaryType),
-      StructField("meta", mediaMetaSchema))))
-    df.select(col(idCol).cast("long").as("media_id"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          Row(id + idOffset, synthPngShiftedBumped(id, delta, bump),
-            Row("image", "png", null, null, null))
-        }
-      }(enc)
-  }
+      bump: Int, idOffset: Long = 0L): DataFrame =
+    synthTable(df, idCol, idOffset)(id =>
+      (synthPngShiftedBumped(id, delta, bump), "image", "png"))
 
   /** Media table of [[synthPngShifted]] fixtures (id offset applied to
     * `media_id` so originals and shifted twins can coexist in one
     * union). */
   def synthImagesShifted(df: DataFrame, idCol: String, delta: Int,
-      idOffset: Long = 0L): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("payload", BinaryType),
-      StructField("meta", mediaMetaSchema))))
-    df.select(col(idCol).cast("long").as("media_id"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          Row(id + idOffset, synthPngShifted(id, delta),
-            Row("image", "png", null, null, null))
-        }
-      }(enc)
-  }
+      idOffset: Long = 0L): DataFrame =
+    synthTable(df, idCol, idOffset)(id => (synthPngShifted(id, delta), "image", "png"))
 
   /** Mixed frame-media table for the [[frameSampleReal]] contract
     * (q139): by `id mod 2`, a real animated GIF ([[synthGif]] — the
-    * real-decode path) or the [[synthMixed]]-style non-decodable payload
-    * (`(id mod 17)+3` copies of byte `(id mod 199)+1` — no reader claims
-    * it, exercising the byte-stride fallback). */
-  def synthFrameMedia(df: DataFrame, idCol: String): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("payload", BinaryType),
-      StructField("meta", mediaMetaSchema))))
-    df.select(col(idCol).cast("long").as("media_id"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          if (Math.floorMod(id, 2L) == 0L)
-            Row(id, synthGif(id), Row("image", "gif", null, null, null))
-          else {
-            val v = (Math.floorMod(id, 199L) + 1L).toByte
-            val bytes = Array.fill((Math.floorMod(id, 17L) + 3L).toInt)(v)
-            Row(id, bytes, Row("video", "bin", null, null, null))
-          }
-        }
-      }(enc)
-  }
+    * real-decode path) or the [[synthMixed]] non-decodable payload (no
+    * reader claims it, exercising the byte-stride fallback). */
+  def synthFrameMedia(df: DataFrame, idCol: String): DataFrame =
+    synthTable(df, idCol)(id =>
+      if (Math.floorMod(id, 2L) == 0L) (synthGif(id), "image", "gif")
+      else (junkPayload(id), "video", "bin"))
 
   /** The decode/feature-extract stage: partition-parallel over blobs,
     * iterated in `batchSize` groups so the codec sees columnar batches
@@ -874,11 +762,7 @@ object Multimodal {
     * (truncate/cycle-pad the bytes to `w*h`) — a real codec plugs into
     * [[resizeStub]]; the Spark-side shape (binary → binary map, metadata
     * struct rewrite, codegen-friendly surroundings) is the real contract. */
-  def resize(media: DataFrame, w: Int, h: Int): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("payload", org.apache.spark.sql.types.BinaryType),
-      StructField("meta", mediaMetaSchema))))
+  def resize(media: DataFrame, w: Int, h: Int): DataFrame =
     media.select(col("media_id"), col("payload"), col("meta"))
       .mapPartitions { rows =>
         rows.map { r =>
@@ -887,8 +771,7 @@ object Multimodal {
           Row(r.getLong(0), resizeStub(bytes, w * h),
             Row(meta.get(0), meta.get(1), w, h, meta.get(4)))
         }
-      }(enc)
-  }
+      }(Encoders.row(mediaSchema))
 
   /** Deterministic tiny REAL animated GIF keyed by `id` — the
     * oracle-checkable multi-frame fixture ([[synthPng]]'s playbook, with
@@ -961,11 +844,33 @@ object Multimodal {
     * prefix (per-payload degradation, the [[ImageIoCodec]] contract —
     * one crafted blob must never kill the task). */
   private[ops] def imageFrames(bytes: Array[Byte]): Option[Vector[(Int, Int, Long)]] =
+    decodeFrames(bytes) { img =>
+      val (w, h) = (img.getWidth, img.getHeight)
+      var sum = 0L
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) {
+          val rgb = img.getRGB(x, y)
+          sum += (((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)) / 3
+          x += 1
+        }
+        y += 1
+      }
+      (w, h, sum)
+    }
+
+  /** `frame` of every frame a sequence-aware reader decodes from `bytes`,
+    * in order, read INCREMENTALLY (`reader.read(i)` until the index runs
+    * out). A stream that breaks after frame 0 yields its intact prefix;
+    * `None` when no reader claims the bytes or frame 0 does not decode.
+    * Per-thread reader dispatch ([[ImgIo.withSeqReader]]) — no per-call
+    * registry walk. */
+  private def decodeFrames[A](bytes: Array[Byte])(
+      frame: java.awt.image.BufferedImage => A): Option[Vector[A]] =
     try {
-      // per-thread reader dispatch ([[ImgIo.withSeqReader]]) — no
-      // per-call registry walk; acceptance set unchanged
       ImgIo.withSeqReader(bytes) { reader =>
-        val frames = Vector.newBuilder[(Int, Int, Long)]
+        val frames = Vector.newBuilder[A]
         var i = 0
         var done = false
         while (!done) {
@@ -978,19 +883,7 @@ object Multimodal {
             }
           if (img == null) done = true
           else {
-            val (w, h) = (img.getWidth, img.getHeight)
-            var sum = 0L
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val rgb = img.getRGB(x, y)
-                sum += (((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)) / 3
-                x += 1
-              }
-              y += 1
-            }
-            frames += ((w, h, sum))
+            frames += frame(img)
             i += 1
           }
         }
@@ -1012,56 +905,26 @@ object Multimodal {
     * anchor hashes unchanged — the [[dHash63]] invariance, per frame. */
   private[graft] def videoSeqHash(bytes: Array[Byte])
       : Option[(Int, Long, Long, Long)] =
-    try {
-      // per-thread reader dispatch, same shape as [[imageFrames]]
-      ImgIo.withSeqReader(bytes) { reader =>
-        val hashes = Vector.newBuilder[Long]
-        var n = 0
-        var done = false
-        while (!done) {
-          val img =
-            try reader.read(n)
-            catch {
-              case _: IndexOutOfBoundsException => null
-              case scala.util.control.NonFatal(_) if n > 0 => null
-            }
-          if (img == null) done = true
-          else {
-            hashes += dHashOfImage(img)
-            n += 1
-          }
-        }
-        hashes.result()
-      }.filter(_.nonEmpty)
-        .map(hs => (hs.length, hs.head, hs(hs.length / 2), hs.last))
-    } catch { case scala.util.control.NonFatal(_) => None }
+    decodeFrames(bytes)(dHashOfImage)
+      .map(hs => (hs.length, hs.head, hs(hs.length / 2), hs.last))
 
   /** Adds nullable `n_frames` / `h_first` / `h_mid` / `h_last` columns
     * ([[videoSeqHash]]) to a media table — map-only, partition-parallel,
     * input columns preserved, all four null for payloads no reader
     * claims. Compose with [[videoSeqNearDups]] (or any banded Hamming
     * join over one anchor) for animation near-dup detection (q146). */
-  def withVideoSeqHash(media: DataFrame): DataFrame = {
-    val outSchema = StructType(media.schema.fields ++ Seq(
-      StructField("n_frames", IntegerType),
-      StructField("h_first", LongType),
-      StructField("h_mid", LongType),
-      StructField("h_last", LongType)))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val payloadIdx = media.schema.fieldIndex("payload")
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        videoSeqHash(r.getAs[Array[Byte]](payloadIdx)) match {
-          // Seq[Any]: a bare Seq(n, f, m, l) weak-LUBs Int with the
-          // Longs and silently widens n — the encoder then rejects the
-          // boxed Long where the schema says INT
-          case Some((n, f, m, l)) =>
-            Row.fromSeq(r.toSeq ++ Seq[Any](n, f, m, l))
-          case None => Row.fromSeq(r.toSeq ++ Seq(null, null, null, null))
-        }
+  def withVideoSeqHash(media: DataFrame): DataFrame =
+    withPayloadColumns(media, StructField("n_frames", IntegerType),
+      StructField("h_first", LongType), StructField("h_mid", LongType),
+      StructField("h_last", LongType)) { bytes =>
+      videoSeqHash(bytes) match {
+        // Seq[Any]: a bare Seq(n, f, m, l) weak-LUBs Int with the
+        // Longs and silently widens n — the encoder then rejects the
+        // boxed Long where the schema says INT
+        case Some((n, f, m, l)) => Seq[Any](n, f, m, l)
+        case None => Seq(null, null, null, null)
       }
-    }(enc)
-  }
+    }
 
   /** Animation near-dup pairs over the sequence fingerprint: candidates
     * from the banded Hamming join on the FIRST-frame anchor
@@ -1108,12 +971,19 @@ object Multimodal {
     * interlace bug workaround documented there). */
   private[graft] def synthGifShifted(id: Long, delta: Int): Array[Byte] = {
     require(delta >= 0 && delta <= 55, "delta must keep gray under 255")
-    ensureImageIoMemCache()
+    renderGifShifted(id, delta, bump = 0)
+  }
+
+  /** The shifted GIF fixtures' gray formula: id-linear gray mod 200 plus
+    * `delta`, plus `bump` on frame 0's corner pixel (w−1, h−1). */
+  private def renderGifShifted(id: Long, delta: Int, bump: Int): Array[Byte] = {
     val nFrames = (Math.floorMod(id, 6L) + 2L).toInt
     val w = (Math.floorMod(id, 5L) + 2L).toInt
     val h = (Math.floorMod(id, 4L) + 2L).toInt
-    encodeGifFrames(nFrames, w, h)((f, x, y) =>
-      Math.floorMod(3 * id + 5 * x + 7 * y + 11 * f, 200L).toInt + delta)
+    encodeGifFrames(nFrames, w, h) { (f, x, y) =>
+      val b0 = if (f == 0 && x == w - 1 && y == h - 1) bump else 0
+      Math.floorMod(3 * id + 5 * x + 7 * y + 11 * f, 200L).toInt + delta + b0
+    }
   }
 
   /** [[synthGifShifted]] with an additional `bump` on FRAME 0's corner
@@ -1130,52 +1000,22 @@ object Multimodal {
       bump: Int): Array[Byte] = {
     require(delta >= 0 && delta <= 25 && bump >= 0 && bump <= 30,
       "delta/bump must keep gray under 255")
-    ensureImageIoMemCache()
-    val nFrames = (Math.floorMod(id, 6L) + 2L).toInt
-    val w = (Math.floorMod(id, 5L) + 2L).toInt
-    val h = (Math.floorMod(id, 4L) + 2L).toInt
-    encodeGifFrames(nFrames, w, h) { (f, x, y) =>
-      val b0 = if (f == 0 && x == w - 1 && y == h - 1) bump else 0
-      Math.floorMod(3 * id + 5 * x + 7 * y + 11 * f, 200L).toInt + delta + b0
-    }
+    renderGifShifted(id, delta, bump)
   }
 
   /** Media table of [[synthGifShiftedBumped]] fixtures — the q147
     * drifted-animation input. */
   def synthGifsShiftedBumped(df: DataFrame, idCol: String, delta: Int,
-      bump: Int, idOffset: Long = 0L): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("payload", BinaryType),
-      StructField("meta", mediaMetaSchema))))
-    df.select(col(idCol).cast("long").as("media_id"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          Row(id + idOffset, synthGifShiftedBumped(id, delta, bump),
-            Row("image", "gif", null, null, null))
-        }
-      }(enc)
-  }
+      bump: Int, idOffset: Long = 0L): DataFrame =
+    synthTable(df, idCol, idOffset)(id =>
+      (synthGifShiftedBumped(id, delta, bump), "image", "gif"))
 
   /** Media table of [[synthGifShifted]] fixtures (id offset so originals
     * and shifted twins coexist in one union — the [[synthImagesShifted]]
     * convention on the time axis). */
   def synthGifsShifted(df: DataFrame, idCol: String, delta: Int,
-      idOffset: Long = 0L): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("payload", BinaryType),
-      StructField("meta", mediaMetaSchema))))
-    df.select(col(idCol).cast("long").as("media_id"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          Row(id + idOffset, synthGifShifted(id, delta),
-            Row("image", "gif", null, null, null))
-        }
-      }(enc)
-  }
+      idOffset: Long = 0L): DataFrame =
+    synthTable(df, idCol, idOffset)(id => (synthGifShifted(id, delta), "image", "gif"))
 
   /** Output schema of [[frameSampleReal]]: one row per SAMPLED frame.
     * Real-decoded rows carry frame dimensions + the exact gray sum

@@ -47,14 +47,8 @@ object Streams {
     * (AvailableNow = the daily-batch trigger), writing parquet. */
   def runBronzeOnce(spark: SparkSession, rawZone: String, table: String,
       outDir: String, checkpointDir: String): Unit = {
-    val raw = bronzeStream(spark, rawZone)
-    val shredded = table match {
-      case "playlists" => Bronze.playlists(raw)
-      case "tracks" => Bronze.tracks(raw)
-      case "albums" => Bronze.albums(raw)
-      case "artists" => Bronze.artists(raw)
-      case other => throw new IllegalArgumentException(s"unknown table $other")
-    }
+    val shredded = Bronze.shred(bronzeStream(spark, rawZone)).getOrElse(table,
+      throw new IllegalArgumentException(s"unknown table $table"))
     val q = shredded.writeStream
       .format("parquet")
       .option("path", s"$outDir/$table")
@@ -233,17 +227,22 @@ object Streams {
     * lambda split q133's cap documents. */
   def imageDedupStream(media: DataFrame,
       eventTimeCol: String = "event_time",
-      watermark: String = "10 minutes"): DataFrame = {
-    val hashed = graft.ops.Multimodal.withImageDHash(media)
-    // null hash is NOT a dedup key: non-decodable payloads bypass the
-    // dedup state entirely and pass through (the batch dropSeenImages
-    // contract) — deduping them would collapse every corrupt payload
-    // onto one survivor
-    hashed.filter(col("dhash").isNotNull)
+      watermark: String = "10 minutes"): DataFrame =
+    mediaDedupStream(graft.ops.Multimodal.withImageDHash(media), Seq("dhash"),
+      eventTimeCol, watermark)
+
+  /** The one watermark first-seen-wins dedup of the media twins, keyed on
+    * `keys` of `hashed` (a row's keys are all null or none is). A null key
+    * is NOT a dedup key: non-decodable payloads bypass the dedup state
+    * entirely and pass through (the batch dropSeenImages contract) —
+    * deduping them would collapse every corrupt payload onto one
+    * survivor. */
+  private def mediaDedupStream(hashed: DataFrame, keys: Seq[String],
+      eventTimeCol: String, watermark: String): DataFrame =
+    hashed.filter(col(keys.head).isNotNull)
       .withWatermark(eventTimeCol, watermark)
-      .dropDuplicatesWithinWatermark("dhash")
-      .unionByName(hashed.filter(col("dhash").isNull))
-  }
+      .dropDuplicatesWithinWatermark(keys.head, keys.tail: _*)
+      .unionByName(hashed.filter(col(keys.head).isNull))
 
   /** Streaming PERCEPTUAL audio dedup — [[imageDedupStream]]'s time-axis
     * sibling over [[graft.ops.Multimodal.withAudioPHash]] (15-bit
@@ -257,13 +256,9 @@ object Streams {
     * downstream, or widen the segment count in batch first. */
   def audioDedupStream(media: DataFrame,
       eventTimeCol: String = "event_time",
-      watermark: String = "10 minutes"): DataFrame = {
-    val hashed = graft.ops.Multimodal.withAudioPHash(media)
-    hashed.filter(col("ahash").isNotNull)
-      .withWatermark(eventTimeCol, watermark)
-      .dropDuplicatesWithinWatermark("ahash")
-      .unionByName(hashed.filter(col("ahash").isNull))
-  }
+      watermark: String = "10 minutes"): DataFrame =
+    mediaDedupStream(graft.ops.Multimodal.withAudioPHash(media), Seq("ahash"),
+      eventTimeCol, watermark)
 
   /** Streaming VIDEO-SEQUENCE dedup — [[imageDedupStream]] extended
     * along the time axis over [[graft.ops.Multimodal.withVideoSeqHash]]
@@ -281,13 +276,9 @@ object Streams {
     * unbounded fingerprint history is not bounded-state expressible. */
   def videoDedupStream(media: DataFrame,
       eventTimeCol: String = "event_time",
-      watermark: String = "10 minutes"): DataFrame = {
-    val hashed = graft.ops.Multimodal.withVideoSeqHash(media)
-    hashed.filter(col("h_first").isNotNull)
-      .withWatermark(eventTimeCol, watermark)
-      .dropDuplicatesWithinWatermark("n_frames", "h_first", "h_mid", "h_last")
-      .unionByName(hashed.filter(col("h_first").isNull))
-  }
+      watermark: String = "10 minutes"): DataFrame =
+    mediaDedupStream(graft.ops.Multimodal.withVideoSeqHash(media),
+      Seq("n_frames", "h_first", "h_mid", "h_last"), eventTimeCol, watermark)
 
   /** Stateless streaming multi-class PII scrub — the continuous-ingest
     * twin of [[graft.ops.Pii.scrub]]: the identical per-row

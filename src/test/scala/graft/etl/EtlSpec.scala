@@ -1,7 +1,6 @@
 package graft.etl
 
 import graft.GraftSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -205,26 +204,10 @@ class EtlSpec extends AnyFunSuite {
     (r.getLong(0), Option(r.getDecimal(1)).map(BigDecimal(_)).getOrElse(BigDecimal(0)))
   }
 
-  /** Jobs started under a job group of its own while `body` runs. */
-  def jobsOf[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val group = s"etlspec-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (j.properties != null &&
-            j.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
-    }
-    // listenerBus/waitUntilEmpty are private[spark] = JVM-public
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    val drain = bus.getClass.getMethod("waitUntilEmpty")
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "EtlSpec", interruptOnCancel = false)
-      val a = try body finally sc.clearJobGroup()
-      drain.invoke(bus)
-      (a, jobs.get)
-    } finally sc.removeSparkListener(l)
+  /** Jobs started while `body` runs. */
+  def jobsOf[A](body: => A): (A, Long) = {
+    val (a, counters) = graft.tools.Probe(spark).measure(body)
+    (a, counters.jobs)
   }
 
   def persistedRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
@@ -237,9 +220,16 @@ class EtlSpec extends AnyFunSuite {
     val viaCompose = Pipeline.compose(spark, rawPath)
     assert(viaRun.keySet == viaCompose.keySet)
     assert(viaRun.size == 8)
-    // parquet makes every column nullable on write; compose keeps e.g. the
-    // coalesced playlist_description non-nullable
+    // parquet makes every column nullable on write; compose keeps the
+    // coalesced playlist_description non-nullable, and that is the only
+    // nullability the two paths disagree on
     def nullable(s: StructType) = StructType(s.fields.map(_.copy(nullable = true)))
+    val nullabilityDiffers = for {
+      (t, c) <- viaCompose.toSeq
+      f <- c.schema.fields if viaRun(t).schema(f.name).nullable != f.nullable
+    } yield (t, f.name)
+    assert(nullabilityDiffers.sorted == Seq(
+      "dim_playlists" -> "playlist_description", "stg_playlists" -> "playlist_description"))
     viaCompose.foreach { case (t, c) =>
       assert(viaRun(t).schema == nullable(c.schema), s"$t schema")
       assert(viaRun(t).schema == Zones.readParquet(spark, s"$out/gold/$t").schema,
@@ -303,13 +293,13 @@ class EtlSpec extends AnyFunSuite {
     val rows = spark.range(0, 40, 1, 4).select(col("id"), (col("id") * 2).as("v"))
     Zones.writeParquet(rows, s"$out/parquet")
     Zones.write(rows, s"$out/csv", "csv")
-    Zones.writeRawJson(rows, s"$out/json")
+    Zones.write(rows, s"$out/json", "json")
     val cases = Seq[(String, () => Unit)](
       "parquet" -> (() => Zones.writeParquet(spark.read.parquet(s"$out/parquet"), s"$out/parquet")),
       "csv" -> (() => Zones.write(Zones.read(spark, s"$out/csv", "csv", rows.schema),
         s"$out/csv", "csv")),
-      "json" -> (() => Zones.writeRawJson(spark.read.schema(rows.schema).json(s"$out/json"),
-        s"$out/json")))
+      "json" -> (() => Zones.write(spark.read.schema(rows.schema).json(s"$out/json"),
+        s"$out/json", "json")))
     for ((dir, overwrite) <- cases) {
       val before = partFiles(s"$out/$dir")
       intercept[IllegalArgumentException](overwrite())

@@ -44,7 +44,7 @@ class SchemeTransparencySpec extends AnyFunSuite {
     assert(Zones.readParquet(spark, s"$base/single").count() == 3)
 
     // K1/K2: raw JSON landing
-    Zones.writeRawJson(df, s"$base/raw")
+    Zones.write(df, s"$base/raw", "json")
     assert(spark.read.json(s"$base/raw").count() == 3)
 
     // a hand-off of an unchanged read-back copies its files: both

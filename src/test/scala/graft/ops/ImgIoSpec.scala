@@ -58,6 +58,24 @@ class ImgIoSpec extends AnyFunSuite {
         }
         pngViaRegistry(img)
       }), s"PNG byte mismatch at id=$id")
+      val w = (Math.floorMod(id, 7L) + 2L).toInt
+      val h = (Math.floorMod(id, 5L) + 2L).toInt
+      def shifted(delta: Int, bump: Int) = {
+        val img = new java.awt.image.BufferedImage(
+          w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
+        for (y <- 0 until h; x <- 0 until w) {
+          val b0 = if (x == w - 1 && y == h - 1) bump else 0
+          val r = Math.floorMod(3 * id + 5 * x + 7 * y, 200L).toInt + delta + b0
+          val g = Math.floorMod(11 * id + 13 * x + 17 * y, 200L).toInt + delta + b0
+          val b = Math.floorMod(19 * id + 23 * x + 29 * y, 200L).toInt + delta + b0
+          img.setRGB(x, y, (r << 16) | (g << 8) | b)
+        }
+        pngViaRegistry(img)
+      }
+      assert(java.util.Arrays.equals(Multimodal.synthPngShifted(id, 15), shifted(15, 0)),
+        s"shifted PNG byte mismatch at id=$id")
+      assert(java.util.Arrays.equals(Multimodal.synthPngShiftedBumped(id, 20, 30),
+        shifted(20, 30)), s"bumped PNG byte mismatch at id=$id")
     }
   }
 

@@ -558,6 +558,53 @@ class OpsSpec extends AnyFunSuite {
       ceil((pmod(col("media_id"), lit(17L)) + 3L) / 4.0).cast("long")).count() == 0)
   }
 
+  test("synth media tables: media_id + offset, the renderer's bytes, its meta") {
+    val spark2 = spark
+    import spark2.implicits._
+    import org.apache.spark.sql.types._
+    val ids = (0L until 64L).toDF("doc_id")
+    def junk(id: Long) = Array.fill((Math.floorMod(id, 17L) + 3L).toInt)(
+      (Math.floorMod(id, 199L) + 1L).toByte)
+    val (png, wav, gif, bin) =
+      (("image", "png"), ("audio", "wav"), ("image", "gif"), ("video", "bin"))
+    val M = Multimodal
+    val cases = Seq[(String, org.apache.spark.sql.DataFrame, Long,
+        Long => (Array[Byte], (String, String)))](
+      ("synthImages", M.synthImages(ids, "doc_id"), 0L, id => (M.synthPng(id), png)),
+      ("synthImagesShifted", M.synthImagesShifted(ids, "doc_id", 15, 1000L), 1000L,
+        id => (M.synthPngShifted(id, 15), png)),
+      ("synthImagesShiftedBumped", M.synthImagesShiftedBumped(ids, "doc_id", 20, 30, 2000L),
+        2000L, id => (M.synthPngShiftedBumped(id, 20, 30), png)),
+      ("synthAudio", M.synthAudio(ids, "doc_id"), 0L, id => (M.synthWav(id), wav)),
+      ("synthAudioSigned", M.synthAudioSigned(ids, "doc_id", -1, 3000L), 3000L,
+        id => (M.synthWavSigned(id, -1), wav)),
+      ("synthAudioBumped", M.synthAudioBumped(ids, "doc_id", 7, 4000L), 4000L,
+        id => (M.synthWavBumped(id, 7), wav)),
+      ("synthGifsShifted", M.synthGifsShifted(ids, "doc_id", 15, 5000L), 5000L,
+        id => (M.synthGifShifted(id, 15), gif)),
+      ("synthGifsShiftedBumped", M.synthGifsShiftedBumped(ids, "doc_id", 20, 30, 6000L),
+        6000L, id => (M.synthGifShiftedBumped(id, 20, 30), gif)),
+      ("synthMixed", M.synthMixed(ids, "doc_id"), 0L, id => Math.floorMod(id, 3L) match {
+        case 0L => (M.synthPng(id), png)
+        case 1L => (M.synthWav(id), wav)
+        case _ => (junk(id), bin)
+      }),
+      ("synthFrameMedia", M.synthFrameMedia(ids, "doc_id"), 0L, id =>
+        if (Math.floorMod(id, 2L) == 0L) (M.synthGif(id), gif) else (junk(id), bin)))
+    val schema = StructType(Seq(StructField("media_id", LongType),
+      StructField("payload", BinaryType), StructField("meta", M.mediaMetaSchema)))
+    for ((name, table, offset, render) <- cases) {
+      assert(table.schema == schema, name)
+      val got = table.collect().map(r =>
+        (r.getLong(0), r.getAs[Array[Byte]](1).toSeq, r.getStruct(2).toSeq)).sortBy(_._1).toSeq
+      val want = (0L until 64L).map { id =>
+        val (bytes, (mediaType, format)) = render(id)
+        (id + offset, bytes.toSeq, Seq(mediaType, format, null, null, null))
+      }
+      assert(got == want, name)
+    }
+  }
+
   test("hammingNearDupPairs: pigeonhole recall law, exact verify, loud bucket guard") {
     val spark2 = spark
     import spark2.implicits._

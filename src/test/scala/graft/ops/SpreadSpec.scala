@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.GraftSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,17 +11,9 @@ class SpreadSpec extends AnyFunSuite {
 
   /** Counts Spark jobs started while `body` runs — the df.rdd hazard
     * this spec pins is "deciding whether to spread EXECUTES stages". */
-  private def jobsDuring[A](body: => A): (A, Int) = {
-    @volatile var jobs = 0
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val a = body
-      Thread.sleep(500) // listener bus is async; let events drain
-      (a, jobs)
-    } finally spark.sparkContext.removeSparkListener(l)
+  private def jobsDuring[A](body: => A): (A, Long) = {
+    val (a, counters) = graft.tools.Probe(spark).measure(body)
+    (a, counters.jobs)
   }
 
   test("toCores spreads a narrow single-row-group scan to the core count") {

@@ -48,6 +48,31 @@ class WavIoSpec extends AnyFunSuite {
     }
   }
 
+  test("synthWavSigned and synthWavBumped write the sample formula's PCM") {
+    val rates = Array(8000f, 11025f, 16000f, 22050f)
+    def fromFormula(id: Long)(sample: (Int, Int, Int) => Int): Array[Byte] = {
+      val channels = (Math.floorMod(id, 2L) + 1L).toInt
+      val nFrames = (Math.floorMod(id, 50L) + 20L).toInt
+      val m = Math.floorMod(id, 256L).toInt
+      val data = new Array[Byte](nFrames * channels * 2)
+      for (i <- 0 until nFrames; ch <- 0 until channels) {
+        val s = sample(m, i, ch)
+        data((i * channels + ch) * 2) = (s & 0xff).toByte
+        data((i * channels + ch) * 2 + 1) = ((s >> 8) & 0xff).toByte
+      }
+      WavIo.writeCanonical(data, rates(Math.floorMod(id, 4L).toInt), channels)
+    }
+    for (id <- 0L until 1600L) {
+      assert(java.util.Arrays.equals(Multimodal.synthWavSigned(id, -1),
+        fromFormula(id)((m, i, ch) => -((7 * m + 13 * i + 31 * ch) % 201 - 100))),
+        s"inverted WAV byte mismatch at id=$id")
+      assert(java.util.Arrays.equals(Multimodal.synthWavBumped(id, 7),
+        fromFormula(id)((m, i, ch) =>
+          (7 * m + 13 * i + 31 * ch) % 201 - 100 + (if (i == 0) 7 else 0))),
+        s"bumped WAV byte mismatch at id=$id")
+    }
+  }
+
   test("synth fixtures parse back through the fast path with the JDK's values") {
     for (id <- 0L until 512L) {
       val wav = Multimodal.synthWav(id)

@@ -40,6 +40,9 @@ class StreamingSpec extends AnyFunSuite {
     val batch = Bronze.tracks(Bronze.readRaw(spark, rawDir.toString))
     assert(streamed.orderBy("playlist_id").collect().toSeq ==
       batch.orderBy("playlist_id").collect().toSeq)
+    val unknown = intercept[IllegalArgumentException](
+      Streams.runBronzeOnce(spark, rawDir.toString, "tracklist", out, ckpt))
+    assert(unknown.getMessage == "unknown table tracklist")
   }
 
   test("windowed counts with watermark over the events table") {
