@@ -1,76 +1,46 @@
 package graft.functions
 
-import org.apache.spark.sql.Encoder
-import org.apache.spark.sql.expressions.Aggregator
+import scala.reflect.runtime.universe.TypeTag
 
-/** Typed `Aggregator` keeping the k (key, id) pairs with the SMALLEST
-  * keys per group — the ascending sibling of [[TopKAggregator]], used by
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+
+/** [[Summary]] keeping the k (key, id) pairs with the SMALLEST keys per
+  * group — the ascending sibling of [[TopKAggregator]], used by
   * [[graft.ops.Sampling.uniformExactKPerGroup]] for hash-order-statistic
-  * sampling: each map task keeps ≤k pairs per group (partial
-  * aggregation), the reduce side k-way-merges them, so the group shuffle
-  * carries at most k·groups rows and NO group is ever sorted whole. The
-  * window formulation (`row_number` over `orderBy(key)`) is
-  * result-identical but sorts every group's full row set — with
-  * million-row groups that sort spills where this buffer cannot (it is
-  * k pairs, period).
+  * sampling and by [[graft.ops.Curation.capPerGroupBounded]]: each map
+  * task keeps ≤k pairs per group (partial aggregation), the reduce side
+  * k-way-merges them, so the group shuffle carries at most k·groups rows
+  * and NO group is ever sorted whole. The window formulation
+  * (`row_number` over `orderBy(key)`) is result-identical but sorts every
+  * group's full row set — with million-row groups that sort spills where
+  * this buffer cannot (it is k pairs, period).
   *
   * Keys are expected distinct within a group (the sampling hash is a
   * bijection); (key, id) ordering makes the buffer total either way, so
-  * the result is deterministic under any partitioning or merge order. */
-class BottomKAggregator(k: Int)
-    extends Aggregator[(Long, Long), Seq[(Long, Long)], Seq[(Long, Long)]] {
+  * the result is deterministic under any partitioning or merge order.
+  * The id is a long, or a string ranked on `(xxhash64(id), id)`: the raw
+  * id only decides on a 64-bit hash collision between two distinct ids,
+  * where Java-lexicographic vs UTF-8-byte order divergence (non-BMP code
+  * points) is a 2^-64-scale event per colliding pair; the keep set is
+  * deterministic either way. */
+class BottomKAggregator[ID: Ordering: TypeTag](k: Int)
+    extends Summary[(Long, ID), Seq[(Long, ID)], Seq[(Long, ID)]](
+      ExpressionEncoder[(Long, ID)](), ExpressionEncoder[Seq[(Long, ID)]](),
+      ExpressionEncoder[Seq[(Long, ID)]]()) {
   require(k >= 1, "bottom-k needs k >= 1")
 
-  override def zero: Seq[(Long, Long)] = Vector.empty
+  override def zero: Seq[(Long, ID)] = Vector.empty
 
-  private def trim(buf: Seq[(Long, Long)]): Seq[(Long, Long)] =
+  private def trim(buf: Seq[(Long, ID)]): Seq[(Long, ID)] =
     buf.sorted.take(k)
 
-  override def reduce(buf: Seq[(Long, Long)], in: (Long, Long)): Seq[(Long, Long)] =
+  override def add(buf: Seq[(Long, ID)], in: (Long, ID)): Seq[(Long, ID)] =
     // skip the sort while the buffer is not full-and-beaten: the common
     // row is ABOVE the current k-th key and never enters the buffer
     if (buf.size >= k && in._1 > buf.last._1) buf else trim(buf :+ in)
 
-  override def merge(a: Seq[(Long, Long)], b: Seq[(Long, Long)]): Seq[(Long, Long)] =
+  override def merge(a: Seq[(Long, ID)], b: Seq[(Long, ID)]): Seq[(Long, ID)] =
     trim(a ++ b)
 
-  override def finish(buf: Seq[(Long, Long)]): Seq[(Long, Long)] = trim(buf)
-
-  override def bufferEncoder: Encoder[Seq[(Long, Long)]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[(Long, Long)]]()
-
-  override def outputEncoder: Encoder[Seq[(Long, Long)]] = bufferEncoder
-}
-
-/** [[BottomKAggregator]] over (long key, STRING id) pairs — the
-  * non-integral-id path of [[graft.ops.Curation.capPerGroupBounded]]:
-  * string doc ids rank on `(xxhash64(id), id)` (the key is the hash, the
-  * raw id breaks 64-bit collisions), so the buffer stays k pairs per
-  * group with the same bounded-shuffle contract while the EXACT id rides
-  * along for the payload semi join. Pair ordering is Scala's (Long,
-  * String) tuple order — the String leg only decides on a hash collision
-  * between two distinct ids, where Java-lexicographic vs UTF-8-byte
-  * order divergence (non-BMP code points) is a 2^-64-scale event per
-  * colliding pair; the keep set is deterministic either way. */
-class BottomKStrAggregator(k: Int)
-    extends Aggregator[(Long, String), Seq[(Long, String)], Seq[(Long, String)]] {
-  require(k >= 1, "bottom-k needs k >= 1")
-
-  override def zero: Seq[(Long, String)] = Vector.empty
-
-  private def trim(buf: Seq[(Long, String)]): Seq[(Long, String)] =
-    buf.sorted.take(k)
-
-  override def reduce(buf: Seq[(Long, String)], in: (Long, String)): Seq[(Long, String)] =
-    if (buf.size >= k && in._1 > buf.last._1) buf else trim(buf :+ in)
-
-  override def merge(a: Seq[(Long, String)], b: Seq[(Long, String)]): Seq[(Long, String)] =
-    trim(a ++ b)
-
-  override def finish(buf: Seq[(Long, String)]): Seq[(Long, String)] = trim(buf)
-
-  override def bufferEncoder: Encoder[Seq[(Long, String)]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[(Long, String)]]()
-
-  override def outputEncoder: Encoder[Seq[(Long, String)]] = bufferEncoder
+  override def finish(buf: Seq[(Long, ID)]): Seq[(Long, ID)] = trim(buf)
 }

@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.Encoder
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 
-/** Misra–Gries heavy-hitters summary as a typed `Aggregator`: find the
+/** Misra–Gries heavy-hitters summary as a [[Summary]]: find the
   * frequent tokens of a corpus WITHOUT shuffling the full distinct-token
   * space. An exact `groupBy(token).count().orderBy(...)` shuffles one row
   * per distinct token — at web scale that is 10^9–10^10 rows of shuffle
@@ -35,14 +35,17 @@ import org.apache.spark.sql.expressions.Aggregator
   * decrement amortizes to O(1) per item (each decrement pays for k
   * prior insertions). Spark keeps the buffer as a live object within a
   * partition and serializes only at the exchange, so the per-row cost
-  * is the map update, not an encode/decode. */
+  * is the map update, not an encode/decode. Its roll-up IS the merge, so
+  * rolling up k-summaries of streams S₁…Sₘ yields a valid k-summary of
+  * their concatenation (undercount ≤ |S₁…Sₘ|/(k+1)). */
 class MisraGriesAggregator(k: Int)
-    extends Aggregator[String, Map[String, Long], Map[String, Long]] {
+    extends Summary[String, Map[String, Long], Map[String, Long]](Encoders.STRING,
+      ExpressionEncoder[Map[String, Long]](), ExpressionEncoder[Map[String, Long]]()) {
   require(k >= 1, "summary capacity must be >= 1")
 
   override def zero: Map[String, Long] = Map.empty
 
-  override def reduce(buf: Map[String, Long], tok: String): Map[String, Long] =
+  override def add(buf: Map[String, Long], tok: String): Map[String, Long] =
     buf.get(tok) match {
       case Some(c) => buf.updated(tok, c + 1L)
       case None if buf.size < k => buf.updated(tok, 1L)
@@ -100,30 +103,4 @@ class MisraGriesAggregator(k: Int)
     }
     vals(target)
   }
-
-  override def finish(buf: Map[String, Long]): Map[String, Long] = buf
-
-  override def bufferEncoder: Encoder[Map[String, Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Map[String, Long]]()
-
-  override def outputEncoder: Encoder[Map[String, Long]] = bufferEncoder
-}
-
-/** Roll-up twin of [[MisraGriesAggregator]]: merges EXISTING summaries
-  * (per-shard, per-window) into one with the same capacity — `reduce`
-  * IS the summary merge, so the mergeable-summary bound composes:
-  * merging summaries of streams S₁…Sₘ yields a valid k-summary of
-  * their concatenation (undercount ≤ |S₁…Sₘ|/(k+1)). The heavy-hitters
-  * analogue of [[graft.ops.Hll]]'s sketch-merge roll-up. */
-class MisraGriesMergeAggregator(k: Int)
-    extends Aggregator[Map[String, Long], Map[String, Long], Map[String, Long]] {
-  private val mg = new MisraGriesAggregator(k)
-  override def zero: Map[String, Long] = Map.empty
-  override def reduce(buf: Map[String, Long], in: Map[String, Long]): Map[String, Long] =
-    mg.merge(buf, if (in == null) Map.empty else in)
-  override def merge(a: Map[String, Long], b: Map[String, Long]): Map[String, Long] =
-    mg.merge(a, b)
-  override def finish(buf: Map[String, Long]): Map[String, Long] = buf
-  override def bufferEncoder: Encoder[Map[String, Long]] = mg.bufferEncoder
-  override def outputEncoder: Encoder[Map[String, Long]] = mg.bufferEncoder
 }

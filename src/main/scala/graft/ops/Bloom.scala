@@ -1,9 +1,8 @@
 package graft.ops
 
-import graft.functions.{BloomBits, NativeFunctions}
-import org.apache.spark.sql.{Column, DataFrame, Encoder}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions._
+import graft.functions.{BloomBits, NativeFunctions, Summary}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 
 /** Bloom-filter prefilter for decontamination-shaped problems: build a
   * compact bit set from the SMALL side (an eval/benchmark suite), then
@@ -12,7 +11,7 @@ import org.apache.spark.sql.functions._
   * even sees a broadcast exchange, and the surviving ~0.1% goes on to the
   * exact check ([[Dedup.contaminationPairs]] or an equality join).
   *
-  * The build itself is DISTRIBUTED: a typed [[Aggregator]] whose buffer is
+  * The build itself is DISTRIBUTED: a [[graft.functions.Summary]] whose buffer is
   * the bit array (reduce = set bits, merge = bitwise OR — a commutative
   * monoid, so map-side partial aggregation applies and the driver receives
   * exactly ONE array, never the keys). An eval side of 100M rows builds in
@@ -40,20 +39,17 @@ object Bloom {
   /** Distributed bloom build: one pass over `keys`, map-side partial bit
     * arrays OR-merged up the tree, one array row collected. */
   private class BloomAggregator(numBits: Int, k: Int)
-      extends Aggregator[Long, Array[Long], Array[Long]] {
+      extends Summary[java.lang.Long, Array[Long], Array[Long]](Encoders.LONG,
+        ExpressionEncoder[Array[Long]](), ExpressionEncoder[Array[Long]]()) {
     override def zero: Array[Long] = new Array[Long](numBits >>> 6)
-    override def reduce(buf: Array[Long], key: Long): Array[Long] = {
-      BloomBits.set(buf, key, k); buf
+    override def add(buf: Array[Long], key: java.lang.Long): Array[Long] = {
+      BloomBits.set(buf, key.longValue(), k); buf
     }
     override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
       var i = 0
       while (i < a.length) { a(i) |= b(i); i += 1 }
       a
     }
-    override def finish(buf: Array[Long]): Array[Long] = buf
-    override def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    override def outputEncoder: Encoder[Array[Long]] = bufferEncoder
   }
 
   /** Build the bit array from a long key column of `df` (runs a Spark job
@@ -64,12 +60,7 @@ object Bloom {
       numBits: Int = DefaultNumBits, k: Int = DefaultK): Array[Long] = {
     require(numBits >= 64 && (numBits & (numBits - 1)) == 0,
       "numBits must be a power of two >= 64")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val keys = df.select(keyCol.cast("long")).filter(keyCol.isNotNull).as[Long]
-    val agg = new BloomAggregator(numBits, k).toColumn
-    val rows = keys.select(agg).collect()
-    if (rows.isEmpty) new Array[Long](numBits >>> 6) else rows.head
+    new BloomAggregator(numBits, k).collect(df, keyCol.cast("long"))
   }
 
   /** Convenience: build from a TEXT column keyed by the engine-independent

@@ -69,6 +69,12 @@ object CorpusStats {
       .groupBy("pair")
       .agg(count(lit(1)).as("cnt"))
 
+  /** One trained merge: the pair (a, b), its pre-merge corpus frequency,
+    * and the corpus token count after applying it. `a`/`b` are kept as
+    * SEPARATE tokens (merged tokens contain spaces, so the space-joined
+    * rendering is ambiguous as an input to further processing). */
+  case class BpeMerge(a: String, b: String, cnt: Long, nTokensAfter: Long)
+
   /** Iterative BPE merge trainer: `rounds` rounds of (count adjacent
     * pairs → pick the most frequent → greedily merge it corpus-wide).
     * Extends the one counting round of [[bigramCounts]] into the full
@@ -107,17 +113,15 @@ object CorpusStats {
     * set `checkpointEvery` low, at vocabulary-budget round counts the
     * scheduling latency dominates and the default is right). Round
     * count is the vocabulary budget (k merges), not data-sized. */
-  /** One trained merge: the pair (a, b), its pre-merge corpus frequency,
-    * and the corpus token count after applying it. `a`/`b` are kept as
-    * SEPARATE tokens (merged tokens contain spaces, so the space-joined
-    * rendering is ambiguous as an input to further processing). */
-  case class BpeMerge(a: String, b: String, cnt: Long, nTokensAfter: Long)
-
   def bpeTrain(docs: DataFrame, textCol: String, rounds: Int,
-      tokenizer: Column => Column = TextOps.tokens): DataFrame = {
+      tokenizer: Column => Column = TextOps.tokens): DataFrame =
+    renderMerges(docs, bpeMerges(docs, textCol, rounds, tokenizer))
+
+  /** One row per trained merge: `(round, pair, cnt, n_tokens_after)`. */
+  private def renderMerges(docs: DataFrame, merges: Seq[BpeMerge]): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    bpeMerges(docs, textCol, rounds, tokenizer).zipWithIndex
+    merges.zipWithIndex
       .map { case (m, i) => (i + 1, m.a + " " + m.b, m.cnt, m.nTokensAfter) }
       .toDF("round", "pair", "cnt", "n_tokens_after")
   }
@@ -151,56 +155,63 @@ object CorpusStats {
     * is the per-job-latency floor for a faithful trainer. */
   def bpeMerges(docs: DataFrame, textCol: String, rounds: Int,
       tokenizer: Column => Column = TextOps.tokens,
-      checkpointEvery: Int = 16): Seq[BpeMerge] = {
+      checkpointEvery: Int = 16): Seq[BpeMerge] =
+    trainMerges[(String, String)](docs, textCol, rounds, checkpointEvery, tokenizer,
+      (c, m) => graft.functions.NativeFunctions.graft_bpe_merge(c, m._1, m._2),
+      (x, y) => struct(x.as("l"), y.as("r")),
+      (pairs, _) => pairs.groupBy(col("p.l").as("l"), col("p.r").as("r"))
+        .agg(count(lit(1)).as("cnt"))
+        .orderBy(desc("cnt"), asc("l"), asc("r")),
+      (row, _) => {
+        val (a, b) = (row.getString(0), row.getString(1))
+        ((a, b), BpeMerge(a, b, row.getLong(2), -1L))
+      })
+
+  /** The trainer's control loop ([[bpeTrain]] gives its job shape),
+    * shared by the string and the byte-id representations. One gives its
+    * tokenizer, the merge expression of one pending merge `M`, the pair
+    * expression of two adjacent tokens, the pair count ordered best-first
+    * over the exploded pairs `p`, and the decode of the top row (given
+    * the merges so far). The TOKENIZED corpus is checkpointed once up
+    * front: tokenization costs more than a merge pass (measured: q87
+    * 3.05s re-tokenizing every round vs 2.6s). */
+  private def trainMerges[M](docs: DataFrame, textCol: String, rounds: Int,
+      checkpointEvery: Int, tokenizer: Column => Column,
+      merge: (Column, M) => Column, pair: (Column, Column) => Column,
+      rank: (DataFrame, Seq[BpeMerge]) => DataFrame,
+      decode: (Row, Seq[BpeMerge]) => (M, BpeMerge)): Seq[BpeMerge] = {
     require(rounds >= 1, "bpeTrain needs at least one merge round")
     require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
-    val spark = docs.sparkSession
-    // `base` + `pending` define the current corpus: the merges since the
-    // last checkpoint stay UNMATERIALIZED, composed as nested compiled
-    // merge expressions over `base` — one job per round, not two. The
-    // TOKENIZED corpus is checkpointed once up front: tokenization
-    // (especially byte-level) costs more than a merge pass, and without
-    // this every round would re-tokenize from text (measured: q87
-    // 3.05s re-tokenizing vs 2.6s with the old per-round checkpoints —
-    // the job-count win must not buy a compute regression)
     var base: DataFrame =
       docs.select(tokenizer(col(textCol)).as("toks")).localCheckpoint()
-    var ck: Option[DataFrame] = Some(base)
-    var pending = Vector.empty[(String, String)]
-    def corpus: DataFrame = base.select(
-      pending.foldLeft(col("toks")) { case (c, (a, b)) =>
-        graft.functions.NativeFunctions.graft_bpe_merge(c, a, b)
-      }.as("toks"))
+    var pending = Vector.empty[M]
+    def corpus: DataFrame = base.select(pending.foldLeft(col("toks"))(merge).as("toks"))
     def countTokens(row: Row): Long = if (row.isNullAt(0)) 0L else row.getLong(0)
     val out = scala.collection.mutable.ArrayBuffer.empty[BpeMerge]
-    var r = 1
     var exhausted = false
-    while (r <= rounds && !exhausted) {
+    while (out.size < rounds && !exhausted) {
       if (pending.size >= checkpointEvery) {
         // bound the re-apply depth: materialize the composed corpus
         // (one extra job every checkpointEvery rounds), release the
         // superseded checkpoint's blocks
         val fresh = corpus.localCheckpoint()
-        ck.foreach(Iterative.release)
-        ck = Some(fresh); base = fresh; pending = Vector.empty
+        Iterative.release(base)
+        base = fresh; pending = Vector.empty
       }
       // one job: the pair-count agg scans the composed corpus, and the
       // PREVIOUS merge's post-merge token count rides it as an observed
       // metric (the CC-convergence trick) — the token sum sees the
       // corpus BELOW the >=2-token filter, i.e. the true total
-      val name = s"bpe_scan_$r"
+      val name = s"bpe_scan_${out.size + 1}"
       val frame = corpus.observe(name,
         sum(size(col("toks")).cast("long")).as("n_tokens"))
-      val top = frame.where(size(col("toks")) >= 2)
+      val pairs = frame.where(size(col("toks")) >= 2)
         .select(explode(
           zip_with(
             slice(col("toks"), lit(1), size(col("toks")) - 1),
             slice(col("toks"), lit(2), size(col("toks")) - 1),
-            (x, y) => struct(x.as("l"), y.as("r")))).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(count(lit(1)).as("cnt"))
-        .orderBy(desc("cnt"), asc("l"), asc("r"))
-        .limit(1)
+            pair)).as("p"))
+      val top = rank(pairs, out.toSeq).limit(1)
       val rows = top.collect()
       if (out.nonEmpty && out.last.nTokensAfter < 0) {
         val m = top.queryExecution.observedMetrics(name)
@@ -208,11 +219,9 @@ object CorpusStats {
       }
       if (rows.isEmpty) exhausted = true // no doc has 2 tokens left
       else {
-        val (a, b, cnt) =
-          (rows(0).getString(0), rows(0).getString(1), rows(0).getLong(2))
-        pending :+= ((a, b))
-        out += BpeMerge(a, b, cnt, -1L) // count observed on the next scan
-        r += 1
+        val (m, trained) = decode(rows(0), out.toSeq)
+        pending :+= m
+        out += trained // nTokensAfter observed on the next scan
       }
     }
     // the last merge's post-merge count has no next scan to ride —
@@ -221,7 +230,7 @@ object CorpusStats {
       val last = corpus.agg(sum(size(col("toks")).cast("long"))).head()
       out(out.size - 1) = out.last.copy(nTokensAfter = countTokens(last))
     }
-    ck.foreach(Iterative.release)
+    Iterative.release(base)
     out.toSeq
   }
 
@@ -255,98 +264,44 @@ object CorpusStats {
     * that point on while this path keeps them distinct. BpeSpec pins
     * path equality on the real corpus family.
     *
-    * Job shape per round matches [[bpeMerges]]: one pair-agg job
-    * carrying the previous round's token count as an observed metric,
-    * nested unmaterialized merges over the tokenized checkpoint,
-    * re-checkpoint every `checkpointEvery` rounds. */
+    * It runs [[bpeMerges]]'s loop, so the jobs per round are the same. */
   def bpeMergesBytes(docs: DataFrame, textCol: String, rounds: Int,
       checkpointEvery: Int = 16): Seq[BpeMerge] = {
-    require(rounds >= 1, "bpeTrain needs at least one merge round")
     require(rounds < (1 << 21) - 258, "merge ids must stay below 2^21")
-    require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
-    val spark = docs.sparkSession
-    var base: DataFrame = docs.select(graft.functions.NativeFunctions
-      .graft_byte_token_ids(col(textCol)).as("toks")).localCheckpoint()
-    var ck: Option[DataFrame] = Some(base)
-    var pending = Vector.empty[(Int, Int, Int)] // (a, b, newId)
-    val mergeRender = scala.collection.mutable.ArrayBuffer.empty[String]
-    def corpus: DataFrame = base.select(
-      pending.foldLeft(col("toks")) { case (c, (a, b, nid)) =>
-        graft.functions.NativeFunctions.graft_bpe_merge_ids(c, a, b, nid)
-      }.as("toks"))
-    // decimal for byte ids, the marker for 256, the accumulated
-    // space-joined rendering for merge ids — evaluated only on
+    // decimal for byte ids, the marker for 256, the space-joined
+    // rendering of merge r for id 257 + r — evaluated only on
     // distinct-pair rows after the aggregation
-    def renderCol(idc: Column): Column = {
+    def renderCol(idc: Column, done: Seq[BpeMerge]): Column = {
       val baseR = when(idc === 256, lit("</w>")).otherwise(idc.cast("string"))
-      mergeRender.zipWithIndex.foldLeft(baseR) { case (acc, (s, i)) =>
-        when(idc === lit(257 + i), lit(s)).otherwise(acc)
+      done.zipWithIndex.foldLeft(baseR) { case (acc, (m, i)) =>
+        when(idc === lit(257 + i), lit(m.a + " " + m.b)).otherwise(acc)
       }
     }
-    def countTokens(row: Row): Long = if (row.isNullAt(0)) 0L else row.getLong(0)
-    val out = scala.collection.mutable.ArrayBuffer.empty[BpeMerge]
-    var r = 1
-    var exhausted = false
-    while (r <= rounds && !exhausted) {
-      if (pending.size >= checkpointEvery) {
-        val fresh = corpus.localCheckpoint()
-        ck.foreach(Iterative.release)
-        ck = Some(fresh); base = fresh; pending = Vector.empty
-      }
-      val name = s"bpe_scan_$r"
-      val frame = corpus.observe(name,
-        sum(size(col("toks")).cast("long")).as("n_tokens"))
-      val top = frame.where(size(col("toks")) >= 2)
-        .select(explode(
-          zip_with(
-            slice(col("toks"), lit(1), size(col("toks")) - 1),
-            slice(col("toks"), lit(2), size(col("toks")) - 1),
-            (x, y) => x.cast("long") * lit(2097152L) + y.cast("long"))).as("pk"))
-        .groupBy("pk")
+    trainMerges[(Int, Int, Int)](docs, textCol, rounds, checkpointEvery,
+      graft.functions.NativeFunctions.graft_byte_token_ids,
+      (c, m) => graft.functions.NativeFunctions.graft_bpe_merge_ids(c, m._1, m._2, m._3),
+      (x, y) => x.cast("long") * lit(2097152L) + y.cast("long"),
+      (pairs, done) => pairs.groupBy("p")
         .agg(count(lit(1)).as("cnt"))
         .select(
-          shiftright(col("pk"), 21).cast("int").as("l_id"),
-          pmod(col("pk"), lit(2097152L)).cast("int").as("r_id"),
+          shiftright(col("p"), 21).cast("int").as("l_id"),
+          pmod(col("p"), lit(2097152L)).cast("int").as("r_id"),
           col("cnt"))
-        .withColumn("l", renderCol(col("l_id")))
-        .withColumn("r", renderCol(col("r_id")))
-        .orderBy(desc("cnt"), asc("l"), asc("r"))
-        .limit(1)
-      val rows = top.collect()
-      if (out.nonEmpty && out.last.nTokensAfter < 0) {
-        val m = top.queryExecution.observedMetrics(name)
-        out(out.size - 1) = out.last.copy(nTokensAfter = countTokens(m))
-      }
-      if (rows.isEmpty) exhausted = true
-      else {
-        val row = rows(0)
-        val (aId, rId) = (row.getAs[Int]("l_id"), row.getAs[Int]("r_id"))
-        val (aS, bS, cnt) = (row.getAs[String]("l"), row.getAs[String]("r"),
-          row.getAs[Long]("cnt"))
-        pending :+= ((aId, rId, 257 + mergeRender.size))
-        mergeRender += (aS + " " + bS)
-        out += BpeMerge(aS, bS, cnt, -1L)
-        r += 1
-      }
-    }
-    if (out.nonEmpty && out.last.nTokensAfter < 0) {
-      val last = corpus.agg(sum(size(col("toks")).cast("long"))).head()
-      out(out.size - 1) = out.last.copy(nTokensAfter = countTokens(last))
-    }
-    ck.foreach(Iterative.release)
-    out.toSeq
+        .withColumn("l", renderCol(col("l_id"), done))
+        .withColumn("r", renderCol(col("r_id"), done))
+        .orderBy(desc("cnt"), asc("l"), asc("r")),
+      (row, done) => {
+        val (a, b) = (row.getAs[String]("l"), row.getAs[String]("r"))
+        ((row.getAs[Int]("l_id"), row.getAs[Int]("r_id"), 257 + done.size),
+          BpeMerge(a, b, row.getAs[Long]("cnt"), -1L))
+      })
   }
 
   /** [[bpeTrain]]'s rendering over the byte-level fast path
     * ([[bpeMergesBytes]]) — drop-in for
     * `bpeTrain(docs, textCol, rounds, byteTokens)`. */
-  def byteBpeTrain(docs: DataFrame, textCol: String, rounds: Int): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    bpeMergesBytes(docs, textCol, rounds).zipWithIndex
-      .map { case (m, i) => (i + 1, m.a + " " + m.b, m.cnt, m.nTokensAfter) }
-      .toDF("round", "pair", "cnt", "n_tokens_after")
-  }
+  def byteBpeTrain(docs: DataFrame, textCol: String, rounds: Int): DataFrame =
+    renderMerges(docs, bpeMergesBytes(docs, textCol, rounds))
 
   /** BPE ENCODE — apply a trained merge list ([[bpeMerges]]) to a corpus:
     * the tokenizer-application step that follows vocabulary training in
@@ -529,19 +484,14 @@ object CorpusStats {
     * aggregate carries at most k counters — shuffle ∝ k × partitions,
     * never the vocabulary. */
   def heavyHittersAgg(tokenCol: Column, k: Int): Column =
-    org.apache.spark.sql.functions.udaf(
-      new graft.functions.MisraGriesAggregator(k),
-      org.apache.spark.sql.Encoders.STRING).apply(tokenCol)
+    new graft.functions.MisraGriesAggregator(k).column(tokenCol)
 
   /** Roll-up merge of heavy-hitters summaries (the [[Hll.merge]] twin):
     * per-shard/per-window summaries combine into coarser ones with the
     * same capacity and the same error bound over the combined stream —
     * the mergeable-summary property exact counts don't have. */
   def heavyHittersMerge(summaryCol: Column, k: Int): Column =
-    org.apache.spark.sql.functions.udaf(
-      new graft.functions.MisraGriesMergeAggregator(k),
-      org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[Map[String, Long]]()).apply(summaryCol)
+    new graft.functions.MisraGriesAggregator(k).rollUp(summaryCol)
 
   /** Corpus heavy hitters: the most frequent tokens via a Misra–Gries
     * summary ([[graft.functions.MisraGriesAggregator]]) — bounded state,
@@ -583,7 +533,7 @@ object CorpusStats {
     spark.read.parquet(path)
 
   /** Roll persisted per-group summaries up into one `(token, est)`
-    * summary via [[graft.functions.MisraGriesMergeAggregator]]. The
+    * summary via the [[graft.functions.MisraGriesAggregator]] roll-up. The
     * mergeable-summary bound composes: the roll-up of k-summaries of
     * streams S₁…Sₘ is a valid k-summary of their concatenation
     * (never over-counts; undercount ≤ |S₁…Sₘ|/(k+1); EXACT when k ≥

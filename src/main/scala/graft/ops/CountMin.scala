@@ -1,9 +1,8 @@
 package graft.ops
 
-import graft.functions.{CmsBits, NativeFunctions}
-import org.apache.spark.sql.{Column, DataFrame, Encoder}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions._
+import graft.functions.{CmsBits, NativeFunctions, Summary}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 
 /** Count-min sketch: sublinear-memory frequency estimation for heavy-hitter
   * detection (boilerplate n-grams, hot domains, template sentences) — the
@@ -14,7 +13,7 @@ import org.apache.spark.sql.functions._
   * overshoot by at most ~2N/w with probability 1−2^−d.
   *
   * Same physical recipe as [[Bloom]]: the grid is built DISTRIBUTED by a
-  * typed [[Aggregator]] whose merge is elementwise sum (a commutative
+  * [[graft.functions.Summary]] whose merge is elementwise sum (a commutative
   * monoid → map-side partials; the driver collects exactly ONE grid row),
   * then estimation over any corpus is the codegen'd `graft_cms_est`
   * expression — d array reads per row, no join against the sketch. */
@@ -27,20 +26,17 @@ object CountMin {
   val DefaultDepth: Int = 4
 
   private class CmsAggregator(w: Int, d: Int)
-      extends Aggregator[Long, Array[Long], Array[Long]] {
+      extends Summary[java.lang.Long, Array[Long], Array[Long]](Encoders.LONG,
+        ExpressionEncoder[Array[Long]](), ExpressionEncoder[Array[Long]]()) {
     override def zero: Array[Long] = new Array[Long](w * d)
-    override def reduce(buf: Array[Long], key: Long): Array[Long] = {
-      CmsBits.add(buf, key, w, d); buf
+    override def add(buf: Array[Long], key: java.lang.Long): Array[Long] = {
+      CmsBits.add(buf, key.longValue(), w, d); buf
     }
     override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
       var i = 0
       while (i < a.length) { a(i) += b(i); i += 1 }
       a
     }
-    override def finish(buf: Array[Long]): Array[Long] = buf
-    override def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    override def outputEncoder: Encoder[Array[Long]] = bufferEncoder
   }
 
   /** Build the grid from a long key column — one occurrence per row (runs
@@ -50,12 +46,7 @@ object CountMin {
       w: Int = DefaultWidth, d: Int = DefaultDepth): Array[Long] = {
     require(w >= 64 && (w & (w - 1)) == 0, "width must be a power of two >= 64")
     require(d >= 1)
-    val spark = df.sparkSession
-    import spark.implicits._
-    val keys = df.select(keyCol.cast("long")).filter(keyCol.isNotNull).as[Long]
-    val agg = new CmsAggregator(w, d).toColumn
-    val rows = keys.select(agg).collect()
-    if (rows.isEmpty) new Array[Long](w * d) else rows.head
+    new CmsAggregator(w, d).collect(df, keyCol.cast("long"))
   }
 
   /** Build keyed by the engine-independent text fingerprint. */

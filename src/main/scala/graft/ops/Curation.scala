@@ -274,33 +274,20 @@ object Curation {
         s"(keep = smallest value) or string (keep = smallest (xxhash64, " +
         s"value)), got ${ot.simpleString} — cast it to one, or use " +
         "capPerGroup")
-    if (integral) {
-      val bottomK = udaf(new graft.functions.BottomKAggregator(k),
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Long, Long)]())
-      val keep = df
-        .select(col(groupCol).as("__g"), col(orderCol).cast("long").as("__o"))
-        .filter(col("__o").isNotNull)
-        .groupBy(col("__g"))
-        .agg(bottomK(col("__o"), col("__o")).as("__w"))
-        .select(col("__g"), explode(col("__w")).as("__e"))
-        .select(col("__g"), col("__e._1").as("__o"))
-      df.join(keep,
-        col(orderCol).cast("long") === col("__o") && col(groupCol) <=> col("__g"),
-        "left_semi")
-    } else {
-      val bottomK = udaf(new graft.functions.BottomKStrAggregator(k),
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Long, String)]())
-      val keep = df
-        .select(col(groupCol).as("__g"), col(orderCol).as("__o"))
-        .filter(col("__o").isNotNull)
-        .groupBy(col("__g"))
-        .agg(bottomK(xxhash64(col("__o")), col("__o")).as("__w"))
-        .select(col("__g"), explode(col("__w")).as("__e"))
-        .select(col("__g"), col("__e._2").as("__o"))
-      df.join(keep,
-        col(orderCol) === col("__o") && col(groupCol) <=> col("__g"),
-        "left_semi")
-    }
+    // the order expression and the rank key are all the type decides
+    val (o, bottomK) =
+      if (integral) (col(orderCol).cast("long"), new graft.functions
+        .BottomKAggregator[Long](k).column(col("__o"), col("__o")))
+      else (col(orderCol), new graft.functions
+        .BottomKAggregator[String](k).column(xxhash64(col("__o")), col("__o")))
+    val keep = df
+      .select(col(groupCol).as("__g"), o.as("__o"))
+      .filter(col("__o").isNotNull)
+      .groupBy(col("__g"))
+      .agg(bottomK.as("__w"))
+      .select(col("__g"), explode(col("__w")).as("__e"))
+      .select(col("__g"), col("__e._2").as("__o"))
+    df.join(keep, o === col("__o") && col(groupCol) <=> col("__g"), "left_semi")
   }
 
   /** Semantic (embedding-space) deduplication: documents whose embeddings

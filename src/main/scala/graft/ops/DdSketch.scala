@@ -1,9 +1,8 @@
 package graft.ops
 
-import graft.functions.{DdBits, NativeFunctions}
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions._
+import graft.functions.{DdBits, NativeFunctions, Summary}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 
 /** Mergeable DDSketch quantile sketch — the member that completes the
   * sketch family: [[Bloom]] (membership), [[CountMin]] (frequency),
@@ -15,7 +14,7 @@ import org.apache.spark.sql.functions._
   * length/score distribution tracking — is impossible with them. DDSketch
   * (Masson, Rim, Lee — VLDB 2019) stores log-γ bucket COUNTS, so:
   *
-  *  - the grouped build ([[sketch]]) is a typed [[Aggregator]] with
+  *  - the grouped build ([[sketch]]) is a [[graft.functions.Summary]] with
   *    map-side partials — shuffle is one sketch per group per mapper
   *    (bucket count ∝ the data's dynamic range, NOT its row count);
   *  - per-shard sketches union EXACTLY ([[merge]]): bucket-count addition
@@ -48,9 +47,6 @@ object DdSketch {
     * 12 bytes ≈ 24 KiB worst-case per store. */
   val MaxBucketsPerStore: Int = 2048
 
-  private def checkAlpha(alpha: Double): Unit =
-    require(alpha > 0.0 && alpha < 1.0, s"alpha must be in (0, 1), got $alpha")
-
   /** Aggregation buffer: zero count + the two bucket stores. Immutable
     * maps — ExpressionEncoder round-trips them between partial and final
     * aggregation, and map addition is order-independent, so any merge
@@ -76,82 +72,55 @@ object DdSketch {
     }
   }
 
-  private def addValue(b: Buf, x: Double, gamma: Double): Buf = {
-    if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) b
-    else if (x == 0.0) b.copy(zero = b.zero + 1L)
-    else if (x > 0.0) {
-      val i = DdBits.indexOf(x, gamma)
-      b.copy(pos = collapse(b.pos.updated(i, b.pos.getOrElse(i, 0L) + 1L),
-        lowestFirst = true))
-    } else {
-      val i = DdBits.indexOf(-x, gamma)
-      b.copy(neg = collapse(b.neg.updated(i, b.neg.getOrElse(i, 0L) + 1L),
-        lowestFirst = false))
-    }
-  }
-
-  private def mergeBufs(a: Buf, b: Buf): Buf = Buf(
-    a.zero + b.zero,
-    collapse(b.neg.foldLeft(a.neg) { case (m, (i, c)) =>
-      m.updated(i, m.getOrElse(i, 0L) + c) }, lowestFirst = false),
-    collapse(b.pos.foldLeft(a.pos) { case (m, (i, c)) =>
-      m.updated(i, m.getOrElse(i, 0L) + c) }, lowestFirst = true))
-
-  private def bufEncoder: Encoder[Buf] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Buf]()
+  private def added(m: Map[Int, Long], i: Int, c: Long): Map[Int, Long] =
+    m.updated(i, m.getOrElse(i, 0L) + c)
 
   /** Grouped sketch build over a double value column. NULL (and NaN/Inf)
-    * values are skipped — `percentile` semantics. */
+    * values are skipped — `percentile` semantics. Its roll-up adds the
+    * bucket counts of already-built sketches (per-shard → per-group →
+    * global) and refuses a sketch of another α (its buckets mean
+    * different value ranges). */
   private[graft] class DdAggregator(alpha: Double)
-      extends Aggregator[java.lang.Double, Buf, Array[Byte]] {
+      extends Summary[java.lang.Double, Buf, Array[Byte]](
+        Encoders.DOUBLE, ExpressionEncoder[Buf](), Encoders.BINARY) {
+    require(alpha > 0.0 && alpha < 1.0, s"alpha must be in (0, 1), got $alpha")
     private val g = DdBits.gamma(alpha)
     override def zero: Buf = Buf(0L, Map.empty, Map.empty)
-    override def reduce(b: Buf, v: java.lang.Double): Buf =
-      if (v == null) b else addValue(b, v.doubleValue, g)
-    override def merge(a: Buf, b: Buf): Buf = mergeBufs(a, b)
+    override def add(b: Buf, v: java.lang.Double): Buf = {
+      val x = v.doubleValue
+      if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) b
+      else if (x == 0.0) b.copy(zero = b.zero + 1L)
+      else if (x > 0.0)
+        b.copy(pos = collapse(added(b.pos, DdBits.indexOf(x, g), 1L), lowestFirst = true))
+      else
+        b.copy(neg = collapse(added(b.neg, DdBits.indexOf(-x, g), 1L), lowestFirst = false))
+    }
+    override def merge(a: Buf, b: Buf): Buf = Buf(a.zero + b.zero,
+      collapse(b.neg.foldLeft(a.neg) { case (m, (i, c)) => added(m, i, c) },
+        lowestFirst = false),
+      collapse(b.pos.foldLeft(a.pos) { case (m, (i, c)) => added(m, i, c) },
+        lowestFirst = true))
     override def finish(b: Buf): Array[Byte] =
       DdBits.serialize(alpha, b.zero, b.neg, b.pos)
-    override def bufferEncoder: Encoder[Buf] = bufEncoder
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  /** Sketch-of-sketches roll-up: bucket-count addition of already-built
-    * sketches (per-shard → per-group → global). Null/empty inputs merge
-    * as identity; mixed-α inputs are rejected (their buckets mean
-    * different value ranges). */
-  private[graft] class DdMergeAggregator(alpha: Double)
-      extends Aggregator[Array[Byte], Buf, Array[Byte]] {
-    override def zero: Buf = Buf(0L, Map.empty, Map.empty)
-    override def reduce(b: Buf, sk: Array[Byte]): Buf =
-      if (sk == null || sk.isEmpty) b
-      else {
-        val p = DdBits.parse(sk)
-        require(p.alpha == alpha,
-          s"DDSketch merge: alpha mismatch (${p.alpha} vs $alpha)")
-        val (n, po) = p.toMaps
-        mergeBufs(b, Buf(p.zero, n, po))
-      }
-    override def merge(a: Buf, b: Buf): Buf = mergeBufs(a, b)
-    override def finish(b: Buf): Array[Byte] =
-      DdBits.serialize(alpha, b.zero, b.neg, b.pos)
-    override def bufferEncoder: Encoder[Buf] = bufEncoder
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+    override def reopen(sk: Array[Byte]): Buf = {
+      val p = DdBits.parse(sk)
+      require(p.alpha == alpha,
+        s"DDSketch merge: alpha mismatch (${p.alpha} vs $alpha)")
+      val (n, po) = p.toMaps
+      Buf(p.zero, n, po)
+    }
   }
 
   /** Aggregate column building a sketch from a numeric column —
     * `df.groupBy(...).agg(DdSketch.sketch(col("v")))`. Map-side partials
     * apply, so shuffle ∝ groups × sketch size, never rows. */
-  def sketch(valCol: Column, alpha: Double = DefaultAlpha): Column = {
-    checkAlpha(alpha)
-    udaf(new DdAggregator(alpha), Encoders.DOUBLE).apply(valCol.cast("double"))
-  }
+  def sketch(valCol: Column, alpha: Double = DefaultAlpha): Column =
+    new DdAggregator(alpha).column(valCol.cast("double"))
 
   /** Aggregate column merging sketch columns (the per-shard roll-up):
     * `perShard.groupBy(...).agg(DdSketch.merge(col("sk")))`. */
-  def merge(sketchCol: Column, alpha: Double = DefaultAlpha): Column = {
-    checkAlpha(alpha)
-    udaf(new DdMergeAggregator(alpha), Encoders.BINARY).apply(sketchCol)
-  }
+  def merge(sketchCol: Column, alpha: Double = DefaultAlpha): Column =
+    new DdAggregator(alpha).rollUp(sketchCol)
 
   /** Rank-q estimate over a sketch column (codegen'd — see
     * [[graft.functions.DdQuantileExpr]]). NULL for empty sketches. */
@@ -161,13 +130,6 @@ object DdSketch {
   /** Whole-DataFrame build returning the single serialized sketch (the
     * [[Hll.build]] shape: one Spark job, collects exactly one sketch row,
     * never the values). */
-  def build(df: DataFrame, valCol: Column, alpha: Double = DefaultAlpha): Array[Byte] = {
-    checkAlpha(alpha)
-    val rows = df.filter(valCol.isNotNull)
-      .agg(sketch(valCol, alpha).as("sk"))
-      .collect()
-    if (rows.isEmpty || rows.head.isNullAt(0))
-      DdBits.serialize(alpha, 0L, Map.empty, Map.empty)
-    else rows.head.getAs[Array[Byte]](0)
-  }
+  def build(df: DataFrame, valCol: Column, alpha: Double = DefaultAlpha): Array[Byte] =
+    new DdAggregator(alpha).collect(df, valCol.cast("double"))
 }

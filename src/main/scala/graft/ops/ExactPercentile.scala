@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -67,6 +67,44 @@ object ExactPercentile {
     df.sparkSession.conf.getOption(MaxGroupRowsKey)
       .foreach(v => requireBoundedGroups(df, groupCol, valCol, v.toLong))
 
+  /** The histogram behind every form here: per (keys, value) the count
+    * `__c` of the non-null values of `v` (as `__v`, a double), the
+    * cumulative count `__cum` over the value order within the keys, and
+    * the keys' total `__n`. */
+  private def histogram(rows: DataFrame, keys: Seq[Column], v: Column): DataFrame =
+    rows.filter(v.isNotNull)
+      .groupBy(keys :+ v.cast("double").as("__v"): _*)
+      .agg(count(lit(1)).as("__c"))
+      .withColumn("__cum", sum("__c").over(Window.partitionBy(keys: _*).orderBy("__v")))
+      .withColumn("__n", sum("__c").over(Window.partitionBy(keys: _*)))
+
+  /** True on the histogram row whose cumulative range [cum−c, cum) holds
+    * the 0-based `rank`. */
+  private def owns(rank: Column): Column =
+    col("__cum") - col("__c") <= rank && rank < col("__cum")
+
+  /** Per fraction `p`: the values covering ranks floor(pos) and ceil(pos)
+    * (as `__lo_<suffix>` / `__hi_<suffix>`), picked out of each value's
+    * cumulative range [cum−c, cum) on the histogram rows `gate` keeps. */
+  private def brackets(p: Double, suffix: String,
+      gate: Column => Column): Seq[Column] = {
+    val at = pos(col("__n"), p)
+    Seq(max(when(gate(owns(floor(at))), col("__v"))).as(s"__lo_$suffix"),
+      max(when(gate(owns(ceil(at))), col("__v"))).as(s"__hi_$suffix"))
+  }
+
+  /** The continuous rank `p·(n−1)` of fraction `p` among `n` values. */
+  private def pos(n: Column, p: Double): Column = lit(p) * (n - 1).cast("double")
+
+  /** The interpolated order statistic at [[pos]] from the values `lo` and
+    * `hi` at ranks floor(pos) and ceil(pos) — Spark's
+    * `Percentile.getPercentile`, the same double arithmetic. */
+  private def interpolate(n: Column, p: Double, lo: Column, hi: Column): Column = {
+    val pos = this.pos(n, p)
+    when(ceil(pos) === floor(pos), lo)
+      .otherwise((ceil(pos) - pos) * lo + (pos - floor(pos)) * hi)
+  }
+
   /** Per-group exact percentiles of `valCol` at the given (outputName,
     * fraction) list. NULL values are ignored (the `percentile` contract),
     * but a group whose values are ALL null still appears with NULL
@@ -77,34 +115,16 @@ object ExactPercentile {
   def byHistogram(df: DataFrame, groupCol: String, valCol: String,
       ps: Seq[(String, Double)]): DataFrame = {
     require(ps.nonEmpty && ps.forall { case (_, p) => p >= 0.0 && p <= 1.0 })
-    val byVal = Window.partitionBy(groupCol).orderBy("__v")
-    val byGrp = Window.partitionBy(groupCol)
-    val hist = df
-      .filter(col(valCol).isNotNull)
-      .groupBy(col(groupCol), col(valCol).cast("double").as("__v"))
-      .agg(count(lit(1)).as("__c"))
-      .withColumn("__cum", sum("__c").over(byVal))
-      .withColumn("__n", sum("__c").over(byGrp))
-    // per requested fraction: the values covering ranks floor(pos) and
-    // ceil(pos), picked out of each value's cumulative range [cum−c, cum)
+    val hist = histogram(df, Seq(col(groupCol)), col(valCol))
     val pickers = ps.zipWithIndex.flatMap { case ((_, p), i) =>
-      val pos = lit(p) * (col("__n") - 1).cast("double")
-      def owns(rank: org.apache.spark.sql.Column) =
-        col("__cum") - col("__c") <= rank && rank < col("__cum")
-      Seq(
-        max(when(owns(floor(pos)), col("__v"))).as(s"__lo_$i"),
-        max(when(owns(ceil(pos)), col("__v"))).as(s"__hi_$i"))
+      brackets(p, s"$i", identity)
     }
     val aggCols = first(col("__n")).as("__n") +: pickers
     val agged = df.select(col(groupCol)).distinct()
       .join(hist.groupBy(groupCol).agg(aggCols.head, aggCols.drop(1): _*),
         Seq(groupCol), "left")
     val outputs = ps.zipWithIndex.map { case ((name, p), i) =>
-      val pos = lit(p) * (col("__n") - 1).cast("double")
-      val (lo, hi) = (col(s"__lo_$i"), col(s"__hi_$i"))
-      when(ceil(pos) === floor(pos), lo)
-        .otherwise((ceil(pos) - pos) * lo + (pos - floor(pos)) * hi)
-        .as(name)
+      interpolate(col("__n"), p, col(s"__lo_$i"), col(s"__hi_$i")).as(name)
     }
     agged.select(col(groupCol) +: outputs: _*)
   }
@@ -127,30 +147,17 @@ object ExactPercentile {
       specs: Seq[(String, Seq[(String, Double)])]): DataFrame = {
     require(specs.nonEmpty && specs.forall(_._2.nonEmpty) &&
       specs.forall(_._2.forall { case (_, p) => p >= 0.0 && p <= 1.0 }))
-    val byVal = Window.partitionBy(col(groupCol), col("__i")).orderBy("__v")
-    val byGrp = Window.partitionBy(col(groupCol), col("__i"))
     val pairs = explode(array(specs.zipWithIndex.map { case ((vc, _), i) =>
       struct(lit(i).as("i"), col(vc).cast("double").as("v"))
     }: _*)).as("__p")
-    val hist = df
-      .select(col(groupCol), pairs)
-      .select(col(groupCol), col("__p.i").as("__i"), col("__p.v").as("__v"))
-      .filter(col("__v").isNotNull)
-      .groupBy(col(groupCol), col("__i"), col("__v"))
-      .agg(count(lit(1)).as("__c"))
-      .withColumn("__cum", sum("__c").over(byVal))
-      .withColumn("__n", sum("__c").over(byGrp))
-    def owns(rank: org.apache.spark.sql.Column) =
-      col("__cum") - col("__c") <= rank && rank < col("__cum")
+    val hist = histogram(
+      df.select(col(groupCol), pairs)
+        .select(col(groupCol), col("__p.i").as("__i"), col("__p.v").as("__v")),
+      Seq(col(groupCol), col("__i")), col("__v"))
     val pickers = specs.zipWithIndex.flatMap { case ((_, ps), i) =>
       val n = max(when(col("__i") === i, col("__n"))).as(s"__n_$i")
       val pk = ps.zipWithIndex.flatMap { case ((_, p), j) =>
-        val pos = lit(p) * (col("__n") - 1).cast("double")
-        Seq(
-          max(when(col("__i") === i && owns(floor(pos)), col("__v")))
-            .as(s"__lo_${i}_$j"),
-          max(when(col("__i") === i && owns(ceil(pos)), col("__v")))
-            .as(s"__hi_${i}_$j"))
+        brackets(p, s"${i}_$j", col("__i") === i && _)
       }
       n +: pk
     }
@@ -159,10 +166,7 @@ object ExactPercentile {
         Seq(groupCol), "left")
     val outputs = specs.zipWithIndex.flatMap { case ((_, ps), i) =>
       ps.zipWithIndex.map { case ((name, p), j) =>
-        val pos = lit(p) * (col(s"__n_$i") - 1).cast("double")
-        val (lo, hi) = (col(s"__lo_${i}_$j"), col(s"__hi_${i}_$j"))
-        when(ceil(pos) === floor(pos), lo)
-          .otherwise((ceil(pos) - pos) * lo + (pos - floor(pos)) * hi)
+        interpolate(col(s"__n_$i"), p, col(s"__lo_${i}_$j"), col(s"__hi_${i}_$j"))
           .as(name)
       }
     }
@@ -172,15 +176,13 @@ object ExactPercentile {
   /** 0-based order-statistic index of DuckDB/Postgres QUANTILE_DISC:
     * ⌈q·n⌉ − 1, clamped at 0 — the convention an external SQL replay
     * computes. */
-  def discIndexCeil(n: org.apache.spark.sql.Column,
-      q: Double): org.apache.spark.sql.Column =
+  def discIndexCeil(n: Column, q: Double): Column =
     greatest(ceil(lit(q) * n.cast("double")) - 1L, lit(0L))
 
   /** 0-based order-statistic index at rank q·(n−1) — the element-
     * quantile convention [[DdSketch]]'s quantile answers (and Spark's
     * `approx_percentile` targets): ⌊q·(n−1)⌋. */
-  def discIndexFloor(n: org.apache.spark.sql.Column,
-      q: Double): org.apache.spark.sql.Column =
+  def discIndexFloor(n: Column, q: Double): Column =
     floor(lit(q) * (n - 1L).cast("double"))
 
   /** Per-group exact DISCRETE percentiles — an actual group value, no
@@ -195,21 +197,12 @@ object ExactPercentile {
     * null groups survive with NULL outputs. */
   def discByHistogram(df: DataFrame, groupCol: String, valCol: String,
       ps: Seq[(String, Double)],
-      indexOf: (org.apache.spark.sql.Column, Double) =>
-        org.apache.spark.sql.Column): DataFrame = {
+      indexOf: (Column, Double) => Column): DataFrame = {
     require(ps.nonEmpty && ps.forall { case (_, p) => p >= 0.0 && p <= 1.0 })
-    val byVal = Window.partitionBy(groupCol).orderBy("__v")
-    val byGrp = Window.partitionBy(groupCol)
-    val hist = df
-      .filter(col(valCol).isNotNull)
-      .groupBy(col(groupCol), col(valCol).cast("double").as("__v"))
-      .agg(count(lit(1)).as("__c"))
-      .withColumn("__cum", sum("__c").over(byVal))
-      .withColumn("__n", sum("__c").over(byGrp))
+    val hist = histogram(df, Seq(col(groupCol)), col(valCol))
     val pickers = ps.map { case (name, p) =>
       val idx = indexOf(col("__n"), p).cast("double")
-      max(when(col("__cum") - col("__c") <= idx && idx < col("__cum"),
-        col("__v"))).as(name)
+      max(when(owns(idx), col("__v"))).as(name)
     }
     df.select(col(groupCol)).distinct()
       .join(hist.groupBy(groupCol).agg(pickers.head, pickers.drop(1): _*),

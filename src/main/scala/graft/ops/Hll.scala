@@ -1,9 +1,7 @@
 package graft.ops
 
-import graft.functions.{HllBits, NativeFunctions}
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions._
+import graft.functions.{HllBits, NativeFunctions, Summary}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 
 /** HyperLogLog distinct-count sketch — the mergeable companion to
   * [[CountMin]] (frequency) and [[Bloom]] (membership). A corpus pipeline
@@ -13,7 +11,7 @@ import org.apache.spark.sql.functions._
   * (shards share keys). The HLL register array is 2^p bytes, and its merge
   * (elementwise max) is a commutative idempotent monoid, so:
   *
-  *  - the grouped build ([[sketch]]) is a typed [[Aggregator]] with
+  *  - the grouped build ([[sketch]]) is a [[graft.functions.Summary]] with
   *    map-side partial aggregation — shuffle is one 2^p-byte row per
   *    group per mapper, never the keys;
   *  - per-shard sketches union EXACTLY ([[merge]]): sketch(A ∪ B) is
@@ -34,60 +32,36 @@ object Hll {
   /** Default precision: 2^12 = 4096 registers, rsd ≈ 1.6%. */
   val DefaultP: Int = 12
 
-  private def checkP(p: Int): Unit =
-    require(p >= 4 && p <= 18, s"HLL precision must be in [4, 18], got $p")
-
-  /** Grouped sketch build: fold long keys into a register array. Input is
-    * boxed (nullable) so NULL keys skip the fold — COUNT(DISTINCT)
-    * semantics — instead of polluting the sketch with a sentinel. */
+  /** Grouped sketch build: fold long keys into a register array (NULL
+    * keys skip the fold — COUNT(DISTINCT) semantics). Its roll-up
+    * max-merges built sketches and refuses another precision. */
   private[graft] class HllAggregator(p: Int)
-      extends Aggregator[java.lang.Long, Array[Byte], Array[Byte]] {
+      extends Summary[java.lang.Long, Array[Byte], Array[Byte]](
+        Encoders.LONG, Encoders.BINARY, Encoders.BINARY) {
+    require(p >= 4 && p <= 18, s"HLL precision must be in [4, 18], got $p")
     override def zero: Array[Byte] = new Array[Byte](1 << p)
-    override def reduce(buf: Array[Byte], key: java.lang.Long): Array[Byte] = {
-      if (key != null) HllBits.add(buf, key.longValue(), p)
-      buf
+    override def add(buf: Array[Byte], key: java.lang.Long): Array[Byte] = {
+      HllBits.add(buf, key.longValue(), p); buf
     }
     override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] =
       HllBits.mergeInto(a, b)
-    override def finish(buf: Array[Byte]): Array[Byte] = buf
-    override def bufferEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  /** Sketch-of-sketches roll-up: elementwise-max merge of already-built
-    * register arrays (per-shard → per-group → global). Null or
-    * zero-length inputs (empty shards) merge as identity. */
-  private[graft] class HllMergeAggregator(p: Int)
-      extends Aggregator[Array[Byte], Array[Byte], Array[Byte]] {
-    override def zero: Array[Byte] = new Array[Byte](1 << p)
-    override def reduce(buf: Array[Byte], sk: Array[Byte]): Array[Byte] =
-      if (sk == null || sk.isEmpty) buf
-      else {
-        require(sk.length == buf.length,
-          s"HLL merge: precision mismatch (${sk.length} vs ${buf.length} registers)")
-        HllBits.mergeInto(buf, sk)
-      }
-    override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-      HllBits.mergeInto(a, b)
-    override def finish(buf: Array[Byte]): Array[Byte] = buf
-    override def bufferEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+    override def reopen(sk: Array[Byte]): Array[Byte] = {
+      require(sk.length == 1 << p,
+        s"HLL merge: precision mismatch (${sk.length} vs ${1 << p} registers)")
+      sk
+    }
   }
 
   /** Aggregate column building a sketch from a long key column —
     * `df.groupBy(...).agg(Hll.sketch(col("k")))`. Map-side partials apply
     * (Aggregator merge is the monoid), so shuffle ∝ groups, not keys. */
-  def sketch(keyCol: Column, p: Int = DefaultP): Column = {
-    checkP(p)
-    udaf(new HllAggregator(p), Encoders.LONG).apply(keyCol.cast("long"))
-  }
+  def sketch(keyCol: Column, p: Int = DefaultP): Column =
+    new HllAggregator(p).column(keyCol.cast("long"))
 
   /** Aggregate column merging sketch columns (the per-shard roll-up):
     * `perShard.groupBy(...).agg(Hll.merge(col("sk")))`. */
-  def merge(sketchCol: Column, p: Int = DefaultP): Column = {
-    checkP(p)
-    udaf(new HllMergeAggregator(p), Encoders.BINARY).apply(sketchCol)
-  }
+  def merge(sketchCol: Column, p: Int = DefaultP): Column =
+    new HllAggregator(p).rollUp(sketchCol)
 
   /** Cardinality estimate over a sketch column (codegen'd — see
     * [[graft.functions.HllEstExpr]]). */
@@ -102,12 +76,6 @@ object Hll {
   /** Whole-DataFrame build returning the single register array (the
     * [[Bloom.build]] shape: runs a Spark job eagerly, collects exactly
     * one 2^p-byte row — never the keys). */
-  def build(df: DataFrame, keyCol: Column, p: Int = DefaultP): Array[Byte] = {
-    checkP(p)
-    val rows = df.filter(keyCol.isNotNull)
-      .agg(sketch(keyCol, p).as("sk"))
-      .collect()
-    if (rows.isEmpty || rows.head.isNullAt(0)) new Array[Byte](1 << p)
-    else rows.head.getAs[Array[Byte]](0)
-  }
+  def build(df: DataFrame, keyCol: Column, p: Int = DefaultP): Array[Byte] =
+    new HllAggregator(p).collect(df, keyCol.cast("long"))
 }

@@ -1,9 +1,7 @@
 package graft.ops
 
-import graft.functions.{KmvBits, NativeFunctions}
-import org.apache.spark.sql.{Column, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions._
+import graft.functions.{KmvBits, NativeFunctions, Summary}
+import org.apache.spark.sql.{Column, Encoders}
 
 /** K-Minimum-Values (theta) sketch — the SET-OPERATION member of the
   * mergeable sketch family ([[Bloom]] membership, [[CountMin]] frequency,
@@ -15,7 +13,7 @@ import org.apache.spark.sql.functions._
   * and the canonical byte layout.
   *
   * Same scale contract as the HLL build:
-  *  - [[sketch]] is a typed [[Aggregator]] with map-side partials —
+  *  - [[sketch]] is a [[graft.functions.Summary]] with map-side partials —
   *    shuffle is one ≤(9 + 8k)-byte row per group per mapper, never keys;
   *  - sketch(A ∪ B) is BIT-IDENTICAL to merge(sketch(A), sketch(B))
   *    regardless of partitioning — unconditionally (no collapse cap), so
@@ -32,51 +30,30 @@ object Kmv {
   /** Default retained values: 8 KiB per sketch, rse ≈ 3.1%. */
   val DefaultK: Int = 1024
 
-  private def checkK(k: Int): Unit =
-    require(k >= 16 && k <= (1 << 20), s"KMV k must be in [16, 2^20], got $k")
-
   /** Grouped sketch build over long keys. NULL keys skip the fold —
-    * COUNT(DISTINCT) semantics (the [[Hll.HllAggregator]] contract). */
+    * COUNT(DISTINCT) semantics (the [[Hll.HllAggregator]] contract). Its
+    * roll-up (per-shard → global) refuses a sketch of another `k`
+    * ([[KmvBits.merged]]). */
   private[graft] class KmvAggregator(k: Int)
-      extends Aggregator[java.lang.Long, Array[Byte], Array[Byte]] {
+      extends Summary[java.lang.Long, Array[Byte], Array[Byte]](
+        Encoders.LONG, Encoders.BINARY, Encoders.BINARY) {
+    require(k >= 16 && k <= (1 << 20), s"KMV k must be in [16, 2^20], got $k")
     override def zero: Array[Byte] = KmvBits.empty(k)
-    override def reduce(buf: Array[Byte], key: java.lang.Long): Array[Byte] = {
-      if (key != null) KmvBits.add(buf, key.longValue()) else buf
-      buf
-    }
+    override def add(buf: Array[Byte], key: java.lang.Long): Array[Byte] =
+      KmvBits.add(buf, key.longValue())
     override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] =
       KmvBits.merged(a, b)
     override def finish(buf: Array[Byte]): Array[Byte] = KmvBits.compact(buf)
-    override def bufferEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  /** Sketch-of-sketches roll-up (per-shard → global). Null or zero-length
-    * inputs (empty shards) merge as identity. */
-  private[graft] class KmvMergeAggregator(k: Int)
-      extends Aggregator[Array[Byte], Array[Byte], Array[Byte]] {
-    override def zero: Array[Byte] = KmvBits.empty(k)
-    override def reduce(buf: Array[Byte], sk: Array[Byte]): Array[Byte] =
-      if (sk == null || sk.isEmpty) buf else KmvBits.merged(buf, sk)
-    override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-      KmvBits.merged(a, b)
-    override def finish(buf: Array[Byte]): Array[Byte] = KmvBits.compact(buf)
-    override def bufferEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   }
 
   /** Aggregate column building a sketch from a long key column —
     * `df.groupBy(...).agg(Kmv.sketch(col("k")))`. */
-  def sketch(keyCol: Column, k: Int = DefaultK): Column = {
-    checkK(k)
-    udaf(new KmvAggregator(k), Encoders.LONG).apply(keyCol.cast("long"))
-  }
+  def sketch(keyCol: Column, k: Int = DefaultK): Column =
+    new KmvAggregator(k).column(keyCol.cast("long"))
 
   /** Aggregate column merging sketch columns (the per-shard roll-up). */
-  def merge(sketchCol: Column, k: Int = DefaultK): Column = {
-    checkK(k)
-    udaf(new KmvMergeAggregator(k), Encoders.BINARY).apply(sketchCol)
-  }
+  def merge(sketchCol: Column, k: Int = DefaultK): Column =
+    new KmvAggregator(k).rollUp(sketchCol)
 
   /** Distinct-count estimate (codegen'd `graft_kmv_est`). */
   def estimate(sketchCol: Column): Column =

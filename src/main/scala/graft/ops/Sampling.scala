@@ -191,13 +191,12 @@ object Sampling {
   def uniformExactKPerGroup(df: DataFrame, groupCol: String, idCol: String,
       k: Int): DataFrame = {
     require(k >= 1)
-    val bottomK = udaf(new graft.functions.BottomKAggregator(k),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Long, Long)]())
     val winners = df
       .select(col(groupCol).as("__g"), col(idCol).cast("long").as("__id"))
       .withColumn("__sk", pmod(col("__id") * lit(2654435761L), lit(2147483648L)))
       .groupBy(col("__g"))
-      .agg(bottomK(col("__sk"), col("__id")).as("__w"))
+      .agg(new graft.functions.BottomKAggregator[Long](k)
+        .column(col("__sk"), col("__id")).as("__w"))
       // two selects: posexplode is a Generate, and getField extraction
       // must not resolve against the generator's own output aliases
       .select(col("__g"), posexplode(col("__w")).as(Seq("__pos", "__e")))

@@ -23,6 +23,12 @@ package graft.tools
   *
   * SPARK_GRAFT_PROFILE_STAGES set prints exec2's completed stages.
   *
+  * The first query named carries the JVM's first-query class loading
+  * and JIT in its `build` (the warm-up absorbs session start-up only):
+  * at sf0.1 on `local[4]`, q104 named first read `build` 7.5–7.9 s, and
+  * 4.2 s when named after q65, with the same 36 jobs. Compare two runs
+  * only with the same query order on both sides.
+  *
   * Drill tooling for the optimization rounds, not part of the driver
   * contract. {{{ runMain graft.tools.PhaseProfile q133_web_curation }}}
   */

@@ -13,14 +13,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** The one measurement loop behind `graft.Bench` and the drill mains.
   *
   * One listener per SparkContext counts the jobs started, the tasks
-  * ended, their CPU, the max task `peakExecutionMemory` and the total
-  * `memoryBytesSpilled`, and logs each completed stage. Listener events
+  * ended, their CPU, the max task `peakExecutionMemory`, the total
+  * `memoryBytesSpilled` and the total shuffle-write bytes, and logs each
+  * completed stage. Listener events
   * arrive asynchronously, so [[measure]] drains the listener bus before it
   * zeroes the counters and again before it reads them: what it returns is
   * the work of its body only.
   */
 final class Probe private (sc: SparkContext) {
-  private val jobs, tasks, cpuNs, peakMem, spill = new AtomicLong(0L)
+  private val jobs, tasks, cpuNs, peakMem, spill, shuffleBytes = new AtomicLong(0L)
   private val stages = new ConcurrentLinkedQueue[Probe.Stage]()
   // listenerBus and waitUntilEmpty are private[spark], which is public to the JVM
   private val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
@@ -35,6 +36,7 @@ final class Probe private (sc: SparkContext) {
         cpuNs.addAndGet(m.executorCpuTime)
         peakMem.getAndAccumulate(m.peakExecutionMemory, math.max(_, _))
         spill.addAndGet(m.memoryBytesSpilled)
+        shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
       }
     }
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
@@ -53,20 +55,21 @@ final class Probe private (sc: SparkContext) {
     * work. Not reentrant: a nested call zeroes the outer counters. */
   def measure[T](body: => T): (T, Probe.Counters) = {
     drain()
-    Seq(jobs, tasks, cpuNs, peakMem, spill).foreach(_.set(0L))
+    Seq(jobs, tasks, cpuNs, peakMem, spill, shuffleBytes).foreach(_.set(0L))
     stages.clear()
     val result = body
     drain()
     (result, Probe.Counters(jobs.get, tasks.get, cpuNs.get, peakMem.get,
-      spill.get, stages.asScala.toSeq))
+      spill.get, shuffleBytes.get, stages.asScala.toSeq))
   }
 }
 
 object Probe {
   /** What one measured body ran: `peakMem` is the max over its tasks,
-    * the rest are totals. */
+    * the rest are totals (`shuffleBytes`: bytes its tasks wrote to
+    * shuffle files). */
   final case class Counters(jobs: Long, tasks: Long, cpuNs: Long,
-      peakMem: Long, spill: Long, stages: Seq[Stage])
+      peakMem: Long, spill: Long, shuffleBytes: Long, stages: Seq[Stage])
 
   /** One completed stage: wall and run times in ms, CPU in ns. */
   final case class Stage(id: Int, tasks: Int, wallMs: Long, cpuNs: Long,

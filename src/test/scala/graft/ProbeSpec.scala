@@ -74,4 +74,13 @@ class ProbeSpec extends AnyFunSuite {
     assert(work(s2) == work(s1), s"$s1 vs $s2")
     assert(s1.tasks == 1)
   }
+
+  test("shuffle bytes: a groupBy writes some, a map-only frame writes none") {
+    val probe = Probe(spark)
+    val (_, grouped) = probe.measure(Probe.force(shuffled))
+    val (_, mapOnly) = probe.measure(
+      Probe.force(spark.range(0, 20000, 1, 4).select(col("id") * 2)))
+    assert(grouped.shuffleBytes > 0, s"$grouped")
+    assert(mapOnly.shuffleBytes == 0 && mapOnly.tasks > 0, s"$mapOnly")
+  }
 }

@@ -39,7 +39,7 @@ class MisraGriesSpec extends AnyFunSuite {
 
   test("cross-run roll-up: persisted per-group summaries merge to the one-pass result") {
     // the q136 seam end-to-end at law level: per-day summaries ->
-    // parquet -> reload -> MisraGriesMergeAggregator roll-up. Exact
+    // parquet -> reload -> MisraGriesAggregator roll-up. Exact
     // regime: equals BOTH the true counts and the single-pass summary.
     val df = stream(parts = 8, seed = 3)
       .withColumn("day", pmod(monotonically_increasing_id(), lit(4L)))
@@ -122,5 +122,13 @@ class MisraGriesSpec extends AnyFunSuite {
     val after = agg.reduce(full, "c")
     assert(after == Map("a" -> 2L))
     assert(agg.reduce(after, "c") == Map("a" -> 2L, "c" -> 1L))
+  }
+
+  test("roll-up: a null summary is the identity") {
+    val s = Map("alpha" -> 3L, "beta" -> 1L)
+    val rolled = Seq(Some(s), None).toDF("summary")
+      .agg(CorpusStats.heavyHittersMerge(col("summary"), 4))
+      .head().getMap[String, Long](0).toMap
+    assert(rolled == s)
   }
 }

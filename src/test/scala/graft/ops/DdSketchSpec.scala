@@ -114,4 +114,17 @@ class DdSketchSpec extends AnyFunSuite {
         s"upper quantile $q lost accuracy under collapse")
     }
   }
+
+  test("roll-up guards: mixed alphas fail by name; a null or zero-length sketch is the identity") {
+    val vs = (1 to 3000).map(i => (i % 89).toDouble * 1.37).toDF("v")
+    val sk = DdSketch.build(vs, col("v"))
+    def rollUp(sks: Seq[Option[Array[Byte]]]): Array[Byte] =
+      sks.toDF("sk").agg(DdSketch.merge(col("sk"))).head().getAs[Array[Byte]](0)
+    assert(java.util.Arrays.equals(rollUp(Seq(Some(sk), None)), sk))
+    assert(java.util.Arrays.equals(rollUp(Seq(Some(sk), Some(Array.empty[Byte]))), sk))
+    val ex = intercept[Exception](
+      rollUp(Seq(Some(sk), Some(DdSketch.build(vs, col("v"), alpha = 0.05)))))
+    assert(ex.getMessage.contains("DDSketch merge: alpha mismatch (0.05 vs 0.01)"),
+      ex.getMessage)
+  }
 }

@@ -103,4 +103,17 @@ class HllSpec extends AnyFunSuite {
     val empty = Hll.build(Seq.empty[Long].toDF("k"), col("k"))
     assert(empty.forall(_ == 0) && HllBits.estimate(empty) == 0L)
   }
+
+  test("roll-up guards: mixed precisions fail by name; a null or zero-length sketch is the identity") {
+    import spark.implicits._
+    val keys = (1L to 3000L).map(_ * 48271L).toDF("k")
+    val sk = Hll.build(keys, col("k"))
+    def rollUp(sks: Seq[Option[Array[Byte]]]): Array[Byte] =
+      sks.toDF("sk").agg(Hll.merge(col("sk"))).head().getAs[Array[Byte]](0)
+    assert(java.util.Arrays.equals(rollUp(Seq(Some(sk), None)), sk))
+    assert(java.util.Arrays.equals(rollUp(Seq(Some(sk), Some(Array.empty[Byte]))), sk))
+    val ex = intercept[Exception](rollUp(Seq(Some(sk), Some(Hll.build(keys, col("k"), p = 10)))))
+    assert(ex.getMessage.contains("HLL merge: precision mismatch (1024 vs 4096 registers)"),
+      ex.getMessage)
+  }
 }

@@ -141,4 +141,16 @@ class KmvSpec extends AnyFunSuite {
     KmvBits.add(buf, 42L)
     assert(KmvBits.valueAt(buf, 0) == BloomBits.mix(42L))
   }
+
+  test("roll-up guards: mixed k fails by name; a null or zero-length sketch is the identity") {
+    import spark.implicits._
+    val keys = (1L to 3000L).map(_ * 48271L)
+    val sk = driverSketch(keys)
+    def rollUp(sks: Seq[Option[Array[Byte]]]): Array[Byte] =
+      sks.toDF("sk").agg(Kmv.merge(col("sk"))).head().getAs[Array[Byte]](0)
+    assert(java.util.Arrays.equals(rollUp(Seq(Some(sk), None)), sk))
+    assert(java.util.Arrays.equals(rollUp(Seq(Some(sk), Some(Array.empty[Byte]))), sk))
+    val ex = intercept[Exception](rollUp(Seq(Some(sk), Some(driverSketch(keys, k = 64)))))
+    assert(ex.getMessage.contains("KMV merge: k mismatch (64 vs 1024)"), ex.getMessage)
+  }
 }

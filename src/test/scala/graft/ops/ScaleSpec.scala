@@ -667,52 +667,37 @@ class ScaleSpec extends AnyFunSuite {
           concat(lit("h"), pmod(col("id"), lit(7L)).cast("string")))
         .otherwise(concat(lit("t"), pmod(col("id"), lit(v)).cast("string")))
         .as("tok"))
-    val sc = spark.sparkContext
-    val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
+    val probe = graft.tools.Probe(spark)
+    def measure(f: => Unit): (Long, Double) = {
+      val t0 = System.nanoTime()
+      val (_, c) = probe.measure(f)
+      (c.shuffleBytes, (System.nanoTime() - t0) / 1e9)
     }
-    sc.addSparkListener(listener)
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    val drain = bus.getClass.getMethod("waitUntilEmpty")
-    try {
-      def measure(f: => Unit): (Long, Double) = {
-        drain.invoke(bus); bytes.set(0L)
-        val t0 = System.nanoTime()
-        f
-        drain.invoke(bus)
-        (bytes.get, (System.nanoTime() - t0) / 1e9)
-      }
-      val (exactBytes, exactWall) = measure(
-        toks.groupBy("tok").count()
-          .write.format("noop").mode("overwrite").save())
-      var summary: Map[String, Long] = Map.empty
-      val (mgBytes, mgWall) = measure {
-        summary = toks.agg(
-            CorpusStats.heavyHittersAgg(col("tok"), 64).as("s"))
-          .head().getMap[String, Long](0).toMap
-      }
-      val line = f"2M tokens / ~1M vocab: exact-groupBy shuffle " +
-        f"${exactBytes / (1 << 20)}%d MiB ($exactWall%.1fs) vs MG-64 " +
-        f"${mgBytes / 1024}%d KiB ($mgWall%.1fs) — " +
-        f"${exactBytes / math.max(mgBytes, 1)}%dx"
-      info(line); println(s"[hh-drill] $line")
-      // the vocabulary-sized shuffle vs the k-sized one
-      assert(mgBytes < exactBytes / 100,
-        s"MG shuffle not bounded: $mgBytes vs $exactBytes")
-      // every planted heavy token (mass ~95k each > N/65 ~ 31k) must be
-      // tracked, with the guaranteed undercount bound
-      (0 until 7).foreach { i =>
-        val t = s"h$i"
-        assert(summary.contains(t), s"heavy token $t missing")
-        assert(summary(t) <= n && summary(t) >= n / 3 / 7 - n / 65,
-          s"$t estimate ${summary(t)} outside the MG bound")
-      }
-    } finally sc.removeSparkListener(listener)
+    val (exactBytes, exactWall) = measure(
+      toks.groupBy("tok").count()
+        .write.format("noop").mode("overwrite").save())
+    var summary: Map[String, Long] = Map.empty
+    val (mgBytes, mgWall) = measure {
+      summary = toks.agg(
+          CorpusStats.heavyHittersAgg(col("tok"), 64).as("s"))
+        .head().getMap[String, Long](0).toMap
+    }
+    val line = f"2M tokens / ~1M vocab: exact-groupBy shuffle " +
+      f"${exactBytes / (1 << 20)}%d MiB ($exactWall%.1fs) vs MG-64 " +
+      f"${mgBytes / 1024}%d KiB ($mgWall%.1fs) — " +
+      f"${exactBytes / math.max(mgBytes, 1)}%dx"
+    info(line); println(s"[hh-drill] $line")
+    // the vocabulary-sized shuffle vs the k-sized one
+    assert(mgBytes < exactBytes / 100,
+      s"MG shuffle not bounded: $mgBytes vs $exactBytes")
+    // every planted heavy token (mass ~95k each > N/65 ~ 31k) must be
+    // tracked, with the guaranteed undercount bound
+    (0 until 7).foreach { i =>
+      val t = s"h$i"
+      assert(summary.contains(t), s"heavy token $t missing")
+      assert(summary(t) <= n && summary(t) >= n / 3 / 7 - n / 65,
+        s"$t estimate ${summary(t)} outside the MG bound")
+    }
   }
 
   test("fingerprint-keyed dedup drill: the one shuffle carries 8-byte keys, not a second text copy") {
@@ -735,74 +720,57 @@ class ScaleSpec extends AnyFunSuite {
       base.filter(pmod(col("doc_id"), lit(10L)) === 1L)
         .select((col("doc_id") + lit(10L) * n).as("doc_id"),
           concat(upper(col("text")), lit(" !!")).as("text")))
-    val sc = spark.sparkContext
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+    val probe = graft.tools.Probe(spark)
+    // two consumer shapes, both real:
+    //  - "pruned": a count-like consumer (dedup stats, audits) lets
+    //    Catalyst prune the text BELOW the exchange for the fp variant
+    //    (the key is computed pre-shuffle), while the exact variant's
+    //    key IS the normalized text and cannot be pruned — the gap is
+    //    the whole text mass;
+    //  - "full-row": the production recipe materializes the marked
+    //    rows (text rides through BOTH shuffles) — the gap is the
+    //    second (normalized-key) copy only.
+    def measure(marked: org.apache.spark.sql.DataFrame,
+        fullRow: Boolean): (Long, Long, Double) = {
+      val t0 = System.nanoTime()
+      val (kept, c) = probe.measure {
+        if (fullRow) {
+          marked.write.format("noop").mode("overwrite").save()
+          -1L
+        } else marked.filter(col("keep")).count()
       }
+      (kept, c.shuffleBytes, (System.nanoTime() - t0) / 1e9)
     }
-    sc.addSparkListener(listener)
-    // listener events are async; drain before reading the counters
-    // (listenerBus/waitUntilEmpty are private[spark] = JVM-public)
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    val drain = bus.getClass.getMethod("waitUntilEmpty")
-    try {
-      // two consumer shapes, both real:
-      //  - "pruned": a count-like consumer (dedup stats, audits) lets
-      //    Catalyst prune the text BELOW the exchange for the fp variant
-      //    (the key is computed pre-shuffle), while the exact variant's
-      //    key IS the normalized text and cannot be pruned — the gap is
-      //    the whole text mass;
-      //  - "full-row": the production recipe materializes the marked
-      //    rows (text rides through BOTH shuffles) — the gap is the
-      //    second (normalized-key) copy only.
-      def measure(marked: org.apache.spark.sql.DataFrame,
-          fullRow: Boolean): (Long, Long, Double) = {
-        drain.invoke(bus)
-        shuffleBytes.set(0L)
-        val t0 = System.nanoTime()
-        val kept =
-          if (fullRow) {
-            marked.write.format("noop").mode("overwrite").save()
-            -1L
-          } else marked.filter(col("keep")).count()
-        drain.invoke(bus)
-        (kept, shuffleBytes.get, (System.nanoTime() - t0) / 1e9)
-      }
-      def exact = Dedup.exactDedupNormalized(docs, "text", "doc_id")
-      def fp = Dedup.exactDedupNormalizedByFingerprint(docs, "text", "doc_id")
-      val (keptExact, prunedExact, _) = measure(exact, fullRow = false)
-      val (keptFp, prunedFp, _) = measure(fp, fullRow = false)
-      val (_, fullExact, wallExact) = measure(exact, fullRow = true)
-      val (_, fullFp, wallFp) = measure(fp, fullRow = true)
-      val line = f"${n / 1000000}%dM docs: pruned-consumer " +
-        f"${prunedExact / (1 << 20)}%d->${prunedFp / (1 << 20)}%d MiB " +
-        f"(${prunedFp.toDouble / prunedExact}%.2fx), full-row " +
-        f"${fullExact / (1 << 20)}%d->${fullFp / (1 << 20)}%d MiB " +
-        f"(${fullFp.toDouble / fullExact}%.2fx) wall " +
-        f"$wallExact%.1f->$wallFp%.1fs, kept=$keptExact"
-      info(line)
-      println(s"[fp-dedup-drill] $line")
-      assert(keptExact == keptFp, s"result divergence: $keptExact vs $keptFp")
-      // every mutant collapses onto its original: survivors == originals
-      assert(keptExact == n, s"mutants did not collapse: kept=$keptExact")
-      // Both shapes must shed bytes; how much is shape-dependent (both
-      // measured, recorded in BENCH_NOTES):
-      //  - pruned consumer: the whole text mass leaves the shuffle
-      //    (~25x measured — the key is 8 bytes vs the full string);
-      //  - full row: the raw text rides through both, and lz4 compresses
-      //    the normalized copy well against its neighboring raw text, so
-      //    the POST-COMPRESSION saving is the ~15%-of-stream the copy
-      //    still costs (pre-compression it is ~2x); the second win is
-      //    CPU — the window sort compares 8-byte longs, not strings.
-      assert(prunedFp < prunedExact * 0.5,
-        s"pruned-consumer shuffle not smaller: $prunedFp vs $prunedExact")
-      assert(fullFp < fullExact * 0.95,
-        s"full-row shuffle not smaller: $fullFp vs $fullExact")
-    } finally sc.removeSparkListener(listener)
+    def exact = Dedup.exactDedupNormalized(docs, "text", "doc_id")
+    def fp = Dedup.exactDedupNormalizedByFingerprint(docs, "text", "doc_id")
+    val (keptExact, prunedExact, _) = measure(exact, fullRow = false)
+    val (keptFp, prunedFp, _) = measure(fp, fullRow = false)
+    val (_, fullExact, wallExact) = measure(exact, fullRow = true)
+    val (_, fullFp, wallFp) = measure(fp, fullRow = true)
+    val line = f"${n / 1000000}%dM docs: pruned-consumer " +
+      f"${prunedExact / (1 << 20)}%d->${prunedFp / (1 << 20)}%d MiB " +
+      f"(${prunedFp.toDouble / prunedExact}%.2fx), full-row " +
+      f"${fullExact / (1 << 20)}%d->${fullFp / (1 << 20)}%d MiB " +
+      f"(${fullFp.toDouble / fullExact}%.2fx) wall " +
+      f"$wallExact%.1f->$wallFp%.1fs, kept=$keptExact"
+    info(line)
+    println(s"[fp-dedup-drill] $line")
+    assert(keptExact == keptFp, s"result divergence: $keptExact vs $keptFp")
+    // every mutant collapses onto its original: survivors == originals
+    assert(keptExact == n, s"mutants did not collapse: kept=$keptExact")
+    // Both shapes must shed bytes; how much is shape-dependent (both
+    // measured, recorded in BENCH_NOTES):
+    //  - pruned consumer: the whole text mass leaves the shuffle
+    //    (~25x measured — the key is 8 bytes vs the full string);
+    //  - full row: the raw text rides through both, and lz4 compresses
+    //    the normalized copy well against its neighboring raw text, so
+    //    the POST-COMPRESSION saving is the ~15%-of-stream the copy
+    //    still costs (pre-compression it is ~2x); the second win is
+    //    CPU — the window sort compares 8-byte longs, not strings.
+    assert(prunedFp < prunedExact * 0.5,
+      s"pruned-consumer shuffle not smaller: $prunedFp vs $prunedExact")
+    assert(fullFp < fullExact * 0.95,
+      s"full-row shuffle not smaller: $fullFp vs $fullExact")
   }
 
   test("image decode throughput drill: 100k mixed-size PNGs across all cores") {
@@ -858,20 +826,6 @@ class ScaleSpec extends AnyFunSuite {
     partsOverride.foreach(p =>
       spark.conf.set("spark.sql.shuffle.partitions", p.toString))
     val dim = 16
-    val sc = spark.sparkContext
-    val peak = new java.util.concurrent.atomic.AtomicLong(0L)
-    val spilled = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          peak.getAndAccumulate(m.peakExecutionMemory, math.max(_, _))
-          spilled.addAndGet(m.memoryBytesSpilled)
-        }
-      }
-    }
-    sc.addSparkListener(listener)
     val t0 = System.nanoTime()
     var tLast = t0
     def lap(stage: String): Unit = {
@@ -882,69 +836,71 @@ class ScaleSpec extends AnyFunSuite {
       tLast = now
     }
     try {
-      val docs = spark.read.format("graft-synth")
-        .option("rows", n).option("partitions", 64)
-        .option("dupfraction", 0.1).load()
-      // deterministic embeddings in groups of 4: ids sharing id>>2 carry
-      // IDENTICAL vectors (planted semantic quadruplets), distinct
-      // groups hash apart — ~n/4 clusters for the LSH-bucketed dedup
-      val withVec = docs.withColumn("embedding",
-        transform(sequence(lit(1), lit(dim)), i =>
-          (pmod(xxhash64(shiftright(col("doc_id"), 2) * 31 + i), lit(1000))
-            .cast("double") / 500.0 - 1.0)))
-      // 1-3. curation: language allow-list, quality floor, exact dedup.
-      // Persisted: the production recipe materializes between expensive
-      // stages too — downstream the frame is referenced by both pair-join
-      // sides, the CC, the anti-join and the counts; without the persist
-      // the regex-heavy curation re-runs per consumer
-      val curated = OpCaches.persist(Curation.curate(withVec, "doc_id",
-        "text", allowedLangs = Seq("en", "de", "fr", "es", "zh", "und"),
-        minQuality = 20))
-      val nCurated = curated.count()
-      lap(s"curate ($nCurated rows)")
-      // 4. semantic dedup over the planted quadruplets (LSH buckets +
-      //    group-local CC; over-full buckets stay undeduped by contract)
-      val deduped = OpCaches.persist(Curation.semanticDedup(curated,
-        "doc_id", "embedding", dim = dim, threshold = 0.999))
-      val nDeduped = deduped.count()
-      lap(s"semanticDedup ($nDeduped rows)")
-      assert(nCurated > n / 2, s"curation dropped too much: $nCurated")
-      // quadruplets collapse ~4:1 (boundary groups and capped buckets
-      // keep extras) — pin a substantial, sane reduction
-      assert(nDeduped < nCurated * 2 / 3 && nDeduped > nCurated / 8,
-        s"semantic dedup out of band: $nCurated -> $nDeduped")
-      // 5. temperature mixture over the language mix (alpha = 0.5)
-      val mixed = Curation.temperatureMixture(deduped, "doc_id", "lang",
-        budget = nDeduped / 2)
-      val nMixed = mixed.count()
-      lap(s"temperatureMixture ($nMixed rows)")
-      // 6. split + per-language data card
-      val split = Splits.hashSplit(mixed, "doc_id",
-        Seq("train" -> 9000, "holdout" -> -1), seed = 7)
-      val card = CorpusStats.profile(
-        split.filter(col("split") === "train"), "lang", "text", "n_chars")
-        .collect()
-      lap("hashSplit + profile")
-      assert(nMixed <= nDeduped && nMixed > 0)
-      assert(card.length >= 2, "language tail must survive the mixture")
-      val sumDocs = card.map(_.getAs[Long]("n_docs")).sum
-      assert(sumDocs > 0 && sumDocs <= nMixed)
+      val ((nCurated, nDeduped, nMixed, sumDocs), c) = graft.tools.Probe(spark).measure {
+        val docs = spark.read.format("graft-synth")
+          .option("rows", n).option("partitions", 64)
+          .option("dupfraction", 0.1).load()
+        // deterministic embeddings in groups of 4: ids sharing id>>2 carry
+        // IDENTICAL vectors (planted semantic quadruplets), distinct
+        // groups hash apart — ~n/4 clusters for the LSH-bucketed dedup
+        val withVec = docs.withColumn("embedding",
+          transform(sequence(lit(1), lit(dim)), i =>
+            (pmod(xxhash64(shiftright(col("doc_id"), 2) * 31 + i), lit(1000))
+              .cast("double") / 500.0 - 1.0)))
+        // 1-3. curation: language allow-list, quality floor, exact dedup.
+        // Persisted: the production recipe materializes between expensive
+        // stages too — downstream the frame is referenced by both pair-join
+        // sides, the CC, the anti-join and the counts; without the persist
+        // the regex-heavy curation re-runs per consumer
+        val curated = OpCaches.persist(Curation.curate(withVec, "doc_id",
+          "text", allowedLangs = Seq("en", "de", "fr", "es", "zh", "und"),
+          minQuality = 20))
+        val nCurated = curated.count()
+        lap(s"curate ($nCurated rows)")
+        // 4. semantic dedup over the planted quadruplets (LSH buckets +
+        //    group-local CC; over-full buckets stay undeduped by contract)
+        val deduped = OpCaches.persist(Curation.semanticDedup(curated,
+          "doc_id", "embedding", dim = dim, threshold = 0.999))
+        val nDeduped = deduped.count()
+        lap(s"semanticDedup ($nDeduped rows)")
+        assert(nCurated > n / 2, s"curation dropped too much: $nCurated")
+        // quadruplets collapse ~4:1 (boundary groups and capped buckets
+        // keep extras) — pin a substantial, sane reduction
+        assert(nDeduped < nCurated * 2 / 3 && nDeduped > nCurated / 8,
+          s"semantic dedup out of band: $nCurated -> $nDeduped")
+        // 5. temperature mixture over the language mix (alpha = 0.5)
+        val mixed = Curation.temperatureMixture(deduped, "doc_id", "lang",
+          budget = nDeduped / 2)
+        val nMixed = mixed.count()
+        lap(s"temperatureMixture ($nMixed rows)")
+        // 6. split + per-language data card
+        val split = Splits.hashSplit(mixed, "doc_id",
+          Seq("train" -> 9000, "holdout" -> -1), seed = 7)
+        val card = CorpusStats.profile(
+          split.filter(col("split") === "train"), "lang", "text", "n_chars")
+          .collect()
+        lap("hashSplit + profile")
+        assert(nMixed <= nDeduped && nMixed > 0)
+        assert(card.length >= 2, "language tail must survive the mixture")
+        val sumDocs = card.map(_.getAs[Long]("n_docs")).sum
+        assert(sumDocs > 0 && sumDocs <= nMixed)
+        (nCurated, nDeduped, nMixed, sumDocs)
+      }
       val secs = (System.nanoTime() - t0) / 1e9
       info(f"recipe ${n / 1000000}%dM: ${secs}%.1fs wall, curated=$nCurated " +
         f"deduped=$nDeduped mixed=$nMixed train=$sumDocs " +
-        f"peakExecMem=${peak.get / (1 << 20)}%d MiB " +
-        f"spilled=${spilled.get / (1 << 20)}%d MiB " +
+        f"peakExecMem=${c.peakMem / (1 << 20)}%d MiB " +
+        f"spilled=${c.spill / (1 << 20)}%d MiB " +
         f"shufflePartitions=${spark.conf.get("spark.sql.shuffle.partitions")}")
       println(f"[recipe-drill] ${n / 1000000}%dM total ${secs}%.1fs " +
-        f"peak=${peak.get / (1 << 20)}%d MiB spill=${spilled.get / (1 << 20)}%d MiB " +
+        f"peak=${c.peakMem / (1 << 20)}%d MiB spill=${c.spill / (1 << 20)}%d MiB " +
         f"parts=${spark.conf.get("spark.sql.shuffle.partitions")}")
       // the bounded-state claim with a number attached: per-task
       // execution memory must stay far under the executor share even
       // with 5M docs — catches a q32-class corpus-proportional reducer
-      assert(peak.get < (4L << 30),
-        s"per-task peak execution memory ${peak.get} suggests unbounded state")
+      assert(c.peakMem < (4L << 30),
+        s"per-task peak execution memory ${c.peakMem} suggests unbounded state")
     } finally {
-      sc.removeSparkListener(listener)
       OpCaches.releaseAll()
       spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     }
@@ -972,20 +928,7 @@ class ScaleSpec extends AnyFunSuite {
     // numbers in BENCH_NOTES round 12.
     val n = sys.env.get("SPARK_GRAFT_DRILL_ROWS")
       .flatMap(_.toLongOption).getOrElse(1000000L)
-    val sc = spark.sparkContext
-    val peak = new java.util.concurrent.atomic.AtomicLong(0L)
-    val spilled = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          peak.getAndAccumulate(m.peakExecutionMemory, math.max(_, _))
-          spilled.addAndGet(m.memoryBytesSpilled)
-        }
-      }
-    }
-    sc.addSparkListener(listener)
+    val probe = graft.tools.Probe(spark)
     try {
       val docs = spark.read.format("graft-synth")
         .option("rows", n).option("partitions", 64)
@@ -1018,24 +961,28 @@ class ScaleSpec extends AnyFunSuite {
         all.select(d.as("doc_id"), url.as("url"), html.as("html")))
       val t0 = System.nanoTime()
       var tLast = t0
-      def lap(stage: String, rows: Long): Double = {
+      var peak, spilled = 0L
+      // each stage's rows, counted under the probe: peak is the max and
+      // spill the sum over the stages so far
+      def lap(stage: String)(count: => Long): Long = {
+        val (rows, c) = probe.measure(count)
+        peak = math.max(peak, c.peakMem)
+        spilled += c.spill
         val now = System.nanoTime()
         val secs = (now - tLast) / 1e9
         val line = f"  $stage: $secs%.1fs ($rows rows, " +
-          f"peak=${peak.get / (1 << 20)}%d MiB, spill=${spilled.get / (1 << 20)}%d MiB)"
+          f"peak=${peak / (1 << 20)}%d MiB, spill=${spilled / (1 << 20)}%d MiB)"
         println(s"[web-drill]$line")
         info(line)
         tLast = now
-        secs
+        rows
       }
-      val nCached = pages.count()
-      lap("materialize pages (generator, not the recipe)", nCached)
+      val nCached = lap("materialize pages (generator, not the recipe)")(pages.count())
       assert(nCached == nAll, s"cached $nCached, expected $nAll")
       // prefix 1: URL mark + keep filter (map-only)
       val marked = Url.mark(pages, "url", blockedDomains = Seq("tracker.net"))
         .filter(col("url_keep"))
-      val nUrl = marked.count()
-      lap("url mark+filter", nUrl)
+      val nUrl = lap("url mark+filter")(marked.count())
       // drops are the 1/13 blocked + 1/29 asset residues minus their CRT
       // overlap: keep ≈ 1 − 1/13 − 1/29 + 1/377 ≈ 89.1% (mutant ids land
       // on shifted residues, so a band, not an exact count)
@@ -1048,38 +995,34 @@ class ScaleSpec extends AnyFunSuite {
           .filter(TextOps.langGuess(col("content"))
             .isInCollection(Seq("en", "de", "fr", "es", "und")))
           .filter(TextOps.qualityScore(col("content")) >= 20), "content")
-      val nGate = gated.count()
-      lap("html+gates+scrub", nGate)
+      val nGate = lap("html+gates+scrub")(gated.count())
       assert(nGate > n / 2, s"gates dropped too much: $nGate")
       // prefix 3: + fingerprint dedup (shuffle #1). ~10% of pages are
       // punct mutants; each that survives the URL stage together with
       // its original collapses — demand a substantial fraction did
       val deduped = Dedup.exactDedupNormalizedByFingerprint(
         gated, "content_scrubbed", "doc_id").filter(col("keep"))
-      val nDedup = deduped.count()
-      lap("fingerprint dedup", nDedup)
+      val nDedup = lap("fingerprint dedup")(deduped.count())
       assert(nDedup < nGate - n / 20,
         s"planted mutants must collapse: $nGate -> $nDedup")
       // full fused chain (the operator itself; shuffle #2 = domain cap)
       val out = Curation.curateWeb(pages, "doc_id", "url", "html",
         allowedLangs = Seq("en", "de", "fr", "es", "und"), minQuality = 20,
         blockedDomains = Seq("tracker.net"), maxPerDomain = 3000)
-      val nFinal = out.count()
-      lap("FUSED curateWeb (cap 3000/domain)", nFinal)
+      val nFinal = lap("FUSED curateWeb (cap 3000/domain)")(out.count())
       assert(nFinal <= 1000L * 3000L && nFinal > 0, s"cap out of band: $nFinal")
       val secs = (System.nanoTime() - t0) / 1e9
       val line = f"web ${n / 1000000}%dM: total $secs%.1fs, url=$nUrl " +
         f"gated=$nGate deduped=$nDedup final=$nFinal " +
-        f"peakExecMem=${peak.get / (1 << 20)}%d MiB " +
-        f"spilled=${spilled.get / (1 << 20)}%d MiB"
+        f"peakExecMem=${peak / (1 << 20)}%d MiB " +
+        f"spilled=${spilled / (1 << 20)}%d MiB"
       println(s"[web-drill] $line")
       info(line)
       // bounded state: window buffers are duplicate-group / domain-group
       // sized, never corpus-proportional
-      assert(peak.get < (4L << 30),
-        s"per-task peak execution memory ${peak.get} suggests unbounded state")
+      assert(peak < (4L << 30),
+        s"per-task peak execution memory $peak suggests unbounded state")
     } finally {
-      sc.removeSparkListener(listener)
       OpCaches.releaseAll()
     }
   }
