@@ -511,8 +511,8 @@ object CorpusStats {
   /** Per-group heavy-hitters SUMMARIES — one `(group, summary)` row per
     * value of `groupCol` (day, shard, source). This is the cross-run
     * STATE format: the summary map is k-bounded (k × ~tokens bytes per
-    * group, independent of corpus size), parquet-persistable
-    * ([[saveHeavyHittersState]]), and mergeable later with
+    * group, independent of corpus size), handed off as parquet through
+    * [[graft.etl.Zones.materialize]], and mergeable later with
     * [[heavyHittersRollup]] under the composed MG bound — the
     * [[graft.ops.Incremental]] daily-pipeline story applied to
     * vocabulary tracking: today's run appends today's row; nothing is
@@ -522,15 +522,6 @@ object CorpusStats {
     docs.select(col(groupCol), explode(TextOps.tokens(col(textCol))).as("tok"))
       .groupBy(groupCol)
       .agg(heavyHittersAgg(col("tok"), k).as("summary"))
-
-  /** Persist per-group summary state (the [[Incremental.saveState]]
-    * snapshot convention: overwrite; path-per-run for audit history). */
-  def saveHeavyHittersState(state: DataFrame, path: String): Unit =
-    state.write.mode("overwrite").parquet(path)
-
-  def loadHeavyHittersState(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    spark.read.parquet(path)
 
   /** Roll persisted per-group summaries up into one `(token, est)`
     * summary via the [[graft.functions.MisraGriesAggregator]] roll-up. The

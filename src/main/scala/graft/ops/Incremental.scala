@@ -1,8 +1,10 @@
 package graft.ops
 
+import graft.etl.Zones
 import graft.functions.NativeFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Cross-RUN dedup / decontamination state — the incremental pattern a
   * daily pipeline needs (the reference re-runs its DAG every day and
@@ -27,6 +29,14 @@ import org.apache.spark.sql.functions._
   *    history signatures without recomputing them — shuffle ∝ today's
   *    bucket keys, history is never re-shingled.
   *
+  * HAND-OFF: a state table is written and read back with
+  * [[graft.etl.Zones.materialize]] (the read-back carries the writer's
+  * schema, so it starts no job); a fresh JVM reloads it with
+  * [[graft.etl.Zones.readParquet]]. A state rolls forward as
+  * `state.unionByName(xState(batch)).distinct()`, handed off to the NEXT
+  * run's path — one path per run: a hand-off into the path its frame
+  * reads is refused before anything is deleted.
+  *
   * INVARIANT (the q86 oracle): day-2 dedup against day-1 state, unioned
   * with day-1's own survivors, equals a from-scratch first-seen-wins
   * dedup over both days. First-seen-wins = earlier RUN wins, and within a
@@ -35,21 +45,9 @@ import org.apache.spark.sql.functions._
 object Incremental {
 
   /** Exact-dedup state of a batch: one row per distinct text fingerprint
-    * (column `fp`). Union with prior state via [[updatedState]]. */
+    * (column `fp`). */
   def fingerprintState(docs: DataFrame, textCol: String): DataFrame =
     docs.select(NativeFunctions.graft_fingerprint(col(textCol)).as("fp")).distinct()
-
-  /** Persist a state table (overwrite — state tables are snapshots; keep
-    * daily versions by pathing per run if audit history is needed). */
-  def saveState(state: DataFrame, path: String): Unit =
-    state.write.mode("overwrite").parquet(path)
-
-  def loadState(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** Roll the fingerprint state forward with a new batch. */
-  def updatedState(state: DataFrame, docs: DataFrame, textCol: String): DataFrame =
-    state.unionByName(fingerprintState(docs, textCol)).distinct()
 
   /** Dedup TODAY's batch within itself (smallest id per fingerprint wins)
     * AND against the prior fingerprint state: returns today's surviving
@@ -85,11 +83,6 @@ object Incremental {
   def urlState(pages: DataFrame, urlCol: String): DataFrame =
     pages.select(NativeFunctions.graft_fingerprint(
       Url.canonicalCompiled(col(urlCol))).as("url_fp")).distinct()
-
-  /** Roll the canonical-URL state forward with a new crawl batch. */
-  def updatedUrlState(state: DataFrame, pages: DataFrame,
-      urlCol: String): DataFrame =
-    state.unionByName(urlState(pages, urlCol)).distinct()
 
   /** Drop TODAY's pages whose canonical URL was already crawled: dedups
     * today WITHIN itself (smallest id per canonical URL wins — two
@@ -136,10 +129,6 @@ object Incremental {
   private def hashState(hashed: DataFrame, hashCol: String): DataFrame =
     hashed.select(col(hashCol)).filter(col(hashCol).isNotNull).distinct()
 
-  /** Roll the image-hash state forward with a new media batch. */
-  def updatedImageHashState(state: DataFrame, media: DataFrame): DataFrame =
-    state.unionByName(imageHashState(media)).distinct()
-
   /** Drop TODAY's images whose perceptual hash was already ingested:
     * within-day first-seen-wins (smallest id per dHash) + anti-join
     * against the prior [[imageHashState]] — [[dropSeenUrls]] keyed on
@@ -183,11 +172,6 @@ object Incremental {
   def imageBandState(media: DataFrame, bits: Int = 63, bands: Int = 7,
       maxDist: Int = 3): DataFrame =
     bandState(imageHashState(media), "dhash", bits, bands, maxDist)
-
-  /** Roll the banded image-hash state forward with a new media batch. */
-  def updatedImageBandState(state: DataFrame, media: DataFrame,
-      bits: Int = 63, bands: Int = 7, maxDist: Int = 3): DataFrame =
-    state.unionByName(imageBandState(media, bits, bands, maxDist)).distinct()
 
   /** The in-plan over-full-bucket guard shared by the within-distance
     * drops: appends a window count over (band, bv) and a filter that
@@ -314,11 +298,6 @@ object Incremental {
     bandState(hashState(Multimodal.withAudioPHashWide(media), "ahash31"),
       "ahash31", bits, bands, maxDist)
 
-  /** Roll the banded audio state forward with a new media batch. */
-  def updatedAudioBandState(state: DataFrame, media: DataFrame,
-      bits: Int = 31, bands: Int = 7, maxDist: Int = 2): DataFrame =
-    state.unionByName(audioBandState(media, bits, bands, maxDist)).distinct()
-
   /** Drop TODAY's clips whose WIDE fingerprint is within `maxDist` bits
     * of any fingerprint in the banded audio state —
     * [[dropSeenImagesWithinDist]] for sound (q148): re-encodes whose
@@ -348,10 +327,6 @@ object Incremental {
   def audioHashState(media: DataFrame): DataFrame =
     hashState(Multimodal.withAudioPHash(media), "ahash")
 
-  /** Roll the audio-fingerprint state forward with a new media batch. */
-  def updatedAudioHashState(state: DataFrame, media: DataFrame): DataFrame =
-    state.unionByName(audioHashState(media)).distinct()
-
   /** Drop TODAY's clips whose fingerprint was already ingested —
     * [[dropSeenImages]] keyed on decoded PCM instead of pixels (q145):
     * within-day first-seen-wins (smallest id per ahash) + anti-join
@@ -375,10 +350,6 @@ object Incremental {
       .filter(col("h_first").isNotNull)
       .select(col("n_frames"), col("h_first"), col("h_mid"), col("h_last"))
       .distinct()
-
-  /** Roll the video-sequence state forward with a new media batch. */
-  def updatedVideoSeqState(state: DataFrame, media: DataFrame): DataFrame =
-    state.unionByName(videoSeqState(media)).distinct()
 
   /** Drop TODAY's animations whose sequence fingerprint matches the
     * state within `maxDist` bits PER ANCHOR (equal frame counts, each of
@@ -430,21 +401,22 @@ object Incremental {
       .drop("n_frames", "h_first", "h_mid", "h_last")
   }
 
-  /** Persist a [[Bloom]] bit array (+ its hash count) as a one-row
-    * parquet table — constant-size decontamination state. */
+  /** Persist a [[Bloom]] bit array (+ its hash count) as a one-row,
+    * one-file parquet table — constant-size decontamination state. */
   def saveBloom(spark: SparkSession, path: String,
       bits: Array[Long], k: Int = Bloom.DefaultK): Unit = {
     import spark.implicits._
-    Seq((bits, k)).toDF("bits", "k").coalesce(1)
-      .write.mode("overwrite").parquet(path)
+    Zones.writeParquet(Seq((bits, k)).toDF("bits", "k"), path, singleFile = true)
   }
 
-  /** Load bloom state saved by [[saveBloom]]: (bits, k). */
+  /** Load bloom state saved by [[saveBloom]]: (bits, k), read with the
+    * schema it was written with (no inference job). */
   def loadBloom(spark: SparkSession, path: String): (Array[Long], Int) = {
-    val row = spark.read.parquet(path).head()
-    (row.getSeq[Long](row.fieldIndex("bits")).toArray,
-      row.getInt(row.fieldIndex("k")))
+    val row = Zones.read(spark, path, "parquet", BloomSchema).head()
+    (row.getSeq[Long](0).toArray, row.getInt(1))
   }
+
+  private val BloomSchema = StructType.fromDDL("bits array<bigint>, k int")
 
   /** Minhash signature state of a batch: (doc_id, sig) — store next to
     * the warehouse so later runs never re-shingle history. */

@@ -21,13 +21,13 @@ import org.apache.spark.sql.functions._
 object DataOpsQueries {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Per-run temp dirs for cross-run-state queries (q136/q138/q142):
-    * unique per invocation (two concurrent sessions must never clobber
-    * each other's state mid-query), all deleted by ONE JVM-exit hook —
-    * registering a hook per invocation would accumulate hooks across
-    * bench laps. Deletion is exit-time, not end-of-query, because the
-    * loaded state is read LAZILY when the caller materializes the
-    * result. */
+  /** Per-run temp dirs for the cross-run-state queries (q86, q136, q138,
+    * q142–q148): unique per invocation (two concurrent sessions must never
+    * clobber each other's state mid-query), all deleted by ONE JVM-exit
+    * hook — registering a hook per invocation would accumulate hooks
+    * across bench laps. Deletion is exit-time, not end-of-query, because
+    * the handed-off state ([[graft.etl.Zones.materialize]]) is read
+    * LAZILY when the caller materializes the result. */
   private object TempState {
     private val dirs =
       new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
@@ -44,6 +44,41 @@ object DataOpsQueries {
       dirs.add(d)
       d
     }
+  }
+
+  /** The two-run story of the cross-run-state queries: run 1 drops `day1`
+    * against the `empty` state; day 1's `state1` (built after run 1) is
+    * handed off to a fresh [[TempState]] path with
+    * [[graft.etl.Zones.materialize]]; run 2 drops `day2` against the
+    * read-back. `drop(batch, idCol, state)` is the query's cross-run drop.
+    * The survivors come back as (`idCol` as doc_id, day 0/1), through
+    * `annotate`, ordered by doc_id. */
+  private def twoRuns(stateDir: String, idCol: String, day1: DataFrame,
+      day2: DataFrame, empty: DataFrame, state1: => DataFrame,
+      drop: (DataFrame, String, DataFrame) => DataFrame,
+      annotate: DataFrame => DataFrame = identity): DataFrame = {
+    val statePath = TempState.dir(stateDir).resolve("state.parquet").toString
+    val run1 = drop(day1, idCol, empty)
+    val run2 = drop(day2, idCol, graft.etl.Zones.materialize(state1, statePath))
+    // a doc_id id is not re-aliased: the alias would stay in the plan
+    def survivors(run: DataFrame, day: Int) = run.select(
+      if (idCol == "doc_id") col(idCol) else col(idCol).as("doc_id"), lit(day).as("day"))
+    annotate(survivors(run1, 0).unionByName(survivors(run2, 1))).orderBy("doc_id")
+  }
+
+  /** The media queries' two days over `docs` (one `doc_id` column): day 1
+    * is the even ids, rendered by `fresh`; day 2 is the odd ids — those
+    * with `id % 7 == 3` are new media (`fresh`), every other one
+    * re-encodes base `id − 1` (`reencode` over a `base` column, rendered
+    * at `idOffset = 1` so the copy keeps the odd id). */
+  private def mediaDays(docs: DataFrame, fresh: DataFrame => DataFrame,
+      reencode: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+    val d = col("doc_id")
+    val day1 = fresh(docs.filter(pmod(d, lit(2L)) === 0L))
+    val olds = reencode(docs.filter(pmod(d, lit(2L)) === 1L && pmod(d, lit(7L)) =!= 3L)
+      .select((d - 1L).as("base")))
+    val news = fresh(docs.filter(pmod(d, lit(2L)) === 1L && pmod(d, lit(7L)) === 3L))
+    (day1, olds.unionByName(news))
   }
 
   /** Embedding dimensionality of the driver's `embeddings` table (fixed 64
@@ -1584,7 +1619,7 @@ object DataOpsQueries {
         |COUNT(DISTINCT dom) AS n_domains
         |FROM capped GROUP BY 1 ORDER BY 1""".stripMargin,
     // Cross-run heavy-hitters roll-up: the k=64 path through the
-    // persist/reload seam is exact (per-day and merged vocab <= k), so
+    // hand-off seam is exact (per-day and merged vocab <= k), so
     // the oracle is the same from-scratch GROUP BY as q131; the k=8
     // roll-up verdicts are the composed mergeable-summary guarantees,
     // TRUE for any merge order and day split.
@@ -2522,11 +2557,11 @@ object DataOpsQueries {
   }
 
   /** CROSS-RUN heavy-hitters state ([[CorpusStats.heavyHittersByGroup]]
-    * → parquet persist → reload → [[CorpusStats.heavyHittersRollup]]) —
+    * → zone hand-off → [[CorpusStats.heavyHittersRollup]]) —
     * the q86 incremental-dedup story applied to vocabulary tracking:
     * per-day MG summaries are computed once, saved as k-bounded state
     * rows, and a later run rolls them up WITHOUT re-tokenizing history.
-    * Both q131 regimes run through the persist/reload seam: the k=64
+    * Both q131 regimes run through the hand-off seam: the k=64
     * roll-up is provably EXACT (per-day vocab ≤ k, merged vocab ≤ k —
     * no counter subtraction ever fires) and hash-compared against a
     * from-scratch GROUP BY; the k=8 roll-up's composed mergeable-
@@ -2542,9 +2577,8 @@ object DataOpsQueries {
       .join(graft.ops.CorpusStats
         .heavyHittersByGroup(byDay, "text", "day", 8)
         .withColumnRenamed("summary", "summary8"), Seq("day"))
-    val statePath = TempState.dir("graft_q136_hh_state").toString
-    graft.ops.CorpusStats.saveHeavyHittersState(daily, statePath)
-    val state = graft.ops.CorpusStats.loadHeavyHittersState(s, statePath)
+    val state = graft.etl.Zones.materialize(daily,
+      TempState.dir("graft_q136_hh_state").toString)
     val exact = graft.ops.CorpusStats.heavyHittersRollup(state, "summary", 64)
       .withColumnRenamed("est", "cnt")
     val approx = graft.ops.CorpusStats.heavyHittersRollup(state, "summary8", 8)
@@ -2581,7 +2615,7 @@ object DataOpsQueries {
   }
 
   /** Cross-run URL-level dedup — the RECRAWL story ([[Incremental
-    * .urlState]] → parquet persist → reload → [[Incremental
+    * .urlState]] → zone hand-off → [[Incremental
     * .dropSeenUrls]]): day-1's crawl seeds the canonical-URL fingerprint
     * state; day-2 drops already-crawled pages at the URL stage, before
     * any HTML would be parsed. Planted evidence: day-2 URLs differ from
@@ -2607,17 +2641,10 @@ object DataOpsQueries {
           lit("/?fbclid=x")))
     val pages = docs.withColumn("url", url)
     val day1 = pages.filter(m(2) === 0L)
-    val day2 = pages.filter(m(2) === 1L)
-    val statePath =
-      TempState.dir("graft_url_state").resolve("state.parquet").toString
-    val emptyState = s.range(0).select(col("id").as("url_fp"))
-    val run1 = Incremental.dropSeenUrls(day1, "doc_id", "url", emptyState)
-    Incremental.saveState(Incremental.urlState(day1, "url"), statePath)
-    val run2 = Incremental.dropSeenUrls(day2, "doc_id", "url",
-      Incremental.loadState(s, statePath))
-    run1.select(col("doc_id"), lit(0).as("day"))
-      .unionByName(run2.select(col("doc_id"), lit(1).as("day")))
-      .withColumn("canonical_url",
+    twoRuns("graft_url_state", "doc_id", day1, pages.filter(m(2) === 1L),
+      s.range(0).select(col("id").as("url_fp")), Incremental.urlState(day1, "url"),
+      Incremental.dropSeenUrls(_, _, "url", _),
+      _.withColumn("canonical_url",
         graft.ops.Url.canonicalCompiled(
           when(pmod(col("doc_id"), lit(2L)) === 1L &&
               pmod(col("doc_id"), lit(7L)) === 3L,
@@ -2625,8 +2652,7 @@ object DataOpsQueries {
               lit(".com/doc")))
           .otherwise(concat(lit("https://www.site"),
             pmod(col("doc_id"), lit(351L)).cast("string"), lit(".com/doc/"),
-            pmod(col("doc_id"), lit(351L)).cast("string")))))
-      .orderBy("doc_id")
+            pmod(col("doc_id"), lit(351L)).cast("string"))))))
   }
 
   /** REAL multi-frame decode for frame sampling ([[Multimodal
@@ -2711,7 +2737,7 @@ object DataOpsQueries {
   }
 
   /** Cross-run PERCEPTUAL image dedup ([[Incremental.imageHashState]] →
-    * parquet persist → reload → [[Incremental.dropSeenImages]]) — q138's
+    * zone hand-off → [[Incremental.dropSeenImages]]) — q138's
     * recrawl story keyed on decoded PIXELS: day-2 carries brightness
     * RE-ENCODES of day-1 images (different payload bytes — a byte/URL
     * key waves every one of them through) that must drop against the
@@ -2722,29 +2748,14 @@ object DataOpsQueries {
     * hash — the q86 invariant, perceptual-keyed. */
   val q142IncrementalImages: Q = (s, dir) => {
     import graft.ops.Incremental
-    val docs = load(s, dir, "documents").select("doc_id")
-    val d = col("doc_id")
-    val day1 = Multimodal.synthImagesShifted(
-      docs.filter(pmod(d, lit(2L)) === 0L), "doc_id", delta = 0)
     // day-2 re-encodes: odd id j renders BASE j-1 at delta 20 (same
     // dHash as day-1's render of j-1 when that base was rendered)
-    val olds = Multimodal.synthImagesShifted(
-      docs.filter(pmod(d, lit(2L)) === 1L && pmod(d, lit(7L)) =!= 3L)
-        .select((d - 1L).as("base")), "base", delta = 20, idOffset = 1L)
-    val news = Multimodal.synthImagesShifted(
-      docs.filter(pmod(d, lit(2L)) === 1L && pmod(d, lit(7L)) === 3L),
-      "doc_id", delta = 0)
-    val day2 = olds.unionByName(news)
-    val statePath =
-      TempState.dir("graft_img_state").resolve("state.parquet").toString
-    val empty = s.range(0).select(col("id").as("dhash"))
-    val run1 = Incremental.dropSeenImages(day1, "media_id", empty)
-    Incremental.saveState(Incremental.imageHashState(day1), statePath)
-    val run2 = Incremental.dropSeenImages(day2, "media_id",
-      Incremental.loadState(s, statePath))
-    run1.select(col("media_id").as("doc_id"), lit(0).as("day"))
-      .unionByName(run2.select(col("media_id").as("doc_id"), lit(1).as("day")))
-      .orderBy("doc_id")
+    val (day1, day2) = mediaDays(load(s, dir, "documents").select("doc_id"),
+      Multimodal.synthImagesShifted(_, "doc_id", delta = 0),
+      Multimodal.synthImagesShifted(_, "base", delta = 20, idOffset = 1L))
+    twoRuns("graft_img_state", "media_id", day1, day2,
+      s.range(0).select(col("id").as("dhash")), Incremental.imageHashState(day1),
+      Incremental.dropSeenImages)
   }
 
   /** ftfy-style mojibake repair ([[TextOps.fixMojibake]] — cp1252
@@ -2774,7 +2785,7 @@ object DataOpsQueries {
   }
 
   /** Cross-run WITHIN-DISTANCE perceptual image dedup
-    * ([[Incremental.imageBandState]] → parquet persist → reload →
+    * ([[Incremental.imageBandState]] → zone hand-off →
     * [[Incremental.dropSeenImagesWithinDist]]) — q142's recall gap
     * closed (r13 verdict #1): day-2 carries DRIFTED re-encodes of day-1
     * images (brightness-shifted AND corner-bumped —
@@ -2790,37 +2801,21 @@ object DataOpsQueries {
     * rule exactly. */
   val q144IncrementalImagesNear: Q = (s, dir) => {
     import graft.ops.Incremental
-    val docs = load(s, dir, "documents").select("doc_id")
-    val d = col("doc_id")
-    val day1 = Multimodal.synthImagesShifted(
-      docs.filter(pmod(d, lit(2L)) === 0L), "doc_id", delta = 0)
     // day-2 drifted re-encodes: odd id j renders BASE j-1 brightness
     // +20 AND corner-bumped +30 — within Hamming 3 of day-1's render
-    val drift = Multimodal.synthImagesShiftedBumped(
-      docs.filter(pmod(d, lit(2L)) === 1L && pmod(d, lit(7L)) =!= 3L)
-        .select((d - 1L).as("base")), "base", delta = 20, bump = 30,
-      idOffset = 1L)
-    val news = Multimodal.synthImagesShifted(
-      docs.filter(pmod(d, lit(2L)) === 1L && pmod(d, lit(7L)) === 3L),
-      "doc_id", delta = 0)
-    val day2 = drift.unionByName(news)
-    val statePath =
-      TempState.dir("graft_imgband_state").resolve("state.parquet").toString
-    val emptyState = s.range(0).select(
-      col("id").cast("int").as("band"), col("id").as("bv"),
-      col("id").as("dhash"))
-    val run1 = Incremental.dropSeenImagesWithinDist(day1, "media_id",
-      emptyState)
-    Incremental.saveState(Incremental.imageBandState(day1), statePath)
-    val run2 = Incremental.dropSeenImagesWithinDist(day2, "media_id",
-      Incremental.loadState(s, statePath))
-    run1.select(col("media_id").as("doc_id"), lit(0).as("day"))
-      .unionByName(run2.select(col("media_id").as("doc_id"), lit(1).as("day")))
-      .orderBy("doc_id")
+    val (day1, day2) = mediaDays(load(s, dir, "documents").select("doc_id"),
+      Multimodal.synthImagesShifted(_, "doc_id", delta = 0),
+      Multimodal.synthImagesShiftedBumped(_, "base", delta = 20, bump = 30,
+        idOffset = 1L))
+    twoRuns("graft_imgband_state", "media_id", day1, day2,
+      s.range(0).select(col("id").cast("int").as("band"), col("id").as("bv"),
+        col("id").as("dhash")),
+      Incremental.imageBandState(day1),
+      Incremental.dropSeenImagesWithinDist(_, _, _))
   }
 
   /** Cross-run perceptual AUDIO dedup ([[Incremental.audioHashState]] →
-    * parquet persist → reload → [[Incremental.dropSeenAudio]]) — q142's
+    * zone hand-off → [[Incremental.dropSeenAudio]]) — q142's
     * recrawl story on the time axis (r13 verdict #3): day-2 carries
     * POLARITY-INVERTED re-encodes of day-1 clips (every sample negated —
     * byte-for-byte different payloads a byte key waves through, an
@@ -2832,27 +2827,12 @@ object DataOpsQueries {
     * per fingerprint — the q86 invariant, audio-keyed. */
   val q145IncrementalAudio: Q = (s, dir) => {
     import graft.ops.Incremental
-    val docs = load(s, dir, "documents").select("doc_id")
-    val d = col("doc_id")
-    val day1 = Multimodal.synthAudioSigned(
-      docs.filter(pmod(d, lit(2L)) === 0L), "doc_id", sign = 1)
-    val reenc = Multimodal.synthAudioSigned(
-      docs.filter(pmod(d, lit(2L)) === 1L && pmod(d, lit(7L)) =!= 3L)
-        .select((d - 1L).as("base")), "base", sign = -1, idOffset = 1L)
-    val news = Multimodal.synthAudioSigned(
-      docs.filter(pmod(d, lit(2L)) === 1L && pmod(d, lit(7L)) === 3L),
-      "doc_id", sign = 1)
-    val day2 = reenc.unionByName(news)
-    val statePath =
-      TempState.dir("graft_audio_state").resolve("state.parquet").toString
-    val empty = s.range(0).select(col("id").as("ahash"))
-    val run1 = Incremental.dropSeenAudio(day1, "media_id", empty)
-    Incremental.saveState(Incremental.audioHashState(day1), statePath)
-    val run2 = Incremental.dropSeenAudio(day2, "media_id",
-      Incremental.loadState(s, statePath))
-    run1.select(col("media_id").as("doc_id"), lit(0).as("day"))
-      .unionByName(run2.select(col("media_id").as("doc_id"), lit(1).as("day")))
-      .orderBy("doc_id")
+    val (day1, day2) = mediaDays(load(s, dir, "documents").select("doc_id"),
+      Multimodal.synthAudioSigned(_, "doc_id", sign = 1),
+      Multimodal.synthAudioSigned(_, "base", sign = -1, idOffset = 1L))
+    twoRuns("graft_audio_state", "media_id", day1, day2,
+      s.range(0).select(col("id").as("ahash")), Incremental.audioHashState(day1),
+      Incremental.dropSeenAudio)
   }
 
   /** Video-sequence perceptual fingerprint ([[Multimodal.withVideoSeqHash]]
@@ -2896,7 +2876,7 @@ object DataOpsQueries {
   }
 
   /** Cross-run VIDEO-sequence dedup ([[Incremental.videoSeqState]] →
-    * parquet persist → reload → [[Incremental.dropSeenVideoSeqs]]) —
+    * zone hand-off → [[Incremental.dropSeenVideoSeqs]]) —
     * the q144 recrawl story for ANIMATIONS: day-2 carries re-encodes of
     * day-1 animations that are brightness-shifted AND first-frame
     * corner-drifted ([[Multimodal.synthGifShiftedBumped]] — 0–3 flipped
@@ -2910,34 +2890,19 @@ object DataOpsQueries {
     * exhaustive. */
   val q147IncrementalVideo: Q = (s, dir) => {
     import graft.ops.Incremental
-    val docs = load(s, dir, "documents").select("doc_id")
-    val d = col("doc_id")
-    val day1 = Multimodal.synthGifsShifted(
-      docs.filter(pmod(d, lit(2L)) === 0L), "doc_id", delta = 0)
-    val drift = Multimodal.synthGifsShiftedBumped(
-      docs.filter(pmod(d, lit(2L)) === 1L && pmod(d, lit(7L)) =!= 3L)
-        .select((d - 1L).as("base")), "base", delta = 20, bump = 30,
-      idOffset = 1L)
-    val news = Multimodal.synthGifsShifted(
-      docs.filter(pmod(d, lit(2L)) === 1L && pmod(d, lit(7L)) === 3L),
-      "doc_id", delta = 0)
-    val day2 = drift.unionByName(news)
-    val statePath =
-      TempState.dir("graft_vid_state").resolve("state.parquet").toString
-    val empty = s.range(0).select(
-      col("id").cast("int").as("n_frames"), col("id").as("h_first"),
-      col("id").as("h_mid"), col("id").as("h_last"))
-    val run1 = Incremental.dropSeenVideoSeqs(day1, "media_id", empty)
-    Incremental.saveState(Incremental.videoSeqState(day1), statePath)
-    val run2 = Incremental.dropSeenVideoSeqs(day2, "media_id",
-      Incremental.loadState(s, statePath))
-    run1.select(col("media_id").as("doc_id"), lit(0).as("day"))
-      .unionByName(run2.select(col("media_id").as("doc_id"), lit(1).as("day")))
-      .orderBy("doc_id")
+    val (day1, day2) = mediaDays(load(s, dir, "documents").select("doc_id"),
+      Multimodal.synthGifsShifted(_, "doc_id", delta = 0),
+      Multimodal.synthGifsShiftedBumped(_, "base", delta = 20, bump = 30,
+        idOffset = 1L))
+    twoRuns("graft_vid_state", "media_id", day1, day2,
+      s.range(0).select(col("id").cast("int").as("n_frames"),
+        col("id").as("h_first"), col("id").as("h_mid"), col("id").as("h_last")),
+      Incremental.videoSeqState(day1),
+      Incremental.dropSeenVideoSeqs(_, _, _))
   }
 
   /** Cross-run WITHIN-DISTANCE audio dedup ([[Incremental.audioBandState]]
-    * → parquet persist → reload → [[Incremental.dropSeenAudioWithinDist]])
+    * → zone hand-off → [[Incremental.dropSeenAudioWithinDist]])
     * — q144's drift story for SOUND, on the WIDE 31-bit fingerprint
     * ([[Multimodal.audioPHash31]], 32 energy segments — the 15-bit key
     * is too coarse to near-match): day-2 carries DRIFTED re-encodes of
@@ -2951,29 +2916,14 @@ object DataOpsQueries {
     * exhaustive. */
   val q148IncrementalAudioNear: Q = (s, dir) => {
     import graft.ops.Incremental
-    val docs = load(s, dir, "documents").select("doc_id")
-    val d = col("doc_id")
-    val day1 = Multimodal.synthAudio(docs.filter(pmod(d, lit(2L)) === 0L),
-      "doc_id")
-    val drift = Multimodal.synthAudioBumped(
-      docs.filter(pmod(d, lit(2L)) === 1L && pmod(d, lit(7L)) =!= 3L)
-        .select((d - 1L).as("base")), "base", bump = 40, idOffset = 1L)
-    val news = Multimodal.synthAudio(
-      docs.filter(pmod(d, lit(2L)) === 1L && pmod(d, lit(7L)) === 3L),
-      "doc_id")
-    val day2 = drift.unionByName(news)
-    val statePath =
-      TempState.dir("graft_audioband_state").resolve("state.parquet").toString
-    val empty = s.range(0).select(
-      col("id").cast("int").as("band"), col("id").as("bv"),
-      col("id").as("ahash31"))
-    val run1 = Incremental.dropSeenAudioWithinDist(day1, "media_id", empty)
-    Incremental.saveState(Incremental.audioBandState(day1), statePath)
-    val run2 = Incremental.dropSeenAudioWithinDist(day2, "media_id",
-      Incremental.loadState(s, statePath))
-    run1.select(col("media_id").as("doc_id"), lit(0).as("day"))
-      .unionByName(run2.select(col("media_id").as("doc_id"), lit(1).as("day")))
-      .orderBy("doc_id")
+    val (day1, day2) = mediaDays(load(s, dir, "documents").select("doc_id"),
+      Multimodal.synthAudio(_, "doc_id"),
+      Multimodal.synthAudioBumped(_, "base", bump = 40, idOffset = 1L))
+    twoRuns("graft_audioband_state", "media_id", day1, day2,
+      s.range(0).select(col("id").cast("int").as("band"), col("id").as("bv"),
+        col("id").as("ahash31")),
+      Incremental.audioBandState(day1),
+      Incremental.dropSeenAudioWithinDist(_, _, _))
   }
 
   /** The COMPOSED media-curation recipe ([[graft.ops.Curation.curateMedia]]
@@ -3894,17 +3844,6 @@ object DataOpsQueries {
       .orderBy("l_returnflag")
   }
 
-  /** Cross-run incremental dedup ([[graft.ops.Incremental]]): the corpus
-    * split into two "daily runs" (even doc_ids = day 0, odd = day 1);
-    * day 0 dedups within itself and PERSISTS its fingerprint state as
-    * parquet; day 1 then dedups against the LOADED state — and the union
-    * of both runs' survivors must equal a from-scratch first-seen-wins
-    * dedup over the whole corpus, which is exactly what the DuckDB oracle
-    * computes (the fingerprint is the engine-independent q46 rolling
-    * hash, so the oracle replays the incremental run end-to-end,
-    * collisions and all). The parquet round-trip is deliberately part of
-    * the query: the state artifact, not the in-memory frame, is the
-    * contract. */
   /** BYTE-LEVEL BPE training ([[graft.ops.CorpusStats.bpeTrain]] with
     * [[graft.ops.CorpusStats.byteTokens]]): 3 merge rounds over UTF-8
     * byte tokens with `</w>` end-of-word markers — how production
@@ -3919,21 +3858,25 @@ object DataOpsQueries {
       rounds = 3)
   }
 
+  /** Cross-run incremental dedup ([[graft.ops.Incremental]]): the corpus
+    * split into two "daily runs" (even doc_ids = day 0, odd = day 1);
+    * day 0 dedups within itself and HANDS OFF its fingerprint state as
+    * parquet; day 1 then dedups against the read-back state — and the union
+    * of both runs' survivors must equal a from-scratch first-seen-wins
+    * dedup over the whole corpus, which is exactly what the DuckDB oracle
+    * computes (the fingerprint is the engine-independent q46 rolling
+    * hash, so the oracle replays the incremental run end-to-end,
+    * collisions and all). The parquet round-trip is deliberately part of
+    * the query: the state artifact, not the in-memory frame, is the
+    * contract. */
   val q86IncrementalDedup: Q = (s, dir) => {
     import graft.ops.Incremental
     val docs = load(s, dir, "documents")
     val day0 = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
-    val day1 = docs.filter(pmod(col("doc_id"), lit(2)) === 1)
-    val statePath =
-      TempState.dir("graft_fp_state").resolve("state.parquet").toString
-    val emptyState = s.range(0).select(col("id").as("fp"))
-    val run0 = Incremental.dedupAgainstState(day0, "doc_id", "text", emptyState)
-    Incremental.saveState(Incremental.fingerprintState(day0, "text"), statePath)
-    val run1 = Incremental.dedupAgainstState(day1, "doc_id", "text",
-      Incremental.loadState(s, statePath))
-    run0.select(col("doc_id"), lit(0).as("day"))
-      .unionByName(run1.select(col("doc_id"), lit(1).as("day")))
-      .orderBy("doc_id")
+    twoRuns("graft_fp_state", "doc_id", day0,
+      docs.filter(pmod(col("doc_id"), lit(2)) === 1),
+      s.range(0).select(col("id").as("fp")), Incremental.fingerprintState(day0, "text"),
+      Incremental.dedupAgainstState(_, _, "text", _))
   }
 
   /** KMV (theta) set-operation sketch ([[graft.ops.Kmv]]) audited against

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** The local filesystem under the `failzone` scheme, except that it
   * refuses to create any directory whose path contains the fragment in
@@ -305,6 +306,23 @@ class EtlSpec extends AnyFunSuite {
       intercept[IllegalArgumentException](overwrite())
       assert(partFiles(s"$out/$dir") == before, dir)
     }
+  }
+
+  test("src/main writes DataFrames to paths only through the zone writers") {
+    // any other parquet or mode(…) write skips the writers' refusal to
+    // overwrite what the frame reads; Verify's result dump writes fresh
+    // output paths, and noop writes (measurement) write nothing
+    val allowed = Set("src/main/scala/graft/etl/Zones.scala", "src/main/scala/graft/Verify.scala")
+    val write = """\.write(\.|\s*$)|\.mode\(""".r
+    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    assert(sources.exists(_.toString == "src/main/scala/graft/etl/Zones.scala"))
+    val offenders = for {
+      p <- sources if !allowed(p.toString)
+      (line, i) <- java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
+      if write.findFirstIn(line).isDefined && !line.contains("\"noop\"")
+    } yield s"$p:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("run starts one job per zone write plus the dim shuffles and fact broadcasts; " +

@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.GraftSession
+import graft.etl.Zones
 import graft.ops.CorpusStats
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -39,24 +40,20 @@ class MisraGriesSpec extends AnyFunSuite {
 
   test("cross-run roll-up: persisted per-group summaries merge to the one-pass result") {
     // the q136 seam end-to-end at law level: per-day summaries ->
-    // parquet -> reload -> MisraGriesAggregator roll-up. Exact
+    // zone hand-off -> MisraGriesAggregator roll-up. Exact
     // regime: equals BOTH the true counts and the single-pass summary.
     val df = stream(parts = 8, seed = 3)
       .withColumn("day", pmod(monotonically_increasing_id(), lit(4L)))
     val path = java.nio.file.Files
       .createTempDirectory("mg_state").toString + "/state"
-    CorpusStats.saveHeavyHittersState(
-      CorpusStats.heavyHittersByGroup(df, "text", "day", 64), path)
-    val rolled = CorpusStats.heavyHittersRollup(
-        CorpusStats.loadHeavyHittersState(spark, path), "summary", 64)
+    val rolled = CorpusStats.heavyHittersRollup(Zones.materialize(
+        CorpusStats.heavyHittersByGroup(df, "text", "day", 64), path), "summary", 64)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(rolled == trueCounts)
     assert(rolled == summarize(stream(8, 3), 64))
     // approximate regime through the same seam: the composed bound holds
-    CorpusStats.saveHeavyHittersState(
-      CorpusStats.heavyHittersByGroup(df, "text", "day", 4), path)
-    val rolled4 = CorpusStats.heavyHittersRollup(
-        CorpusStats.loadHeavyHittersState(spark, path), "summary", 4)
+    val rolled4 = CorpusStats.heavyHittersRollup(Zones.materialize(
+        CorpusStats.heavyHittersByGroup(df, "text", "day", 4), path), "summary", 4)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     rolled4.foreach { case (t, est) =>
       assert(est <= trueCounts(t), s"$t over-counted: $est")

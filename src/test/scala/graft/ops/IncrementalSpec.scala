@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.GraftSession
+import graft.etl.Zones
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -30,9 +31,8 @@ class IncrementalSpec extends AnyFunSuite {
     val path = tmp("fp_state")
     val empty = spark.range(0).select(col("id").as("fp"))
     val run0 = Incremental.dedupAgainstState(day0, "doc_id", "text", empty)
-    Incremental.saveState(Incremental.fingerprintState(day0, "text"), path)
-    val run1 = Incremental.dedupAgainstState(day1, "doc_id", "text",
-      Incremental.loadState(spark, path))
+    val state = Zones.materialize(Incremental.fingerprintState(day0, "text"), path)
+    val run1 = Incremental.dedupAgainstState(day1, "doc_id", "text", state)
     val incremental = (run0.select("doc_id") unionByName run1.select("doc_id"))
       .as[Long].collect().toSet
     // from-scratch: smallest (day, doc_id) per fingerprint wins
@@ -48,8 +48,7 @@ class IncrementalSpec extends AnyFunSuite {
     assert(incremental == scratch)
     // the state rolls forward: after folding day-1 in, nothing survives a
     // third run of the SAME corpus (idempotent re-ingest)
-    val full = Incremental.updatedState(
-      Incremental.loadState(spark, path), day1, "text")
+    val full = state.unionByName(Incremental.fingerprintState(day1, "text")).distinct()
     assert(Incremental.dedupAgainstState(docs, "doc_id", "text", full).count() == 0)
   }
 
@@ -104,13 +103,12 @@ class IncrementalSpec extends AnyFunSuite {
       (3L, "a third document with its own unrelated words entirely"))
       .toDF("doc_id", "text")
     val path = tmp("sig_state")
-    Incremental.saveState(Incremental.signatureState(day1, "doc_id", "text"), path)
+    val state = Zones.materialize(Incremental.signatureState(day1, "doc_id", "text"), path)
     val day2 = Seq(
       (11L, "the quick brown fox jumps over the lazy dog again and again"),
       (12L, "fresh never-seen material mentioning volcanoes and glaciers today"))
       .toDF("doc_id", "text")
-    val pairs = Incremental.nearDupsAgainstState(day2, "doc_id", "text",
-      Incremental.loadState(spark, path))
+    val pairs = Incremental.nearDupsAgainstState(day2, "doc_id", "text", state)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((11L, 1L)), s"cross-run twin not found: $pairs")
     assert(!pairs.exists(_._1 == 12L), s"fresh doc falsely flagged: $pairs")
@@ -135,20 +133,18 @@ class IncrementalSpec extends AnyFunSuite {
     val empty = spark.range(0).select(col("id").as("url_fp"))
     val run1 = Incremental.dropSeenUrls(day1, "doc_id", "url", empty)
     assert(run1.select("doc_id").as[Long].collect().toSet == Set(2L, 4L))
-    Incremental.saveState(Incremental.urlState(day1, "url"), path)
-    val run2 = Incremental.dropSeenUrls(day2, "doc_id", "url",
-      Incremental.loadState(spark, path))
+    val state = Zones.materialize(Incremental.urlState(day1, "url"), path)
+    val run2 = Incremental.dropSeenUrls(day2, "doc_id", "url", state)
     assert(run2.select("doc_id").as[Long].collect().toSet == Set(13L, 17L))
     // roll the state forward; a day-3 re-fetch of a DAY-2 page drops too
     val path2 = tmp("url_state2")
-    Incremental.saveState(Incremental.updatedUrlState(
-      Incremental.loadState(spark, path), day2, "url"), path2)
+    val state2 = Zones.materialize(
+      state.unionByName(Incremental.urlState(day2, "url")).distinct(), path2)
     val day3 = Seq(
       (21L, "https://www.site4.com/doc/4?utm_medium=x"), // day-2 page
       (23L, "https://site9.com/brand-new")
     ).toDF("doc_id", "url")
-    val run3 = Incremental.dropSeenUrls(day3, "doc_id", "url",
-      Incremental.loadState(spark, path2))
+    val run3 = Incremental.dropSeenUrls(day3, "doc_id", "url", state2)
     assert(run3.select("doc_id").as[Long].collect().toSet == Set(23L))
   }
 
@@ -170,19 +166,17 @@ class IncrementalSpec extends AnyFunSuite {
       .withColumn("meta", lit(null).cast(Multimodal.mediaMetaSchema))
     val day2 = reenc.unionByName(fresh).unionByName(junk)
     val path = tmp("img_state")
-    Incremental.saveState(Incremental.imageHashState(day1), path)
-    val out = Incremental.dropSeenImages(day2, "media_id",
-      Incremental.loadState(spark, path))
+    val state = Zones.materialize(Incremental.imageHashState(day1), path)
+    val out = Incremental.dropSeenImages(day2, "media_id", state)
     val kept = out.select("media_id").as[Long].collect().toSet
     assert(kept == Set(1034L, 1069L, 1104L, 9999L), kept)
     // roll-forward: day-3 re-encode of a DAY-2 image drops too
     val path2 = tmp("img_state2")
-    Incremental.saveState(Incremental.updatedImageHashState(
-      Incremental.loadState(spark, path), day2), path2)
+    val state2 = Zones.materialize(
+      state.unionByName(Incremental.imageHashState(day2)).distinct(), path2)
     val day3 = Multimodal.synthImagesShifted(Seq(69L).toDF("id"), "id",
       delta = 40, idOffset = 2000L)
-    assert(Incremental.dropSeenImages(day3, "media_id",
-      Incremental.loadState(spark, path2)).count() == 0)
+    assert(Incremental.dropSeenImages(day3, "media_id", state2).count() == 0)
   }
 
   test("banded image state: drifted re-encodes drop within maxDist, distant images survive (q144 invariant)") {
@@ -217,33 +211,30 @@ class IncrementalSpec extends AnyFunSuite {
         .withColumn("meta", lit(null).cast(Multimodal.mediaMetaSchema))
     val day1 = media(1L -> grayPng(base))
     val path = tmp("imgband_state")
-    Incremental.saveState(Incremental.imageBandState(day1), path)
+    val state = Zones.materialize(Incremental.imageBandState(day1), path)
     val day2 = media(
       11L -> grayPng(drifted),   // within 3 bits: DROP (exact state missed it)
       12L -> grayPng(far),       // beyond 3 bits: survives
       13L -> grayPng(base),      // exact re-encounter (distance 0): DROP
       14L -> Array.fill[Byte](16)(3)) // junk: null hash, passes through
-    val out = Incremental.dropSeenImagesWithinDist(day2, "media_id",
-      Incremental.loadState(spark, path))
+    val out = Incremental.dropSeenImagesWithinDist(day2, "media_id", state)
     assert(out.select("media_id").as[Long].collect().toSet == Set(12L, 14L))
     // the EXACT-hash state would have waved the drifted re-encode through
     val exactPath = tmp("img_exact_state")
-    Incremental.saveState(Incremental.imageHashState(day1), exactPath)
     val exactOut = Incremental.dropSeenImages(day2, "media_id",
-      Incremental.loadState(spark, exactPath))
+      Zones.materialize(Incremental.imageHashState(day1), exactPath))
     assert(exactOut.select("media_id").as[Long].collect().toSet ==
       Set(11L, 12L, 14L))
     // roll-forward: a day-3 drift of the DAY-2 survivor drops too
     val path2 = tmp("imgband_state2")
-    Incremental.saveState(Incremental.updatedImageBandState(
-      Incremental.loadState(spark, path), day2), path2)
+    val state2 = Zones.materialize(
+      state.unionByName(Incremental.imageBandState(day2)).distinct(), path2)
     val farDrift = far.map(_.clone)
     farDrift(2)(6) += 60
     assert(java.lang.Long.bitCount(
       hF ^ Multimodal.dHash63(grayPng(farDrift)).get) <= 3)
     val day3 = media(21L -> grayPng(farDrift))
-    assert(Incremental.dropSeenImagesWithinDist(day3, "media_id",
-      Incremental.loadState(spark, path2)).count() == 0)
+    assert(Incremental.dropSeenImagesWithinDist(day3, "media_id", state2).count() == 0)
     // over-full state bucket fails loudly (silent dropping would lose
     // the pigeonhole recall guarantee) — the guard rides the join plan
     // (r15: raise_error filter, no eager per-call job), so it fires at
@@ -282,19 +273,17 @@ class IncrementalSpec extends AnyFunSuite {
       .withColumn("meta", lit(null).cast(Multimodal.mediaMetaSchema))
     val day2 = reenc.unionByName(fresh).unionByName(junk)
     val path = tmp("audio_state")
-    Incremental.saveState(Incremental.audioHashState(day1), path)
-    val out = Incremental.dropSeenAudio(day2, "media_id",
-      Incremental.loadState(spark, path))
+    val state = Zones.materialize(Incremental.audioHashState(day1), path)
+    val out = Incremental.dropSeenAudio(day2, "media_id", state)
     val kept = out.select("media_id").as[Long].collect().toSet
     assert(kept == (freshIds.map(_ + 1000L).toSet + 9999L), kept)
     // roll-forward: a day-3 polarity flip of a DAY-2 clip drops too
     val path2 = tmp("audio_state2")
-    Incremental.saveState(Incremental.updatedAudioHashState(
-      Incremental.loadState(spark, path), day2), path2)
+    val state2 = Zones.materialize(
+      state.unionByName(Incremental.audioHashState(day2)).distinct(), path2)
     val day3 = Multimodal.synthAudioSigned(Seq(freshIds.head).toDF("id"),
       "id", sign = -1, idOffset = 2000L)
-    assert(Incremental.dropSeenAudio(day3, "media_id",
-      Incremental.loadState(spark, path2)).count() == 0)
+    assert(Incremental.dropSeenAudio(day3, "media_id", state2).count() == 0)
     OpCaches.releaseAll()
   }
 
@@ -336,17 +325,15 @@ class IncrementalSpec extends AnyFunSuite {
       .withColumn("meta", lit(null).cast(Multimodal.mediaMetaSchema))
     val day2 = drift.unionByName(fresh).unionByName(junk)
     val path = tmp("audioband_state")
-    Incremental.saveState(Incremental.audioBandState(day1), path)
-    val out = Incremental.dropSeenAudioWithinDist(day2, "media_id",
-      Incremental.loadState(spark, path))
+    val state = Zones.materialize(Incremental.audioBandState(day1), path)
+    val out = Incremental.dropSeenAudioWithinDist(day2, "media_id", state)
     val kept = out.select("media_id").as[Long].collect().toSet
     assert(kept == (freshIds.map(_ + 1000L).toSet + 9999L), kept)
     // the EXACT-hash audio state would have waved the drifted renders
     // through (that is the recall gap this state closes)
     val exactPath = tmp("audio_exact_state2")
-    Incremental.saveState(Incremental.audioHashState(day1), exactPath)
     val exactKept = Incremental.dropSeenAudio(day2, "media_id",
-        Incremental.loadState(spark, exactPath))
+        Zones.materialize(Incremental.audioHashState(day1), exactPath))
       .select("media_id").as[Long].collect().toSet
     // drifted renders whose bumped 15-BIT hash matches NO day-1 hash
     // survive the exact path (within-day first-seen-wins applied
@@ -364,12 +351,11 @@ class IncrementalSpec extends AnyFunSuite {
     assert(surviving15.intersect(kept).isEmpty)
     // roll-forward: a day-3 drift of a DAY-2 clip drops too
     val path2 = tmp("audioband_state2")
-    Incremental.saveState(Incremental.updatedAudioBandState(
-      Incremental.loadState(spark, path), day2), path2)
+    val state2 = Zones.materialize(
+      state.unionByName(Incremental.audioBandState(day2)).distinct(), path2)
     val day3 = Multimodal.synthAudioBumped(Seq(freshIds.head).toDF("id"),
       "id", bump = 40, idOffset = 2000L)
-    assert(Incremental.dropSeenAudioWithinDist(day3, "media_id",
-      Incremental.loadState(spark, path2)).count() == 0)
+    assert(Incremental.dropSeenAudioWithinDist(day3, "media_id", state2).count() == 0)
     OpCaches.releaseAll()
   }
 
@@ -414,20 +400,18 @@ class IncrementalSpec extends AnyFunSuite {
       .withColumn("meta", lit(null).cast(Multimodal.mediaMetaSchema))
     val day2 = drift.unionByName(fresh).unionByName(junk)
     val path = tmp("vid_state")
-    Incremental.saveState(Incremental.videoSeqState(day1), path)
-    val out = Incremental.dropSeenVideoSeqs(day2, "media_id",
-      Incremental.loadState(spark, path))
+    val state = Zones.materialize(Incremental.videoSeqState(day1), path)
+    val out = Incremental.dropSeenVideoSeqs(day2, "media_id", state)
     val kept = out.select("media_id").as[Long].collect().toSet
     assert(kept == (freshIds.map(_ + 1000L).toSet + 9999L), kept)
     // roll-forward: a day-3 drift of a DAY-2 animation drops too
     val path2 = tmp("vid_state2")
-    Incremental.saveState(Incremental.updatedVideoSeqState(
-      Incremental.loadState(spark, path), day2), path2)
+    val state2 = Zones.materialize(
+      state.unionByName(Incremental.videoSeqState(day2)).distinct(), path2)
     val day3 = Multimodal.synthGifsShiftedBumped(
       Seq(freshIds.head).toDF("id"), "id", delta = 10, bump = 20,
       idOffset = 2000L)
-    assert(Incremental.dropSeenVideoSeqs(day3, "media_id",
-      Incremental.loadState(spark, path2)).count() == 0)
+    assert(Incremental.dropSeenVideoSeqs(day3, "media_id", state2).count() == 0)
     // over-full state band bucket fails loudly — at the first action,
     // via the in-plan guard (r15)
     val fatState = (0L until 20L).map(i => (3, 0L, i << 20, i << 21))
@@ -452,15 +436,52 @@ class IncrementalSpec extends AnyFunSuite {
       (12L, "https://gamma.com/c", p(T + " page gamma c"))                 // new
     ).toDF("doc_id", "url", "html")
     val path = tmp("web_url_state")
-    Incremental.saveState(Incremental.urlState(day1, "url"), path)
     val out = Curation.curateWeb(day2, "doc_id", "url", "html",
       allowedLangs = Seq("en"), minQuality = 10,
-      seenUrls = Some(Incremental.loadState(spark, path)))
+      seenUrls = Some(Zones.materialize(Incremental.urlState(day1, "url"), path)))
     assert(out.select("doc_id").as[Long].collect().toSet == Set(12L))
     // without the state the recrawl survives (content differs per page,
     // so content dedup alone cannot catch it)
     val noState = Curation.curateWeb(day2, "doc_id", "url", "html",
       allowedLangs = Seq("en"), minQuality = 10)
     assert(noState.select("doc_id").as[Long].collect().toSet == Set(11L, 12L))
+  }
+
+  test("a state hand-off into the path it reads is refused and leaves the state intact") {
+    val day1 = Seq((1L, "https://alpha.com/a"), (2L, "https://beta.com/b"))
+      .toDF("doc_id", "url")
+    val day2 = Seq((3L, "https://gamma.com/c")).toDF("doc_id", "url")
+    val path = tmp("inplace_state")
+    Zones.materialize(Incremental.urlState(day1, "url"), path)
+    def parts: Map[String, Seq[Byte]] = new java.io.File(path).listFiles()
+      .filter(_.getName.startsWith("part-"))
+      .map(f => f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
+    val before = parts
+    val state = Zones.readParquet(spark, path)
+    // Spark's overwrite deletes the path before the frame reads it: a
+    // map-only prune, and an in-place roll-forward once AQE is off, would
+    // fail on the missing files and leave the state directory empty
+    val inPlace = Seq(
+      "prune" -> state.filter(col("url_fp") =!= 0L),
+      "roll-forward" -> state.unionByName(Incremental.urlState(day2, "url")).distinct())
+    for ((name, handOff) <- inPlace) {
+      val e = intercept[IllegalArgumentException](Zones.materialize(handOff, path))
+      assert(e.getMessage.contains("the frame reads from it"), name)
+      assert(parts == before, name)
+      assert(Zones.readParquet(spark, path).count() == 2L, name)
+    }
+  }
+
+  test("state hand-off job counts: the read-back starts no job, q86's constructor starts 3") {
+    val probe = graft.tools.Probe(spark)
+    val state = Incremental.fingerprintState(
+      spark.read.parquet(s"$sf/documents.parquet"), "text")
+    val write = probe.measure(Zones.writeParquet(state, tmp("fp_write")))._2.jobs
+    val handOff = probe.measure(Zones.materialize(state, tmp("fp_handoff")))._2.jobs
+    assert(handOff == write, s"hand-off $handOff jobs vs write $write")
+    val q86 = probe.measure(
+      graft.queries.DataOpsQueries.q86IncrementalDedup(spark, sf))._2.jobs
+    assert(q86 == 3L, s"q86 constructor started $q86 jobs")
+    OpCaches.releaseAll()
   }
 }

@@ -185,7 +185,7 @@ class StreamingSpec extends AnyFunSuite {
       (2L, "https://beta.com/b")).toDF("doc_id", "url")
     val statePath = java.nio.file.Files
       .createTempDirectory("graft_url_stream").resolve("s.parquet").toString
-    Incremental.saveState(Incremental.urlState(day1, "url"), statePath)
+    val state = graft.etl.Zones.materialize(Incremental.urlState(day1, "url"), statePath)
     // day-2: one recrawl (different surface form), two new pages, then a
     // LATER within-run re-fetch of one of them with DIFFERENT dynamic
     // content (14 vs 12) — the URL-level dedup on the seenUrls seam must
@@ -201,7 +201,6 @@ class StreamingSpec extends AnyFunSuite {
       (14L, "https://GAMMA.com/c/?fbclid=z", p(T1 + " gamma but refreshed"), at(3))
     val mem = MemoryStream[(Long, String, String, java.sql.Timestamp)]
     mem.addData(rows)
-    val state = Incremental.loadState(spark, statePath)
     val stream = Streams.curateWebStream(
       mem.toDF().toDF("doc_id", "url", "html", "event_time"),
       "url", "html", allowedLangs = Seq("en"), minQuality = 40,
