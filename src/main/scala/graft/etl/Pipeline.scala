@@ -16,7 +16,9 @@ import org.apache.spark.storage.StorageLevel
   * files instead of writing: the four silver tables (bronze's columns, in
   * order) and `dim_playlists` (a passthrough of `stg_playlists`). A pass
   * thus starts 15 jobs: 11 zone writes, the 2 dims' shuffles and the
-  * fact's 2 broadcasts.
+  * fact's 2 broadcasts. Each write is sized by the bytes it scans
+  * ([[Zones]]), so at the daily volume each job is one task and each
+  * table one file.
   *
   * `compose` returns the gold frames as lazy plans over the raw input with
   * NO intermediate materialization — the whole raw→gold graph then

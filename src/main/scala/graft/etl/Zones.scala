@@ -1,19 +1,37 @@
 package graft.etl
 
+import scala.annotation.tailrec
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LocalRelation, LogicalPlan,
+  Project, RebalancePartitions, RepartitionOperation}
+import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 
 /** Storage-zone IO (reference sinks K1–K7, SURVEY.md §2.2).
   *
   * The reference fans each stage out to local disk + S3 + MotherDuck; here
   * every zone is a path prefix (s3a:// or file://) and the warehouse role
-  * is played by `saveAsTable` against the session catalog. Single-file
-  * parity (`COPY ... TO` one parquet) is opt-in via `singleFile` — never
-  * used on the hot path at scale (coalesce(1) serializes the write).
+  * is played by `saveAsTable` against the session catalog.
+  *
+  * Every writer sizes its output by the bytes the frame scans, not by the
+  * partitions it arrives in: the frame is coalesced to the partition count
+  * Spark's own file-split rule (`FilePartition.maxSplitBytes`: the same
+  * `spark.sql.files.*` confs and default parallelism) gives those bytes
+  * read as one file. The rule only lowers the count (`coalesce` never
+  * raises it). A frame keeps its partitions when any leaf of its plan is
+  * not a file scan or local rows, or when it ends (through projections
+  * and filters) in the caller's own repartition, coalesce or rebalance.
+  * A table whose scanned bytes fit one split (at most the open cost, 4 MB
+  * by default) becomes one parquet file, as the reference's `COPY ... TO`
+  * writes it, instead of one file per upstream input file. The count
+  * follows the input bytes, not the output: a write whose output is much
+  * larger than its input (a wide explode) runs in as few tasks as its
+  * input would, unless the frame is repartitioned first. `singleFile`
+  * (coalesce(1)) forces the reference's one-file layout whatever the
+  * size, and serializes the write.
   *
   * Zone hand-offs go through [[materialize]]: the next zone reads the
   * written copy with the schema the writer already had, so a hand-off
@@ -27,30 +45,66 @@ object Zones {
     * table layout for small parity outputs. */
   def writeParquet(df: DataFrame, path: String,
       partitionBy: Seq[String] = Nil, singleFile: Boolean = false): Unit = {
-    refuseOverwritingInput(df, path, df.sparkSession.sessionState.newHadoopConf())
-    overwriteParquet(df, path, partitionBy, singleFile)
+    val scanned = scannedBytes(df, path, df.sparkSession.sessionState.newHadoopConf())
+    overwrite(df, path, "parquet", partitionBy, singleFile, scanned)
   }
 
-  private def overwriteParquet(df: DataFrame, path: String,
-      partitionBy: Seq[String], singleFile: Boolean): Unit = {
-    val d = if (singleFile) df.coalesce(1) else df
-    val w = d.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
+  /** The one write path of the zone writers: `df`, coalesced to the
+    * partitions of its `scanned` bytes (one under `singleFile`), replaces
+    * `path`. */
+  private def overwrite(df: DataFrame, path: String, format: String,
+      partitionBy: Seq[String], singleFile: Boolean, scanned: Option[Long]): Unit = {
+    val partitions = if (singleFile) Some(1)
+      else if (repartitioned(df.queryExecution.analyzed)) None
+      else scanned.map(filePartitions(df.sparkSession, _))
+    val w = partitions.fold(df)(df.coalesce).write.mode(SaveMode.Overwrite)
+    val header = if (format == "csv") w.option("header", "true") else w
+    (if (partitionBy.nonEmpty) header.partitionBy(partitionBy: _*) else header)
+      .format(format).save(path)
   }
 
-  /** Every zone writer refuses, before anything is deleted, to overwrite
-    * a path that `df` reads or a directory above one: Spark's overwrite
-    * deletes the input first and then fails to read it
-    * (FAILED_READ_FILE.FILE_NOT_EXIST), and the data is lost. */
-  private def refuseOverwritingInput(df: DataFrame, path: String,
-      conf: Configuration): Unit = {
+  /** The partitions Spark's file scan splits `bytes` of one file into. */
+  private def filePartitions(spark: SparkSession, bytes: Long): Int = {
+    val split = FilePartition.maxSplitBytes(spark, bytes).max(1L)
+    ((bytes - 1) / split + 1).min(Int.MaxValue).toInt
+  }
+
+  /** Whether `plan` ends in the caller's own repartition, coalesce or
+    * rebalance. The writers' coalesce would otherwise override it: over a
+    * coalesce the optimizer keeps the outer one (CollapseRepartition), and
+    * over a shuffle the shuffle still runs and the write runs in the
+    * coalesced tasks. */
+  @tailrec private def repartitioned(plan: LogicalPlan): Boolean = plan match {
+    case _: RepartitionOperation | _: RebalancePartitions => true
+    case Project(_, child) => repartitioned(child)
+    case Filter(_, child) => repartitioned(child)
+    case _ => false
+  }
+
+  /** The bytes `df` scans: the summed size of its file relations and local
+    * rows, or None when any leaf of its plan is something else. The sum
+    * saturates at Long.MaxValue, the size a relation without statistics
+    * reports (`spark.sql.defaultSizeInBytes`), so such a frame keeps its
+    * partitions.
+    *
+    * The same walk refuses, before anything is deleted, to overwrite a path
+    * that `df` reads or a directory above one: Spark's overwrite deletes
+    * the input first and then fails to read it
+    * (FAILED_READ_FILE.FILE_NOT_EXIST), and the data is lost. Every zone
+    * writer calls it first. */
+  private def scannedBytes(df: DataFrame, path: String, conf: Configuration): Option[Long] = {
     val dst = new Path(path)
     val target = dst.getFileSystem(conf).makeQualified(dst)
     def within(p: Path): Boolean = p != null && (p == target || within(p.getParent))
-    val read = df.queryExecution.analyzed
-      .collectWithSubqueries { case l: LogicalRelation => l.relation }
-      .collect { case r: HadoopFsRelation => r.location.rootPaths }.flatten
-    require(!read.exists(within), s"cannot overwrite $path: the frame reads from it")
+    val leaves = df.queryExecution.analyzed.collectWithSubqueries { case l: LeafNode => l }
+    val files = leaves.collect { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r }
+    require(!files.flatMap(_.location.rootPaths).exists(within),
+      s"cannot overwrite $path: the frame reads from it")
+    val local = leaves.collect { case l: LocalRelation => l.computeStats().sizeInBytes.toLong }
+    if (files.size + local.size < leaves.size) None
+    else Some((files.map(_.sizeInBytes) ++ local).foldLeft(0L) { (sum, b) =>
+      if (b >= Long.MaxValue - sum) Long.MaxValue else sum + b })
   }
 
   /** K5/K7: warehouse materialization (MotherDuck CTAS equivalent).
@@ -99,7 +153,7 @@ object Zones {
   def materialize(df: DataFrame, path: String, singleFile: Boolean = false): DataFrame = {
     val spark = df.sparkSession
     val conf = spark.sessionState.newHadoopConf()
-    refuseOverwritingInput(df, path, conf)
+    val scanned = scannedBytes(df, path, conf)
     val dst = new Path(path)
     val dstFs = dst.getFileSystem(conf)
     unchangedHandOff(df.queryExecution.analyzed).map(_.inputFiles)
@@ -109,7 +163,7 @@ object Zones {
         files.map(f => new Path(new java.net.URI(f))).foreach(f =>
           FileUtil.copy(f.getFileSystem(conf), f, dstFs, new Path(dst, f.getName), false, conf))
         dstFs.create(new Path(dst, "_SUCCESS"), true).close()
-      case None => overwriteParquet(df, path, Nil, singleFile)
+      case None => overwrite(df, path, "parquet", Nil, singleFile, scanned)
     }
     spark.read.option(HandOffOption, "true").schema(df.schema).parquet(path)
   }
@@ -136,11 +190,9 @@ object Zones {
   /** Generic format surface (csv/orc/json/parquet interchange). CSV gets
     * headers; reads take an explicit schema — inference is never used on
     * production paths. */
-  def write(df: DataFrame, path: String, format: String): Unit = {
-    refuseOverwritingInput(df, path, df.sparkSession.sessionState.newHadoopConf())
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (format == "csv") w.option("header", "true") else w).format(format).save(path)
-  }
+  def write(df: DataFrame, path: String, format: String): Unit =
+    overwrite(df, path, format, Nil, singleFile = false,
+      scannedBytes(df, path, df.sparkSession.sessionState.newHadoopConf()))
 
   def read(spark: SparkSession, path: String, format: String,
       schema: org.apache.spark.sql.types.StructType): DataFrame = {

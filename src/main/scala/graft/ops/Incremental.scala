@@ -32,10 +32,10 @@ import org.apache.spark.sql.types.StructType
   * HAND-OFF: a state table is written and read back with
   * [[graft.etl.Zones.materialize]] (the read-back carries the writer's
   * schema, so it starts no job); a fresh JVM reloads it with
-  * [[graft.etl.Zones.readParquet]]. A state rolls forward as
-  * `state.unionByName(xState(batch)).distinct()`, handed off to the NEXT
-  * run's path — one path per run: a hand-off into the path its frame
-  * reads is refused before anything is deleted.
+  * [[graft.etl.Zones.read]] and the state's schema (also no job).
+  * A state rolls forward as `state.unionByName(xState(batch)).distinct()`,
+  * handed off to the NEXT run's path — one path per run: a hand-off into
+  * the path its frame reads is refused before anything is deleted.
   *
   * INVARIANT (the q86 oracle): day-2 dedup against day-1 state, unioned
   * with day-1's own survivors, equals a from-scratch first-seen-wins

@@ -105,6 +105,18 @@ class EtlSpec extends AnyFunSuite {
     f.toString
   }
 
+  /** The fixture's two playlists, one raw file each: the shape of a daily
+    * landing, one file per fetched playlist. */
+  lazy val rawSplitPath: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_raw_split")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    json.readTree(fixtureJson).elements().asScala.zipWithIndex.foreach { case (pl, i) =>
+      java.nio.file.Files.writeString(dir.resolve(s"playlist-$i.json"),
+        json.writeValueAsString(json.createArrayNode().add(pl)))
+    }
+    dir.toString
+  }
+
   lazy val raw = Bronze.readRaw(spark, rawPath)
   lazy val bronze = Bronze.shred(raw)
   lazy val gold = Gold.build(Silver.projectAll(bronze))
@@ -344,6 +356,22 @@ class EtlSpec extends AnyFunSuite {
     assert(back.count() == 10)
     val (_, copyJobs) = jobsOf(Zones.materialize(back, s"$out/c"))
     assert(copyJobs == 0, "a copied hand-off must not start a job")
+  }
+
+  test("run writes one part file per table from a multi-file raw landing, in 15 tasks") {
+    val out = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val (gold, counters) = graft.tools.Probe(spark).measure(Pipeline.run(spark, rawSplitPath, out))
+    assert(gold("fact_playlist_tracks").count() == 3)
+    // each table's bytes fit one file split, so every write is one task
+    // and one file. Writing one file per upstream partition made it 2
+    // files in 14 of the 16 tables (all but the two shuffled dims) and 26
+    // tasks, in the same 15 jobs.
+    val tables = Silver.columns.keys.toSeq.flatMap(t => Seq(s"bronze/$t", s"silver/$t")) ++
+      gold.keys.map(t => s"gold/$t")
+    assert(tables.size == 16)
+    tables.foreach(t => assert(partFiles(s"$out/$t").size == 1, t))
+    assert(counters.jobs <= 15, s"Pipeline.run started ${counters.jobs} jobs")
+    assert(counters.tasks <= 15, s"Pipeline.run ran ${counters.tasks} tasks")
   }
 
   test("run releases its raw cache and leaves a caller's cache in place") {

@@ -457,7 +457,8 @@ class IncrementalSpec extends AnyFunSuite {
       .filter(_.getName.startsWith("part-"))
       .map(f => f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
     val before = parts
-    val state = Zones.readParquet(spark, path)
+    // a fresh JVM's reload, with the state's schema
+    val state = Zones.read(spark, path, "parquet", Incremental.urlState(day1, "url").schema)
     // Spark's overwrite deletes the path before the frame reads it: a
     // map-only prune, and an in-place roll-forward once AQE is off, would
     // fail on the missing files and leave the state directory empty
@@ -477,8 +478,15 @@ class IncrementalSpec extends AnyFunSuite {
     val state = Incremental.fingerprintState(
       spark.read.parquet(s"$sf/documents.parquet"), "text")
     val write = probe.measure(Zones.writeParquet(state, tmp("fp_write")))._2.jobs
-    val handOff = probe.measure(Zones.materialize(state, tmp("fp_handoff")))._2.jobs
+    val path = tmp("fp_handoff")
+    val handOff = probe.measure(Zones.materialize(state, path))._2.jobs
     assert(handOff == write, s"hand-off $handOff jobs vs write $write")
+    // a reload infers the schema from the footers in a job, unless given it
+    val (inferred, inferJobs) = probe.measure(Zones.readParquet(spark, path))
+    assert(inferJobs.jobs == 1L, s"inferring reload started ${inferJobs.jobs} jobs")
+    val (reloaded, reloadJobs) = probe.measure(Zones.read(spark, path, "parquet", state.schema))
+    assert(reloadJobs.jobs == 0L, s"reload with the schema started ${reloadJobs.jobs} jobs")
+    assert(reloaded.schema == inferred.schema && reloaded.count() == inferred.count())
     val q86 = probe.measure(
       graft.queries.DataOpsQueries.q86IncrementalDedup(spark, sf))._2.jobs
     assert(q86 == 3L, s"q86 constructor started $q86 jobs")
