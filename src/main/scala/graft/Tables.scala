@@ -8,9 +8,10 @@ import org.apache.spark.sql.types.DecimalType
   *
   * All oracle-checked queries must produce bit-identical values on Spark and
   * DuckDB. Floating-point SUM/AVG is order-dependent, so every monetary /
-  * fractional aggregate goes through an exact DECIMAL(18,2) accumulation and
-  * is cast back to DOUBLE only at the very end (both engines do the decimal
-  * sum exactly, so the final double is deterministic).
+  * fractional aggregate quantizes each value to exact integer cents (an
+  * exact DECIMAL(18,2) cast per row), accumulates a primitive long and
+  * divides once at the very end (both engines sum the same integers, so the
+  * final double is deterministic).
   */
 object Tables {
   /** Load one of the driver-generated testdata tables from `dir`. */
@@ -21,59 +22,36 @@ object Tables {
     * so the round-trip double→decimal(18,2) is lossless in both engines. */
   def dec2(c: Column): Column = c.cast(DecimalType(18, 2))
 
-  /** Deterministic SUM over a 2-decimal double column → DOUBLE. */
-  def dsum(c: Column): Column = sum(dec2(c)).cast("double")
-
-  /** Deterministic AVG: exact decimal sum divided by count, in double.
-    * Matches `CAST(SUM(CAST(x AS DECIMAL(18,2))) AS DOUBLE) / COUNT(x)`. */
-  def davg(c: Column): Column = sum(dec2(c)).cast("double") / count(c)
-
-  /** Deterministic revenue-style SUM(price * (1 - discount)): both factors
-    * go exact-decimal before multiplying so the product (scale 4) and its
-    * sum are exact in both engines; only the final value becomes double. */
-  def dsumRevenue(price: Column, discount: Column): Column =
-    sum(dec2(price) * (lit(1) - dec2(discount))).cast("double")
-
-  /** Deterministic SUM(a * b) over two 2-decimal double columns. */
-  def dsumProd(a: Column, b: Column): Column =
-    sum(dec2(a) * dec2(b)).cast("double")
-
   /** Exact integer cents for a 2-decimal double (per-row, cheap). */
   def cents(c: Column): Column = (dec2(c) * 100).cast("long")
 
-  /** [[dsum]] at long-accumulation speed for HIGH-VOLUME sums: quantize
+  /** Deterministic SUM over a 2-decimal double column → DOUBLE: quantize
     * each value to exact integer cents (the decimal cast is per-row and
-    * cheap), accumulate as a plain long, divide once at the end. Value is
-    * bit-identical to [[dsum]] — both produce nearest-double(n/100), since
-    * IEEE division is correctly rounded — but the aggregation buffer is a
-    * primitive long instead of a Decimal object. Overflows (ANSI: throws)
-    * past ~9.2e16 cents per group; [[dsum]] remains the unbounded
-    * fallback. */
+    * cheap), accumulate as a plain long, divide once at the end. The value
+    * is nearest-double(n/100) in both engines, since IEEE division is
+    * correctly rounded, and the aggregation buffer is a primitive long
+    * instead of a Decimal object. Overflows (ANSI: throws) past ~9.2e16
+    * cents per group. */
   def lsum(c: Column): Column =
     sum(cents(c)) / lit(100.0)
 
-  /** [[davg]] at long-accumulation speed — same value by the [[lsum]]
-    * contract, then the same final division by the count. */
+  /** Deterministic AVG: the [[lsum]] value divided by the count. */
   def lavg(c: Column): Column =
     (sum(cents(c)) / lit(100.0)) / count(c)
 
-  /** [[dsumRevenue]] at long-accumulation speed: price·(1−discount) in
+  /** Deterministic revenue-style SUM(price * (1 - discount)) in
     * exact 1e-4 units — cents(price) · (100 − cents(discount)) — summed as
     * a primitive long, divided once at the end. Each engine computes
     * double(n)/10000.0 on the identical integer n, so the result is
     * bit-identical cross-engine. Per-group headroom: ~9.2e18/1e9 ≈ 1e10
-    * TPC-H-priced rows before ANSI overflow; [[dsumRevenue]] is the
-    * unbounded decimal fallback. */
+    * TPC-H-priced rows before ANSI overflow. */
   def lsumRevenue(price: Column, discount: Column): Column =
     sum(cents(price) * (lit(100L) - cents(discount))) / lit(10000.0)
 
-  /** [[dsumProd]] at long-accumulation speed (same 1e-4-unit contract as
-    * [[lsumRevenue]]). */
+  /** Deterministic SUM(a * b) over two 2-decimal double columns (same
+    * 1e-4-unit contract as [[lsumRevenue]]). */
   def lsumProd(a: Column, b: Column): Column =
     sum(cents(a) * cents(b)) / lit(10000.0)
-
-  /** DuckDB-side spelling of [[dsum]]. */
-  def sqlSum(x: String): String = s"CAST(SUM(CAST($x AS DECIMAL(18,2))) AS DOUBLE)"
 
   /** DuckDB-side spelling of [[cents]]. */
   def sqlCents(x: String): String = s"CAST(CAST($x AS DECIMAL(18,2)) * 100 AS BIGINT)"
@@ -93,15 +71,4 @@ object Tables {
   /** DuckDB-side spelling of [[lsumProd]]. */
   def sqlLsumProd(a: String, b: String): String =
     s"CAST(SUM(${sqlCents(a)} * ${sqlCents(b)}) AS DOUBLE) / 10000.0"
-
-  /** DuckDB-side spelling of [[dsumRevenue]]. */
-  def sqlSumRevenue(price: String, discount: String): String =
-    s"CAST(SUM(CAST($price AS DECIMAL(18,2)) * (1 - CAST($discount AS DECIMAL(18,2)))) AS DOUBLE)"
-
-  /** DuckDB-side spelling of [[dsumProd]]. */
-  def sqlSumProd(a: String, b: String): String =
-    s"CAST(SUM(CAST($a AS DECIMAL(18,2)) * CAST($b AS DECIMAL(18,2))) AS DOUBLE)"
-
-  /** DuckDB-side spelling of [[davg]]. */
-  def sqlAvg(x: String): String = s"CAST(SUM(CAST($x AS DECIMAL(18,2))) AS DOUBLE) / COUNT($x)"
 }

@@ -369,7 +369,8 @@ object Curation {
   /** The exact per-domain acceptance thresholds [[mixtureBalance]]
     * filters with, from observed domain counts — exposed so a daily
     * pipeline can compute them ONCE on the reference day and re-apply
-    * them statelessly (see `streaming/Streams.mixtureBalanceStream`).
+    * them statelessly through [[applyMixtureThresholds]], on a batch or a
+    * streaming frame.
     * Accept iff `h·10000·n_d < t_d·K·2^31 ⟺ h < thr_d` (exact BigInt). */
   def mixtureThresholds(counts: Map[String, Long],
       targetBp: Map[String, Int]): Map[String, Long] = {

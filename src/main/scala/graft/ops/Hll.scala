@@ -68,11 +68,6 @@ object Hll {
   def estimate(sketchCol: Column): Column =
     NativeFunctions.graft_hll_est(sketchCol)
 
-  /** Sketch a TEXT column via the engine-independent rolling-hash
-    * fingerprint (the [[Bloom.buildFromText]] twin). */
-  def sketchText(textCol: Column, p: Int = DefaultP): Column =
-    sketch(NativeFunctions.graft_fingerprint(textCol), p)
-
   /** Whole-DataFrame build returning the single register array (the
     * [[Bloom.build]] shape: runs a Spark job eagerly, collects exactly
     * one 2^p-byte row — never the keys). */

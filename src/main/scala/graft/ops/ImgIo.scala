@@ -94,11 +94,6 @@ object ImgIo {
   private val PNG = 0x89504e47  // \x89PNG
   private val GIF = 0x47494638  // GIF8
 
-  /** Whether [[readImage]] takes a per-thread fast path for these bytes
-    * (exposed so multi-frame readers can share the dispatch). */
-  def isPng(bytes: Array[Byte]): Boolean = magic(bytes) == PNG
-  def isGif(bytes: Array[Byte]): Boolean = magic(bytes) == GIF
-
   /** Frame 0 of the payload — `ImageIO.read` semantics (null when
     * nothing decodes) with the registry walk skipped for the two magics
     * the fixtures produce; every other byte pattern takes the unchanged

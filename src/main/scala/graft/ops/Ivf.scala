@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** IVF (inverted-file) approximate nearest-neighbor index: vectors are
   * assigned to their nearest centroid; a query probes only the `nProbe`
@@ -73,9 +74,6 @@ object Ivf {
     modelCache.computeIfAbsent(s"$key|$vecCol|$k|$seed",
       _ => train(vectors, vecCol, k, seed, maxSample))
 
-  /** Test/profiling hook: drop memoized models so a re-train is measurable. */
-  def clearModelCacheForTest(): Unit = modelCache.clear()
-
   /** Persist a model (trained and optionally [[refine]]d) as a warehouse
     * table — (cell, centroid) rows via [[graft.etl.Zones.saveTable]], so
     * train-once survives across sessions: tomorrow's run [[load]]s the
@@ -128,7 +126,7 @@ object Ivf {
     val dists = model.centroids.zipWithIndex.map { case (c, i) =>
       struct(l2sq(vec, c).as("d"), lit(i).as("i"))
     }
-    array_min(array(dists: _*)).getField("i")
+    array_min(array(ArraySeq.unsafeWrapArray(dists): _*)).getField("i")
   }
 
   /** Native codegen'd squared-L2 to a literal centroid — bit-identical to
@@ -140,7 +138,7 @@ object Ivf {
   /** The HOF reference formulation (oracle-replayable; spec pin only). */
   private[graft] def l2sqHof(vec: Column, centroid: Array[Double]): Column =
     aggregate(
-      zip_with(vec, array(centroid.map(lit(_)): _*),
+      zip_with(vec, array(ArraySeq.unsafeWrapArray(centroid.map(lit(_))): _*),
         (x, c) => (x.cast("double") - c) * (x.cast("double") - c)),
       lit(0.0), (acc, v) => acc + v)
 

@@ -66,9 +66,4 @@ object Kmv {
   /** |A ∩ B| estimate from two sketch columns (codegen'd). */
   def interEst(a: Column, b: Column): Column =
     NativeFunctions.graft_kmv_inter(a, b)
-
-  /** Sketch a TEXT column via the engine-independent rolling-hash
-    * fingerprint (the [[Hll.sketchText]] twin). */
-  def sketchText(textCol: Column, k: Int = DefaultK): Column =
-    sketch(NativeFunctions.graft_fingerprint(textCol), k)
 }

@@ -73,10 +73,6 @@ object Pii {
     when(regexp_count(t, lit(c.pattern)) > 0,
       regexp_replace(t, c.pattern, c.replacement)).otherwise(t)
 
-  /** Fully scrubbed text (all classes, chain order). */
-  def scrubText(text: Column, classes: Seq[PiiClass] = Classes): Column =
-    classes.foldLeft(text)(guardedReplace)
-
   /** Per-row scrub: adds `n_<class>` count columns (counted on the text
     * each class actually sees in the chain) and `<textCol>_scrubbed`.
     * The original text column is kept — dropping it is the caller's call

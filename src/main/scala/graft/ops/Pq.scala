@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** Product quantization (PQ) for embedding compression and fast
   * approximate distance — the missing piece between [[Similarity]]'s
@@ -88,9 +89,10 @@ object Pq {
     * (the 64 KB-overflow shape; see [[best]]). */
   private[graft] def bestComposed(model: PqModel, vec: Column, j: Int): Column = {
     val sub = slice(vec, j * model.subDim + 1, model.subDim)
-    array_min(array(model.codebooks(j).zipWithIndex.map { case (c, i) =>
+    val cands = model.codebooks(j).zipWithIndex.map { case (c, i) =>
       struct(l2sqLit(sub, c).as("d"), lit(i).as("i"))
-    }: _*))
+    }
+    array_min(array(ArraySeq.unsafeWrapArray(cands): _*))
   }
 
   /** PQ code array (m ints in [0, codes)) for a vector column. */
@@ -110,7 +112,7 @@ object Pq {
       val qSub = query.slice(j * model.subDim, (j + 1) * model.subDim)
       val lut = model.codebooks(j).map(c =>
         c.zip(qSub).map { case (a, b) => (a - b) * (a - b) }.sum)
-      try_element_at(array(lut.map(lit(_)): _*),
+      try_element_at(array(ArraySeq.unsafeWrapArray(lut.map(lit(_))): _*),
         try_element_at(codesCol, lit(j + 1)) + 1)
     }.reduce(_ + _)
 

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** Dataset-composition operators for training pipelines: stratified
   * sampling (rebalance sources/languages to a target mix) and
@@ -128,8 +129,8 @@ object Sampling {
   }
 
   /** The map-only half of [[timeDecaySample]] with the reference day
-    * supplied by the caller — the continuous-ingest entry point
-    * ([[graft.streaming.Streams.timeDecaySampleStream]]): yesterday's
+    * supplied by the caller — the continuous-ingest entry point, which
+    * runs on a streaming frame unchanged: yesterday's
     * batch computes `refDay` once, today's stream applies it statelessly
     * (the mixture-threshold daily-cadence pattern). */
   def applyTimeDecay(events: DataFrame, idCol: String, tsNsCol: String,
@@ -204,6 +205,7 @@ object Sampling {
         col("__e._1").as("sample_key"), col("__e._2").as("__id"))
     df.join(winners,
         col(idCol).cast("long") === col("__id") && col(groupCol) === col("__g"))
-      .select(df.columns.map(col) ++ Seq(col("sample_key"), col("rk")): _*)
+      .select(ArraySeq.unsafeWrapArray(
+        df.columns.map(col) ++ Seq(col("sample_key"), col("rk"))): _*)
   }
 }

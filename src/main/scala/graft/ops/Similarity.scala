@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** Similarity search over embedding columns (`array<float>`).
   *
@@ -351,7 +352,7 @@ object Similarity {
       struct(graft.functions.NativeFunctions.graft_l2sq(vec, c).as("d"),
         lit(i).as("i"))
     }
-    slice(array_sort(array(qdists: _*)), 1, nProbe).getField("i")
+    slice(array_sort(array(ArraySeq.unsafeWrapArray(qdists): _*)), 1, nProbe).getField("i")
   }
 
   /** L2 normalization: adds `norm` (the vector's L2 length, double) and

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** Skew-handling join utilities for the 100 TB path.
   *
@@ -35,17 +36,12 @@ object Skew {
       s"saltedJoin: joinType '$joinType' would duplicate unmatched small-side " +
         "rows (one per salt); use inner/left/left_semi/left_anti")
     val saltedBig = big.withColumn("__salt",
-      pmod(xxhash64(struct(big.columns.map(col): _*)), lit(buckets)).cast("int"))
+      pmod(xxhash64(struct(ArraySeq.unsafeWrapArray(big.columns.map(col)): _*)),
+        lit(buckets)).cast("int"))
     val saltedSmall = small.withColumn("__salt",
       explode(sequence(lit(0), lit(buckets - 1))))
     saltedBig.join(saltedSmall, Seq(key, "__salt"), joinType).drop("__salt")
   }
-
-  /** Repartition by key with an explicit partition count — the manual
-    * alternative to AQE coalescing when a downstream stage needs a known
-    * co-partitioning (e.g. to line up with bucketed storage). */
-  def coPartition(df: DataFrame, key: String, partitions: Int): DataFrame =
-    df.repartition(partitions, col(key))
 
   /** Key-frequency profile: the first thing to look at when a join is
     * slow — returns the heaviest keys and their share of rows.

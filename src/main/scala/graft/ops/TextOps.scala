@@ -29,13 +29,6 @@ object TextOps {
       .otherwise(length(t) - length(replace(t, lit(" "), lit(""))) + 1)
   }
 
-  /** BPE-ish subword count estimate: word-boundary pieces plus an extra
-    * piece per 6 chars of long words (a common rule-of-thumb proxy). */
-  def subwordCountEstimate(text: Column): Column =
-    tokenCount(text) + coalesce(
-      aggregate(tokens(text), lit(0),
-        (acc, w) => acc + (length(w) / lit(6)).cast("int")), lit(0))
-
   /** Default English-ish stopword list used by [[stopwordCount]]. */
   val Stopwords: Seq[String] =
     Seq("the", "a", "an", "and", "of", "to", "in", "is", "it", "for")
@@ -298,14 +291,5 @@ object TextOps {
     val p = 2147483647L // 2^31 - 1
     aggregate(split(text, ""), lit(0L),
       (h, c) => pmod(h * 31 + coalesce(ascii(c).cast("long"), lit(0L)), lit(p)))
-  }
-
-  /** MinHash-style stable 31-bit hash of a string with a seed: mixes
-    * xxhash64 output into [0, 2^31-1). ANSI-overflow-safe. */
-  def stableHash31(c: Column, seed: Int): Column = {
-    val p = 2147483647L
-    // xxhash64 % p ∈ (-p, p); pmod → [0, p); affine mix per seed stays < 2^62
-    pmod(pmod(xxhash64(c), lit(p)) * lit((1103515245L + 2 * seed) % p) + lit(12345L + seed),
-      lit(p))
   }
 }

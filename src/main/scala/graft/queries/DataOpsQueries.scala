@@ -4,6 +4,7 @@ import graft.Tables._
 import graft.ops.{Bloom, Curation, Dedup, Hll, Html, Kmv, Multimodal, Sampling, Similarity, TextOps, Url}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** LLM-training-data pipeline operators (dedup, similarity search, text
   * analysis, multimodal plumbing) exercised on the driver's `documents` /
@@ -4001,7 +4002,7 @@ object DataOpsQueries {
     val qv = emb.filter(col("vec_id") === 0)
       .select("embedding").head().getSeq[Float](0).map(_.toDouble).toArray
     def trueSe(vec: org.apache.spark.sql.Column) =
-      aggregate(zip_with(vec, array(qv.map(lit(_)): _*),
+      aggregate(zip_with(vec, array(ArraySeq.unsafeWrapArray(qv.map(lit(_))): _*),
         (x, c) => (x.cast("double") - c) * (x.cast("double") - c)),
         lit(0.0), (acc, v) => acc + v)
     val others = emb.filter(col("vec_id") =!= 0)

@@ -270,9 +270,6 @@ object ExtendedQueries {
     // sf0.1 (candidates ∝ span+binWidth; sweep in BENCH_NOTES.md Round 3)
     graft.ops.RangeJoin.pointInInterval(points, "value", bands, "lo", "hi", binWidth = 0.5)
       .groupBy("p_partkey")
-      // lsum, not dsum: this aggregation runs over the full ~matches
-      // volume (events × overlapping bands) — the long accumulator is the
-      // hot-path variant, bit-identical by the lsum contract
       .agg(count(lit(1)).as("n_events"), lsum(col("value")).as("sum_value"))
       .orderBy("p_partkey")
   }

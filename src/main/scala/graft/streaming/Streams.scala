@@ -25,12 +25,21 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * `Splits.curriculumShards`/`balancedShards` (global rank) all reassign
   * EXISTING rows when a new row lands mid-stratum, which violates the
   * append-only contract (a row already emitted to `train` cannot retract
-  * into `val`). The streaming split is [[hashSplitStream]]'s map-only
-  * `Splits.hashSplit`, whose membership is a pure function of (id, seed)
+  * into `val`). The streaming split is the map-only `Splits.hashSplit`
+  * itself, whose membership is a pure function of (id, seed)
   * and therefore stable under any arrival order — the same
   * membership-stability property that makes it the batch production
   * default. Exactness (floor counts per stratum) is inherently a bounded
   * batch job; run it on a completed snapshot.
+  *
+  * A stateless per-row operator needs no twin either: it runs on a
+  * streaming frame unchanged, with no state store and no watermark, and a
+  * replayed micro-batch keeps and rewrites exactly the same rows.
+  * StreamingSpec pins stream == batch for `Pii.scrub`, the
+  * `!Bloom.mightContainText` decontamination filter,
+  * `Sampling.weightedSample`, `Dsir.score`,
+  * `Curation.applyMixtureThresholds`, `Splits.hashSplit`,
+  * `Sampling.applyTimeDecay` and `graft_despan`.
   */
 object Streams {
 
@@ -145,7 +154,7 @@ object Streams {
     * (URL mark/blocklist → HTML extraction → lang/quality gates → PII
     * scrub) are PURE PER-ROW expression chains, so the stream runs the
     * IDENTICAL `Column` expressions as batch (byte-identical outputs
-    * for the same rows — the [[piiScrubStream]] parity contract,
+    * for the same rows — the stateless-operator parity contract above,
     * recipe-wide) with no state store and no watermark; the dedup
     * stage becomes event-time state (`dropDuplicatesWithinWatermark`
     * on the same production key the batch window uses — the 8-byte
@@ -280,31 +289,6 @@ object Streams {
     mediaDedupStream(graft.ops.Multimodal.withVideoSeqHash(media),
       Seq("n_frames", "h_first", "h_mid", "h_last"), eventTimeCol, watermark)
 
-  /** Stateless streaming multi-class PII scrub — the continuous-ingest
-    * twin of [[graft.ops.Pii.scrub]]: the identical per-row
-    * count-and-redact chain (same `Column` expressions, same class order),
-    * so batch and stream produce byte-identical scrubbed text and counts
-    * for the same rows. Pure map pass: no state store, no watermark, any
-    * output mode — the scrub composes with every other stream stage.
-    * [[curateStream]] keeps its narrower email-only redact (spec-pinned
-    * batch parity); this is the full-taxonomy release scrub. */
-  def piiScrubStream(docs: DataFrame, textCol: String): DataFrame =
-    graft.ops.Pii.scrub(docs, textCol)
-
-  /** Stateless streaming decontamination: drop stream rows whose text
-    * might be in the eval bloom filter ([[graft.ops.Bloom]] — bits built
-    * ONCE in batch from the eval suite, baked into the plan as a codegen
-    * constant). Being a pure per-row filter it needs no state store, no
-    * watermark and no output-mode constraints — exactly why the bloom
-    * probe (and not the exact join) is the decontamination shape that
-    * composes with continuous ingest. False positives (rate ≈ 10^-6 at
-    * design sizing) drop a clean row; false negatives cannot happen, so
-    * nothing contaminated ever passes. */
-  def decontaminateStream(docs: DataFrame, textCol: String,
-      bloomBits: Array[Long],
-      k: Int = graft.ops.Bloom.DefaultK): DataFrame =
-    docs.filter(!graft.ops.Bloom.mightContainText(col(textCol), bloomBits, k))
-
   /** Cross-RUN incremental dedup as a stream — the continuous-ingest twin
     * of [[graft.ops.Incremental.dedupAgainstState]]: rows whose text the
     * PERSISTED bloom state ([[graft.ops.Incremental.saveBloom]]) already
@@ -395,83 +379,6 @@ object Streams {
         explode(graft.ops.TextOps.tokens(col(textCol))).as("tok"))
       .groupBy(window(col(eventTimeCol), window_))
       .agg(graft.ops.CorpusStats.heavyHittersAgg(col("tok"), k).as("summary"))
-
-  /** Stateless streaming weighted sampling — the continuous-ingest twin
-    * of [[graft.ops.Sampling.weightedSample]] (q68): keep a stream row
-    * iff its id's Knuth hash lands below the per-row weight percentage
-    * (e.g. a quality score). The keep decision is pure per-row
-    * arithmetic — no RNG state, no state store, no watermark — so a
-    * replayed micro-batch keeps EXACTLY the same rows (retries stay
-    * deterministic, unlike `rand() < w` sampling which resamples on every
-    * replay) and the stream output equals the batch operator on the same
-    * data (StreamingSpec pins the replay-twice == 2× batch law). */
-  def weightedSampleStream(docs: DataFrame, idCol: String,
-      weightPct: org.apache.spark.sql.Column): DataFrame =
-    docs.filter(graft.ops.Sampling.keepByWeight(col(idCol), weightPct))
-
-  /** Stateless streaming DSIR scoring — the continuous-ingest twin of
-    * [[graft.ops.Dsir.score]] (q93): score each arriving document
-    * against a PRE-TRAINED importance model (built batch-side over the
-    * reference corpora, embedded as a literal — models are corpus-level
-    * artifacts, not per-batch state). Pure per-row expression: no state
-    * store, no watermark, replayed micro-batches score identically, and
-    * the weights equal the batch operator's on the same rows
-    * (StreamingSpec pins the law). Thresholding the weight composes as
-    * a plain filter for continuous-ingest data selection. */
-  def dsirScoreStream(docs: DataFrame, idCol: String, textCol: String,
-      model: Array[Long]): DataFrame =
-    docs.select(col(idCol),
-      graft.ops.Dsir.score(model, col(textCol)).as("weight_x1e8"))
-
-  /** Stateless streaming mixture rebalancing — the continuous-ingest
-    * twin of [[graft.ops.Curation.mixtureBalance]] (q98): apply the
-    * REFERENCE day's per-domain acceptance thresholds
-    * ([[graft.ops.Curation.mixtureThresholds]], computed batch-side) to
-    * arriving rows. The daily-cadence pattern: yesterday's observed mix
-    * fixes today's thinning rates; one map-only filter, no state store,
-    * replayed micro-batches keep exactly the same rows. Rows from
-    * domains absent from the threshold map are dropped (rate 0). */
-  def mixtureBalanceStream(docs: DataFrame, idCol: String,
-      domainCol: String, thresholds: Map[String, Long],
-      seed: Int = 0): DataFrame =
-    graft.ops.Curation.applyMixtureThresholds(
-      docs, idCol, domainCol, thresholds, seed)
-
-  /** Stateless streaming train/test split — the continuous-ingest twin
-    * of [[graft.ops.Splits.hashSplit]]: the split column is pure per-row
-    * integer arithmetic on the id hash, so arriving rows are labeled
-    * with no state store, replayed micro-batches label identically, and
-    * (the property that matters for eval hygiene) the stream's
-    * assignment for any id equals the batch operator's — growing the
-    * corpus never moves an existing row across the split boundary. */
-  def hashSplitStream(docs: DataFrame, idCol: String,
-      splitsBp: Seq[(String, Int)], seed: Int = 0): DataFrame =
-    graft.ops.Splits.hashSplit(docs, idCol, splitsBp, seed)
-
-  /** Stateless streaming recency sampling — the continuous-ingest twin
-    * of [[graft.ops.Sampling.timeDecaySample]]: the batch side computes
-    * the reference day ONCE per cadence (yesterday's corpus max), the
-    * stream applies the same linear-to-floor schedule as a map-only
-    * filter ([[graft.ops.Sampling.applyTimeDecay]]) — no state store,
-    * replay-deterministic, and rows newer than the reference day are
-    * always kept (bp ≥ 10000 for negative age). */
-  def timeDecaySampleStream(events: DataFrame, idCol: String,
-      tsNsCol: String, refDay: Long, decayBpPerDay: Int = 500,
-      floorBp: Int = 500, seed: Int = 0): DataFrame =
-    graft.ops.Sampling.applyTimeDecay(events, idCol, tsNsCol, refDay,
-      decayBpPerDay, floorBp, seed)
-
-  /** Stateless streaming intra-document span dedup — the continuous-
-    * ingest twin of the `graft_despan` rewrite (q111): a pure per-row
-    * codegen pass, so it composes with any stream stage, needs no state
-    * store, and replayed micro-batches rewrite identically. Cleaning
-    * WITHIN a document belongs in the ingest pass (the one stage that
-    * sees every raw row once); cross-document dedup stays with the
-    * keyed/bloom stages above. */
-  def despanStream(docs: DataFrame, textCol: String,
-      span: Int = 16): DataFrame =
-    docs.withColumn(textCol,
-      graft.functions.NativeFunctions.graft_despan(col(textCol), span))
 
   // ---- stateful sessionization (flatMapGroupsWithState) ----
 

@@ -1,7 +1,6 @@
 package graft.etl
 
 import graft.GraftSession
-import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite

@@ -326,12 +326,11 @@ class EtlSpec extends AnyFunSuite {
     // output paths, and noop writes (measurement) write nothing
     val allowed = Set("src/main/scala/graft/etl/Zones.scala", "src/main/scala/graft/Verify.scala")
     val write = """\.write(\.|\s*$)|\.mode\(""".r
-    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
-      .iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-    assert(sources.exists(_.toString == "src/main/scala/graft/etl/Zones.scala"))
+    val sources = graft.SourceFiles.scala("src/main/scala")
+    assert(sources.exists(_._1 == "src/main/scala/graft/etl/Zones.scala"))
     val offenders = for {
-      p <- sources if !allowed(p.toString)
-      (line, i) <- java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
+      (p, text) <- sources if !allowed(p)
+      (line, i) <- text.split("\n", -1).toSeq.zipWithIndex
       if write.findFirstIn(line).isDefined && !line.contains("\"noop\"")
     } yield s"$p:${i + 1}: ${line.trim}"
     assert(offenders.isEmpty, offenders.mkString("\n"))

@@ -1,7 +1,6 @@
 package graft.etl
 
 import graft.GraftSession
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** A non-`file` Hadoop scheme backed by the local filesystem. Registered

@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.GraftSession
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** BM25 ranking laws — tf monotonicity, idf (rare terms dominate),

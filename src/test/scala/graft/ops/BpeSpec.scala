@@ -78,7 +78,7 @@ class BpeSpec extends AnyFunSuite {
     rows.foreach { r =>
       val drop = prev - r.getLong(3)
       val Array(a, b) = { // pair is space-joined; round-1 parts are atomic
-        val p = r.getString(1); val cnt = r.getLong(2)
+        val p = r.getString(1)
         // reported cnt counts OVERLAPPING occurrences; greedy executes
         // every one when left != right, and between half and all of them
         // in runs of identical tokens.

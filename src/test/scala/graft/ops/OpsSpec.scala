@@ -920,7 +920,6 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("winnow contamination: every planted mid-doc passage hits its source") {
-    import spark.implicits._
     graft.functions.NativeFunctions.register(spark)
     val train = docs.select(col("doc_id"), col("text"))
       .filter(size(TextOps.tokens(col("text"))) >= 24)

@@ -3,6 +3,7 @@ package graft.ops
 import graft.GraftSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.collection.immutable.ArraySeq
 
 /** Product-quantization contract: shape and range of codes, determinism
   * of training+encoding, reconstruction-error ordering vs the null
@@ -73,7 +74,7 @@ class PqSpec extends AnyFunSuite {
     val qv = emb.filter(col("vec_id") === 0)
       .select("embedding").head().getSeq[Float](0).map(_.toDouble).toArray
     def trueSe(vec: org.apache.spark.sql.Column) =
-      aggregate(zip_with(vec, array(qv.map(lit(_)): _*),
+      aggregate(zip_with(vec, array(ArraySeq.unsafeWrapArray(qv.map(lit(_))): _*),
         (x, c) => (x.cast("double") - c) * (x.cast("double") - c)),
         lit(0.0), (acc, v) => acc + v)
     val others = emb.filter(col("vec_id") =!= 0)

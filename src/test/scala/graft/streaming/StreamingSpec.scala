@@ -3,7 +3,7 @@ package graft.streaming
 import graft.GraftSession
 import graft.queries.EventQueries
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 class StreamingSpec extends AnyFunSuite {
@@ -333,8 +333,8 @@ class StreamingSpec extends AnyFunSuite {
       .as[(Long, String)].collect().toSeq
     val mem = MemoryStream[(Long, String)]
     mem.addData(rows)
-    val clean = Streams.decontaminateStream(
-      mem.toDF().toDF("doc_id", "text"), "text", bits)
+    val clean = mem.toDF().toDF("doc_id", "text")
+      .filter(!graft.ops.Bloom.mightContainText(col("text"), bits))
     val q = clean.writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("decontam_stream").start()
     q.processAllAvailable(); q.stop()
@@ -368,7 +368,7 @@ class StreamingSpec extends AnyFunSuite {
     // invisible in the result
     val (b1, b2) = rows.splitAt(rows.size / 2)
     mem.addData(b1); mem.addData(b2)
-    val scrubbed = Streams.piiScrubStream(
+    val scrubbed = graft.ops.Pii.scrub(
       mem.toDF().toDF("doc_id", "text"), "text")
     val q = scrubbed.writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("pii_stream").start()
@@ -547,7 +547,7 @@ class StreamingSpec extends AnyFunSuite {
     val mem = MemoryStream[(Long, String)]
     mem.addData(rows ++ rows) // the retry/replay duplicate shape
     val weight = TextOps.qualityScore(col("text")) // the q68 weighting
-    val kept = Streams.weightedSampleStream(
+    val kept = Sampling.weightedSample(
       mem.toDF().toDF("doc_id", "text"), "doc_id", weight)
     val q = kept.writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("wsample_stream").start()
@@ -573,8 +573,8 @@ class StreamingSpec extends AnyFunSuite {
       .as[(Long, String)].collect().toSeq
     val mem = MemoryStream[(Long, String)]
     mem.addData(rows ++ rows) // the retry/replay duplicate shape
-    val scored = Streams.dsirScoreStream(
-      mem.toDF().toDF("doc_id", "text"), "doc_id", "text", model)
+    val scored = mem.toDF().toDF("doc_id", "text").select(col("doc_id"),
+      Dsir.score(model, col("text")).as("weight_x1e8"))
     val q = scored.writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("dsir_stream").start()
     q.processAllAvailable(); q.stop()
@@ -602,7 +602,7 @@ class StreamingSpec extends AnyFunSuite {
       .as[(Long, String)].collect().toSeq
     val mem = MemoryStream[(Long, String)]
     mem.addData(rows ++ rows) // the retry/replay duplicate shape
-    val kept = Streams.mixtureBalanceStream(
+    val kept = Curation.applyMixtureThresholds(
       mem.toDF().toDF("doc_id", "lang"), "doc_id", "lang", thr)
     val q = kept.writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("mix_stream").start()
@@ -625,7 +625,7 @@ class StreamingSpec extends AnyFunSuite {
     val rows = docs.select(col("doc_id")).as[Long].collect().toSeq
     val mem = MemoryStream[Long]
     mem.addData(rows ++ rows) // the retry/replay duplicate shape
-    val labeled = Streams.hashSplitStream(
+    val labeled = Splits.hashSplit(
       mem.toDF().toDF("doc_id"), "doc_id", splits, seed = 3)
     val q = labeled.writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("split_stream").start()
@@ -652,7 +652,7 @@ class StreamingSpec extends AnyFunSuite {
     // plus a strictly-newer row than the reference day: must always pass
     val newerId = rows.map(_._1).max + 1
     mem.addData(Seq((newerId, (refDay + 3) * dayNs)))
-    val kept = Streams.timeDecaySampleStream(
+    val kept = Sampling.applyTimeDecay(
       mem.toDF().toDF("event_id", "ts_ns"), "event_id", "ts_ns", refDay,
       decayBpPerDay = 3000, floorBp = 1000)
     val q = kept.writeStream.outputMode(OutputMode.Append)
@@ -678,8 +678,8 @@ class StreamingSpec extends AnyFunSuite {
     val rows = docs.as[(Long, String)].collect().toSeq
     val mem = MemoryStream[(Long, String)]
     mem.addData(rows ++ rows) // the retry/replay duplicate shape
-    val cleaned = Streams.despanStream(
-      mem.toDF().toDF("doc_id", "text"), "text", span = 8)
+    val cleaned = mem.toDF().toDF("doc_id", "text").withColumn("text",
+      graft.functions.NativeFunctions.graft_despan(col("text"), 8))
     val q = cleaned.writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("despan_stream").start()
     q.processAllAvailable(); q.stop()
